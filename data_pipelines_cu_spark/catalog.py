@@ -268,11 +268,3 @@ def events_between(
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
     """Load every fixture table as a DataFrame keyed by name."""
     return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    """Load tables and register each as a temp view for ``spark.sql`` use."""
-    dfs = load_tables(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs

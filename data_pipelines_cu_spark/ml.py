@@ -9,7 +9,7 @@ scoring is an ordinary DataFrame transformation — so at scale the scoring
 pass is embarrassingly parallel over executors while the (small, per-series)
 fit happens once.
 
-``logistic_score`` is the oracle-expressible scoring stage: applying a FIXED
+``linear_margin`` is the oracle-expressible scoring stage: applying a FIXED
 weight vector is pure column algebra (JVM-side, codegen), which is what batch
 inference of an already-trained linear model looks like at 100 TB — and what
 the driver's DuckDB gate can verify bit-for-bit.
@@ -107,16 +107,6 @@ def linear_margin_sql(
     for feat, w in zip(features, weights):
         z += f" + CAST({feat} AS DOUBLE) * {float(w)!r}"
     return f"({z})"
-
-
-def logistic_score(
-    features: Sequence[Column | str], weights: Sequence[float], bias: float = 0.0
-) -> Column:
-    """sigmoid(linear_margin) — batch inference of a trained linear model as
-    pure column algebra. Not used in hash-gated queries (exp is not
-    cross-engine bit-stable); classify via the margin's sign instead."""
-    z = linear_margin(features, weights, bias)
-    return F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
 
 
 def stump_train_score(

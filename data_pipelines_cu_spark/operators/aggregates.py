@@ -129,22 +129,6 @@ def zero_fill_counts(
     )
 
 
-def distinct_count(df: DataFrame, value_col: str, *group_keys: str) -> DataFrame:
-    """Exact distinct count per group (Spark expand + two-phase agg)."""
-    return df.groupBy(*group_keys).agg(
-        F.countDistinct(value_col).alias(f"distinct_{value_col}")
-    )
-
-
-def approx_distinct_count(
-    df: DataFrame, value_col: str, *group_keys: str, rsd: float = 0.05
-) -> DataFrame:
-    """HyperLogLog++ distinct count — the 100 TB path (no expand, one pass)."""
-    return df.groupBy(*group_keys).agg(
-        F.approx_count_distinct(value_col, rsd).alias(f"approx_distinct_{value_col}")
-    )
-
-
 def groupwise_linreg(
     df,
     group_cols: list[str],

@@ -60,10 +60,3 @@ def truncate_strings(df: DataFrame, limits: Mapping[str, int]) -> DataFrame:
     for col, n in limits.items():
         out = out.withColumn(col, F.substring(F.col(col), 1, n))
     return out
-
-
-def add_processing_metadata(df: DataFrame, run_ts: str | None = None) -> DataFrame:
-    """Stamp processed_at (reference tutorial1:163-171 adds processed_at +
-    record_count). ``run_ts`` injectable for deterministic tests."""
-    ts = F.lit(run_ts).cast("timestamp") if run_ts else F.current_timestamp()
-    return df.withColumn("processed_at", ts)

@@ -156,6 +156,13 @@ def _base_hash32(gram_col: str = "gram") -> Column:
     return F.conv(F.substring(F.md5(F.col(gram_col)), 1, 8), 16, 10).cast("long")
 
 
+def _ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier: a column name with a
+    space, a dot or a backtick interpolates into SQL text as that one
+    column, never as a parse error or a struct-field path."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def _minhash_cols(x_col: str = "gx") -> list[Column]:
     """The 16 affine-min aggregate columns, parsed from SQL strings (r14,
     the r13 simhash technique): the Column-by-Column form cost ~100 py4j
@@ -165,8 +172,9 @@ def _minhash_cols(x_col: str = "gx") -> list[Column]:
     Catalyst tree (int literals < 2^31 parse as INT exactly like F.lit;
     the prime > 2^31 parses as BIGINT; promotions match — pinned by
     tests/test_round14_opt.py::test_minhash_sql_exprs_match_column_form)."""
+    x = _ident(x_col)
     return [
-        F.expr(f"min(({a} * {x_col} + {b}) % {MINHASH_PRIME}) AS h{i}")
+        F.expr(f"min(({a} * {x} + {b}) % {MINHASH_PRIME}) AS h{i}")
         for i, (a, b) in enumerate(MINHASH_COEFFS)
     ]
 
@@ -184,17 +192,18 @@ def gram_rows(
     on the construction path of every shingle-based operator including
     the per-micro-batch streaming bodies. Trees are identical to the old
     Column form (pinned by test_round14_opt)."""
-    norm = f"regexp_replace(lower(trim({text_col})), '\\\\s+', ' ')"
+    ident = _ident(id_col)
+    norm = f"regexp_replace(lower(trim({_ident(text_col)})), '\\\\s+', ' ')"
     words = df.selectExpr(
-        id_col, f"posexplode(split({norm}, ' ')) AS (pos, w)"
+        ident, f"posexplode(split({norm}, ' ')) AS (pos, w)"
     )
     parts = ["w AS _p0"] + [
-        f"lead(w, {j}) OVER (PARTITION BY {id_col} ORDER BY pos) AS _p{j}"
+        f"lead(w, {j}) OVER (PARTITION BY {ident} ORDER BY pos) AS _p{j}"
         for j in range(1, n)
     ]
-    grams = words.selectExpr(id_col, *parts).filter(f"_p{n - 1} IS NOT NULL")
+    grams = words.selectExpr(ident, *parts).filter(f"_p{n - 1} IS NOT NULL")
     gram = "concat_ws(' ', " + ", ".join(f"_p{j}" for j in range(n)) + ")"
-    return grams.selectExpr(id_col, f"{gram} AS gram")
+    return grams.selectExpr(ident, f"{gram} AS gram")
 
 
 def minhash_signatures(
@@ -531,11 +540,6 @@ def winnowed_oracle_sql(
 # engines. We use 16 hex digits (64 bits) of md5.
 
 SIMHASH_BITS = 64
-
-
-def _hex_digit_val(c: Column) -> Column:
-    """hex char → 0..15 via position in the hex alphabet (portable)."""
-    return F.instr(F.lit("0123456789abcdef"), c) - 1
 
 
 def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:

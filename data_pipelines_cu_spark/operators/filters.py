@@ -9,19 +9,8 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def date_range_half_open(
-    df: DataFrame, date_col: str, start: str, end: str
-) -> DataFrame:
-    """``start <= date < end`` — half-open, matching Airflow interval
-    semantics (reference lecture3/06_templated_query.py:23-24; events server
-    filter app.py:61-65). Pushed down to the scan; prunes date partitions.
-    """
-    c = F.col(date_col)
-    return df.filter((c >= F.lit(start)) & (c < F.lit(end)))
 
 
 def keyword_any(
@@ -35,21 +24,6 @@ def keyword_any(
     pattern = "|".join(keywords)
     text = F.lower(F.concat_ws(" ", *[F.col(c) for c in text_cols]))
     return df.filter(text.rlike(pattern))
-
-
-def membership(df: DataFrame, col: str, values: Sequence[str]) -> DataFrame:
-    """``col IN (values)`` (reference lecture4/06:45 page_title in PAGENAMES).
-    Compiles to an In predicate — pushed to parquet scan."""
-    return df.filter(F.col(col).isin(list(values)))
-
-
-def threshold_all(df: DataFrame, predicates: Sequence[Column]) -> DataFrame:
-    """Conjunctive multi-column threshold gate (reference
-    tutorial4_rocket_launcher.py:158-176 weather/fuel go-no-go checks)."""
-    cond = F.lit(True)
-    for p in predicates:
-        cond = cond & p
-    return df.filter(cond)
 
 
 def validate_split(
@@ -67,9 +41,3 @@ def validate_split(
     for c in required_cols:
         cond = cond & F.col(c).isNotNull()
     return df.filter(cond), df.filter(~cond)
-
-
-def null_strip(df: DataFrame, subset: Sequence[str] | None = None) -> DataFrame:
-    """Drop rows that are entirely/partially null in ``subset`` (reference
-    drops None-valued keys per record, tutorial1:136-144)."""
-    return df.na.drop(subset=list(subset) if subset else None)

@@ -38,12 +38,6 @@ def anti_join(df: DataFrame, other: DataFrame, on: str | Sequence[str]) -> DataF
     return df.join(other, on, "left_anti")
 
 
-def semi_join(df: DataFrame, other: DataFrame, on: str | Sequence[str]) -> DataFrame:
-    """Rows of df whose key IS in other — membership at table scale (the
-    set-membership filter of lecture4/06:45 when the set is itself a table)."""
-    return df.join(other, on, "left_semi")
-
-
 def union_sources(dfs: Sequence[DataFrame]) -> DataFrame:
     """Union-all of heterogeneous sources by column name, padding missing
     columns with null (reference multi-source extend,

@@ -10,6 +10,15 @@ At 100 TB the brute-force path is a broadcast of the (small) query set
 against a partitioned corpus scan — embarrassingly parallel, no shuffle
 until the final per-query top-k; the LSH path prunes the corpus to matching
 buckets first.
+
+Every ANN and k-means operator below is assembled from one copy of each
+shared step: ``_cosine_pairs`` (broadcast-query scoring), ``_rank_neighbors``
+(per-query top-k, score DESC then neighbor id ASC), ``_lsh_topk`` (single-
+and multi-probe bucket LSH), ``_arrow_topk`` (the collected-query Arrow
+brute force around either cosine kernel), ``_train_centroids`` (seed collect
++ Lloyd refinement), ``_cell_means`` (the decimal per-cell mean of a Lloyd
+round) and ``_query_index`` (probe, prune, keep-last, decode, score, rank
+over a persisted float/SQ8/PQ index tree).
 """
 
 from __future__ import annotations
@@ -51,6 +60,47 @@ def drop_null_vectors(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     (0,)-dim axis error. Found by the all-NULL-column sweep."""
     return df.filter(F.col(vec_col).isNotNull())
 
+
+def _cosine_pairs(
+    q: DataFrame, c: DataFrame, on: str | None = None, dedup: bool = False
+) -> DataFrame:
+    """(query_id, neighbor_id, cos_sim) for the broadcast query side ``q``
+    (query_id, qv) against the corpus side ``c`` (neighbor_id, cv): a
+    cross join when ``on`` is None, else an equi-join on the shared
+    bucket/cell column. Self-matches drop; ``dedup`` collapses a pair
+    reached through several probed cells."""
+    q = F.broadcast(q)
+    pairs = (
+        (q.crossJoin(c) if on is None else q.join(c, on))
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos_sim"),
+        )
+    )
+    return pairs.dropDuplicates(["query_id", "neighbor_id"]) if dedup else pairs
+
+
+def _rank_neighbors(
+    scored: DataFrame,
+    score_col: str = "cos_sim",
+    k: int = 5,
+    cols: tuple[str, ...] = (),
+) -> DataFrame:
+    """THE neighbour ranking rule of every top-k operator: per query_id,
+    ``score_col`` DESC then neighbor_id ASC (deterministic ties), top
+    ``k`` by row_number. Output: query_id, neighbor_id, score_col, any
+    extra ``cols``, rank."""
+    return topk_per_group(
+        scored,
+        ["query_id"],
+        [F.col(score_col).desc(), F.col("neighbor_id").asc()],
+        k=k,
+        rank_col="rank",
+    ).select("query_id", "neighbor_id", score_col, *cols, "rank")
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -61,26 +111,9 @@ def cosine_topk(
     """Brute-force cosine top-k: broadcast the query set, score every
     (query, corpus) pair, per-query top-k via row_number. Excludes
     self-matches. Deterministic ties: (cos DESC, neighbor id ASC)."""
-    q = F.broadcast(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-    )
+    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
     c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
-    scored = (
-        q.crossJoin(c)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos_sim"),
-        )
-    )
-    return topk_per_group(
-        scored,
-        ["query_id"],
-        [F.col("cos_sim").desc(), F.col("neighbor_id").asc()],
-        k=k,
-        rank_col="rank",
-    ).select("query_id", "neighbor_id", "cos_sim", "rank")
+    return _rank_neighbors(_cosine_pairs(q, c), k=k)
 
 
 def sign_lsh_bucket(vec: Column, n_bits: int = 8) -> Column:
@@ -214,36 +247,36 @@ def cosine_topk_lsh(
     sign patterns — balanced occupancy on correlated embedding dims. Corpus
     buckets go through the Arrow kernel (with_hyperplane_buckets); the tiny
     query side uses the equivalent column expression."""
+    return _lsh_topk(corpus, queries, k, n_bits, id_col, vec_col, multiprobe=False)
+
+
+def _lsh_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    n_bits: int,
+    id_col: str,
+    vec_col: str,
+    multiprobe: bool,
+) -> DataFrame:
+    """Shared bucket-LSH body: Arrow-bucketed corpus, column-expression
+    query buckets (the query's own bucket, or with ``multiprobe`` its
+    1 + n_bits Hamming-radius-1 probe set), bucket equi-join, rank."""
     planes = seeded_hyperplanes(n_bits=n_bits)
+    bucket = random_hyperplane_bucket(F.col(vec_col), planes)
+    if multiprobe:
+        bucket = F.explode(probe_buckets(bucket, n_bits))
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qv"),
-        random_hyperplane_bucket(F.col(vec_col), planes).alias("bucket"),
+        bucket.alias("bucket"),
     )
     c = with_hyperplane_buckets(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
-        ),
+        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")),
         planes,
         vec_col="cv",
     )
-    scored = (
-        F.broadcast(q)
-        .join(c, "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos_sim"),
-        )
-    )
-    return topk_per_group(
-        scored,
-        ["query_id"],
-        [F.col("cos_sim").desc(), F.col("neighbor_id").asc()],
-        k=k,
-        rank_col="rank",
-    ).select("query_id", "neighbor_id", "cos_sim", "rank")
+    return _rank_neighbors(_cosine_pairs(q, c, on="bucket"), k=k)
 
 
 def probe_buckets(bucket: Column, n_bits: int = 8) -> Column:
@@ -280,36 +313,86 @@ def cosine_topk_lsh_multiprobe(
     cross join — for recall close to brute force on near-threshold pairs.
     Probes are distinct buckets and a corpus vector lives in exactly one,
     so no pair dedup is needed."""
-    planes = seeded_hyperplanes(n_bits=n_bits)
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        F.explode(
-            probe_buckets(random_hyperplane_bucket(F.col(vec_col), planes), n_bits)
-        ).alias("bucket"),
-    )
-    c = with_hyperplane_buckets(
-        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")),
-        planes,
-        vec_col="cv",
-    )
-    scored = (
-        F.broadcast(q)
-        .join(c, "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos_sim"),
+    return _lsh_topk(corpus, queries, k, n_bits, id_col, vec_col, multiprobe=True)
+
+
+def _blas_cosine_kernel(q_mat):
+    """BLAS cosine kernel for :func:`_arrow_topk`: queries normalized once
+    on the driver, each corpus batch normalized and scored in one matmul.
+    Zero-norm guard (the numpy twin of the column-side try_divide): a zero
+    vector's row normalizes to all-zeros instead of NaN, so its cosines
+    are 0 and it can never rank into anyone's top-k with NaN ordering
+    artifacts. Dividing by where(norm>0, norm, 1) costs one pass over the
+    NORM VECTOR — the masked np.divide(out=zeros, where=...) form costs a
+    full-matrix allocation + mask application per batch."""
+    import numpy as np  # noqa: PLC0415
+
+    qd = np.linalg.norm(q_mat, axis=1, keepdims=True)
+    q_norm = q_mat / np.where(qd > 0, qd, 1.0)
+
+    def sims(c_mat):
+        c_norm = np.linalg.norm(c_mat, axis=1, keepdims=True)
+        c_unit = c_mat / np.where(c_norm > 0, c_norm, 1.0)
+        return (c_unit @ q_norm.T).T  # (n_queries, batch)
+
+    return sims
+
+
+def _seq_cosine_kernel(q_mat):
+    """j-sequential cosine kernel for :func:`_arrow_topk` (see
+    :func:`_seq_cosine_matrix`)."""
+    return lambda c_mat: _seq_cosine_matrix(q_mat, c_mat)
+
+
+def _arrow_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    kernel,
+) -> DataFrame:
+    """Shared Arrow brute-force driver: collect the (small by contract)
+    query set into the closure, score each corpus batch with
+    ``kernel(q_mat)(c_mat)`` -> (n_queries, batch) cosines, emit the
+    repeat/tile pair frame, drop self-matches, rank. Scoring is
+    partition-local; the only shuffle is the final per-query top-k. NULL
+    vectors drop at entry; an empty query set returns an empty report
+    (an (0, ?) matrix axis-errors in numpy — found by the empty-corpus
+    sweep)."""
+    corpus = drop_null_vectors(corpus, vec_col)
+    queries = drop_null_vectors(queries, vec_col)
+    import numpy as np  # noqa: PLC0415
+    import pandas as pd  # noqa: PLC0415
+
+    q_rows = queries.select(id_col, vec_col).collect()
+    if not q_rows:
+        return corpus.sparkSession.createDataFrame(
+            [], "query_id long, neighbor_id long, cos_sim double, rank int"
         )
+    q_ids = np.array([r[0] for r in q_rows])
+    sims_of = kernel(np.array([r[1] for r in q_rows], dtype=np.float64))
+
+    def score(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            sims = sims_of(np.array(list(pdf[vec_col]), dtype=np.float64))
+            n = len(pdf)
+            yield pd.DataFrame(
+                {
+                    "query_id": np.repeat(q_ids, n),
+                    "neighbor_id": np.tile(pdf[id_col].to_numpy(), len(q_ids)),
+                    "cos_sim": np.round(sims.ravel(), 6),
+                }
+            )
+
+    scored = corpus.select(id_col, vec_col).mapInPandas(
+        score, schema="query_id long, neighbor_id long, cos_sim double"
     )
-    return topk_per_group(
-        scored,
-        ["query_id"],
-        [F.col("cos_sim").desc(), F.col("neighbor_id").asc()],
-        k=k,
-        rank_col="rank",
-    ).select("query_id", "neighbor_id", "cos_sim", "rank")
+    return _rank_neighbors(
+        scored.filter(F.col("query_id") != F.col("neighbor_id")), k=k
+    )
 
 
 def cosine_topk_arrow(
@@ -327,92 +410,7 @@ def cosine_topk_arrow(
     by contract — the corpus never is); scoring is partition-local and the
     only shuffle is the final per-query top-k.
     """
-    corpus = drop_null_vectors(corpus, vec_col)
-    queries = drop_null_vectors(queries, vec_col)
-    import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
-
-    q_rows = queries.select(id_col, vec_col).collect()
-    if not q_rows:
-        # empty query set: an (0, ?) matrix axis-errors in numpy — the
-        # report is simply empty (found by the empty-corpus sweep)
-        return corpus.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, cos_sim double, rank int"
-        )
-    q_ids = np.array([r[0] for r in q_rows])
-    q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
-    # zero-norm guard (the numpy twin of the column-side try_divide): a
-    # zero vector's row normalizes to all-zeros instead of NaN, so its
-    # cosines are 0 and it can never rank into anyone's top-k with NaN
-    # ordering artifacts
-    qd = np.linalg.norm(q_mat, axis=1, keepdims=True)
-    # dividing by where(norm>0, norm, 1) zeroes the zero rows (0/1 = 0)
-    # at the cost of one pass over the NORM VECTOR — the masked
-    # np.divide(out=zeros, where=...) form costs a full-matrix
-    # allocation + mask application per batch
-    q_norm = q_mat / np.where(qd > 0, qd, 1.0)
-
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            c_mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            c_norm = np.linalg.norm(c_mat, axis=1, keepdims=True)
-            c_unit = c_mat / np.where(c_norm > 0, c_norm, 1.0)
-            sims = c_unit @ q_norm.T  # (batch, n_queries)
-            n = len(pdf)
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(q_ids, n),
-                    "neighbor_id": np.tile(pdf[id_col].to_numpy(), len(q_ids)),
-                    "cos_sim": np.round(sims.T.ravel(), 6),
-                }
-            )
-
-    scored = corpus.select(id_col, vec_col).mapInPandas(
-        score, schema="query_id long, neighbor_id long, cos_sim double"
-    )
-    scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
-    return topk_per_group(
-        scored,
-        ["query_id"],
-        [F.col("cos_sim").desc(), F.col("neighbor_id").asc()],
-        k=k,
-        rank_col="rank",
-    ).select("query_id", "neighbor_id", "cos_sim", "rank")
-
-
-def ivf_assign(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    out_col: str = "cell",
-    n_best: int = 1,
-    centroid_id_col: str = "vec_id",
-    centroid_vec_col: str = "embedding",
-) -> DataFrame:
-    """Assign each vector to its ``n_best`` nearest centroid cells by cosine
-    (argmax via row_number; ties break on centroid id). The centroid set is
-    broadcast — at 100 TB the corpus scan stays partition-local and the only
-    shuffle is whatever the caller does with the cells."""
-    c = F.broadcast(
-        centroids.select(
-            F.col(centroid_id_col).alias(out_col),
-            F.col(centroid_vec_col).alias("_centroid_v"),
-        )
-    )
-    scored = vectors.crossJoin(c).withColumn(
-        "_cscore", cosine(F.col(vec_col), F.col("_centroid_v"))
-    )
-    best = topk_per_group(
-        scored,
-        [id_col],
-        [F.col("_cscore").desc(), F.col(out_col).asc()],
-        k=n_best,
-        rank_col="_crank",
-    )
-    return best.drop("_centroid_v", "_cscore", "_crank")
+    return _arrow_topk(corpus, queries, k, id_col, vec_col, _blas_cosine_kernel)
 
 
 # Optimized-logical-plan node names that imply an exchange (or an
@@ -473,13 +471,13 @@ def ivf_assign_arrow(
     n_best: int = 1,
     widen: bool = False,
 ) -> DataFrame:
-    """Arrow fast path for ``ivf_assign``: centroids arrive as a collected
-    (cell_id, vector) list — small BY CONTRACT (the index's cell count, not
-    corpus data) — and each corpus batch scores against the centroid matrix
-    with the j-sequential cosine kernel, emitting the ``n_best`` cells per
-    row (score DESC, cell ASC — stable argsort reproduces the column
-    variant's tie-break). The corpus scan stays partition-local; nothing
-    shuffles until the caller uses the cells."""
+    """Nearest-centroid assignment by cosine: centroids arrive as a
+    collected (cell_id, vector) list — small BY CONTRACT (the index's cell
+    count, not corpus data) — and each corpus batch scores against the
+    centroid matrix with the j-sequential cosine kernel, emitting the
+    ``n_best`` cells per row (score DESC, cell ASC — the stable argsort
+    reproduces the oracles' ROW_NUMBER tie-break). The corpus scan stays
+    partition-local; nothing shuffles until the caller uses the cells."""
     import numpy as np  # noqa: PLC0415
     from pyspark.sql import types as T  # noqa: PLC0415
 
@@ -507,40 +505,26 @@ def ivf_assign_arrow(
     return vectors.mapInPandas(fn, schema=schema)
 
 
-def lloyd_refine(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    n_iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+def _cell_means(
+    assigned: DataFrame, keys: tuple[str, ...], vec_col: str
 ) -> DataFrame:
-    """Deterministic Lloyd iterations: assign every corpus vector to its
-    nearest centroid (cosine), recompute each cell's centroid as the
-    element-wise mean of its members, repeat. Returns (cell, cv) with cell
-    keeping the seed centroid's id.
-
-    The per-component mean uses the decimal-sum discipline
+    """THE Lloyd mean step: per ``keys`` group, the element-wise mean of
+    the member vectors in ``vec_col`` as (``*keys``, cv). The
+    per-component mean uses the decimal-sum discipline
     (aggregates.decimal_avg) so refined centroids are bit-identical across
-    partitionings AND in the DuckDB oracle twin — which unrolls the same
-    iterations as CTEs. Each iteration is one Arrow centroid-assign pass
-    (partition-local, no shuffle) plus one 512-group aggregate (n_cells ×
-    dim); the tiny centroid set is collected between rounds (index
-    metadata, not corpus data), truncating lineage so iteration i+1 never
-    re-executes iteration i. Refinement cost per round is independent of
-    partition layout and linear in corpus size for the scan. Empty cells
-    drop out, exactly as in the oracle's inner aggregation.
-    """
-    rows = lloyd_refine_rows(
-        corpus,
-        [
-            (r[0], [float(x) for x in r[1]])
-            for r in centroids.select(id_col, vec_col).collect()
-        ],
-        n_iters=n_iters,
-        vec_col=vec_col,
+    partitionings AND in the DuckDB oracle twins, which unroll the same
+    iterations as CTEs. Empty cells drop out, exactly as in the oracles'
+    inner aggregation."""
+    means = (
+        assigned.select(*keys, F.posexplode(F.col(vec_col)).alias("pos", "val"))
+        .groupBy(*keys, "pos")
+        .agg(decimal_avg(F.col("val").cast("double")).alias("m"))
     )
-    return corpus.sparkSession.createDataFrame(
-        [(c, v) for c, v in rows], "cell bigint, cv array<double>"
+    return means.groupBy(*keys).agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("pos", "m"))),
+            lambda x: x["m"],
+        ).alias("cv")
     )
 
 
@@ -550,28 +534,65 @@ def lloyd_refine_rows(
     n_iters: int = 2,
     vec_col: str = "embedding",
 ) -> list[tuple[int, list[float]]]:
-    """Lloyd iterations over collected centroid rows (see lloyd_refine)."""
+    """Deterministic Lloyd iterations over collected centroid rows: assign
+    every corpus vector to its nearest centroid (cosine), recompute each
+    cell's centroid as the decimal element-wise mean of its members
+    (:func:`_cell_means`), repeat. Returns sorted (cell, cv) rows, cell
+    keeping the seed centroid's id; ``n_iters=0`` returns the sorted seeds.
+
+    Each iteration is one Arrow centroid-assign pass (partition-local, no
+    shuffle) plus one n_cells × dim aggregate; the tiny centroid set is
+    collected between rounds (index metadata, not corpus data), truncating
+    lineage so iteration i+1 never re-executes iteration i. Cost per round
+    is independent of partition layout and linear in corpus size."""
     cent_rows = sorted(seed_rows)
     for _ in range(n_iters):
         assigned = ivf_assign_arrow(
             corpus.select(vec_col), cent_rows, vec_col=vec_col, widen=True
         )
-        exploded = assigned.select(
-            "cell", F.posexplode(F.col(vec_col)).alias("pos", "val")
-        )
-        means = exploded.groupBy("cell", "pos").agg(
-            decimal_avg(F.col("val").cast("double")).alias("m")
-        )
-        cent_df = means.groupBy("cell").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                lambda x: x["m"],
-            ).alias("cv")
-        )
         cent_rows = sorted(
-            (r["cell"], [float(x) for x in r["cv"]]) for r in cent_df.collect()
+            (r["cell"], [float(x) for x in r["cv"]])
+            for r in _cell_means(assigned, ("cell",), vec_col).collect()
         )
     return cent_rows
+
+
+def _train_centroids(
+    corpus: DataFrame,
+    n_centroids: int,
+    lloyd_iters: int,
+    id_col: str,
+    vec_col: str,
+    seeds: DataFrame | None = None,
+    refuse_empty: str | None = None,
+) -> list[tuple[int, list[float]]]:
+    """THE centroid-training rule for every IVF / k-means operator and
+    index builder: collect the seed frame — (id, vector) rows, n by
+    contract, index metadata never corpus-sized — and refine it by
+    ``lloyd_iters`` order-independent Lloyd rounds over ``corpus``. The
+    default seeds are the n lowest ids (``id < n``); the retrains pass
+    their own ``orderBy(id).limit(n)`` frame over the keep-last survivors.
+    The oracles pin both rules. One place, not six — a seeding or
+    refinement tweak replicated by hand would let a rebuilt index
+    silently disagree with the one it replaces.
+
+    ``refuse_empty`` (the operator name) makes an empty seed set raise —
+    the index builders and the quantized retrain refuse loudly, because
+    continuing would write an empty/garbage tree with no error anywhere
+    (measured: the SQ8 builder died later with an opaque 'exprs should
+    not be empty' assert, the PQ builder silently returned ([], [])).
+    Unset, an empty seed set trains no centroids and the caller's result
+    is empty (the registered queries' empty-corpus contract)."""
+    if seeds is None:
+        seeds = corpus.filter(F.col(id_col) < n_centroids).select(id_col, vec_col)
+    seed_rows = [(r[0], [float(x) for x in r[1]]) for r in seeds.collect()]
+    if not seed_rows and refuse_empty is not None:
+        raise ValueError(
+            f"{refuse_empty}: no seed vectors to train centroids from (no "
+            "surviving vectors after the NULL-vector admission rule, or no "
+            "ids in the seed range)"
+        )
+    return lloyd_refine_rows(corpus, seed_rows, n_iters=lloyd_iters, vec_col=vec_col)
 
 
 def cosine_topk_ivf(
@@ -592,51 +613,38 @@ def cosine_topk_ivf(
     corpus×centroids (broadcast, linear) + per-query work ~
     n_probe/n_centroids of the corpus instead of all of it.
 
-    At scale the assignment step is materialized once (`ivf_assign` output
-    written partitioned BY cell) and amortized across query batches.
+    At scale the assignment step is materialized once (`build_ivf_index`
+    writes the corpus partitioned BY cell) and amortized across query
+    batches by `query_ivf_index`.
     """
     corpus = drop_null_vectors(corpus, vec_col)
     queries = drop_null_vectors(queries, vec_col)
-    seeds = corpus.filter(F.col(id_col) < n_centroids).select(id_col, vec_col)
-    seed_rows = [
-        (r[0], [float(x) for x in r[1]]) for r in seeds.collect()
-    ]  # n_centroids rows by contract — index metadata, never corpus-sized
-    cent_rows = (
-        lloyd_refine_rows(corpus, seed_rows, n_iters=lloyd_iters, vec_col=vec_col)
-        if lloyd_iters > 0
-        else sorted(seed_rows)
-    )
+    cent_rows = _train_centroids(corpus, n_centroids, lloyd_iters, id_col, vec_col)
     indexed = ivf_assign_arrow(
         corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")),
         cent_rows,
         vec_col="cv",
         widen=True,
     )
-    probes = ivf_assign_arrow(
+    probes = _probe_cells(queries, cent_rows, n_probe, id_col, vec_col)
+    # a (query, neighbor) pair can surface via several probed cells
+    return _rank_neighbors(_cosine_pairs(probes, indexed, "cell", dedup=True), k=k)
+
+
+def _probe_cells(
+    queries: DataFrame,
+    centroids: list[tuple[int, list[float]]],
+    n_probe: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """(query_id, qv, cell): each query's ``n_probe`` nearest cells."""
+    return ivf_assign_arrow(
         queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")),
-        cent_rows,
+        sorted(centroids),
         vec_col="qv",
         n_best=n_probe,
     )
-    scored = (
-        F.broadcast(probes)
-        .join(indexed, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos_sim"),
-        )
-        # a (query, neighbor) pair can surface via several probed cells
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    return topk_per_group(
-        scored,
-        ["query_id"],
-        [F.col("cos_sim").desc(), F.col("neighbor_id").asc()],
-        k=k,
-        rank_col="rank",
-    ).select("query_id", "neighbor_id", "cos_sim", "rank")
 
 
 # --- oracle SQL twins --------------------------------------------------------
@@ -667,13 +675,6 @@ def cosine_topk_oracle_sql(
             FROM scored)
     SELECT query_id, neighbor_id, cos_sim, rank FROM ranked WHERE rank <= {k}
     """
-
-
-def sign_bucket_sql(vec: str, n_bits: int = 8) -> str:
-    bits = " || ".join(
-        f"(CASE WHEN {vec}[{i + 1}] >= 0 THEN '1' ELSE '0' END)" for i in range(n_bits)
-    )
-    return f"({bits})"
 
 
 def hyperplane_bucket_sql(
@@ -825,38 +826,6 @@ def cosine_topk_lsh_oracle_sql(
 
 # --- Persisted IVF index -----------------------------------------------------
 
-def _seed_centroids(
-    corpus: DataFrame,
-    n_centroids: int,
-    lloyd_iters: int,
-    id_col: str,
-    vec_col: str,
-) -> list[tuple[int, list[float]]]:
-    """THE centroid-training rule for every index builder (float, SQ8,
-    PQ): deterministic seeds (the n lowest-id vectors) refined by the
-    order-independent Lloyd pass. One place, not three — a seeding or
-    refinement tweak replicated by hand would let a rebuilt index
-    silently disagree with the one it replaces. An empty seed set —
-    empty corpus after NULL-vector admission, or every id outside the
-    seed range — refuses loudly: continuing would write an empty/
-    garbage tree and return empty artifacts with no error anywhere
-    (measured: the SQ8 builder died later with an opaque 'exprs should
-    not be empty' assert, the PQ builder silently returned ([], []))."""
-    seeds = corpus.filter(F.col(id_col) < n_centroids).select(id_col, vec_col)
-    seed_rows = [(r[0], [float(x) for x in r[1]]) for r in seeds.collect()]
-    if not seed_rows:
-        raise ValueError(
-            f"_seed_centroids: no seed vectors ({id_col} < {n_centroids} "
-            "matched nothing) — empty corpus after the NULL-vector "
-            "admission rule, or ids outside the seed range"
-        )
-    return (
-        lloyd_refine_rows(corpus, seed_rows, n_iters=lloyd_iters, vec_col=vec_col)
-        if lloyd_iters > 0
-        else sorted(seed_rows)
-    )
-
-
 def build_ivf_index(
     corpus: DataFrame,
     path: str,
@@ -890,22 +859,41 @@ def build_ivf_index(
         # reproducible without re-running the training loop
         cent_rows = sorted(centroids)
     else:
-        cent_rows = _seed_centroids(
-            corpus, n_centroids, lloyd_iters, id_col, vec_col
+        cent_rows = _train_centroids(
+            corpus, n_centroids, lloyd_iters, id_col, vec_col,
+            refuse_empty="build_ivf_index",
         )
-    indexed = ivf_assign_arrow(
-        corpus.select(id_col, vec_col), cent_rows, vec_col=vec_col
-    ).withColumn("wave", F.lit(0))
-    # static overwrite pinned: a REBUILD over an existing path must drop
-    # every old (cell, wave) partition, not just the ones present in the
-    # new data (the session default is dynamic for the upsert paths)
+    _write_wave0(
+        ivf_assign_arrow(corpus.select(id_col, vec_col), cent_rows, vec_col=vec_col),
+        path,
+    )
+    return cent_rows
+
+
+def _write_wave0(indexed: DataFrame, path: str) -> None:
+    """Write ``indexed`` as the WHOLE index tree: wave 0, partitioned by
+    (cell, wave), static overwrite pinned — a build, rebuild or compaction
+    must drop every old (cell, wave) partition, not just the ones present
+    in the new data (the session default is dynamic for the upsert
+    paths)."""
     (
-        indexed.write.partitionBy("cell", "wave")
+        indexed.withColumn("wave", F.lit(0))
+        .write.partitionBy("cell", "wave")
         .mode("overwrite")
         .option("partitionOverwriteMode", "static")
         .parquet(path)
     )
-    return cent_rows
+
+
+def _index_columns(spark, path: str) -> list[str] | None:
+    """The persisted index tree's columns (one file listing + footer),
+    or None when there is no index at ``path`` yet."""
+    from pyspark.errors import AnalysisException  # noqa: PLC0415
+
+    try:
+        return spark.read.parquet(path).columns
+    except AnalysisException:
+        return None
 
 
 def upsert_ivf_index(
@@ -959,12 +947,7 @@ def upsert_ivf_index(
     # NULL landing in the index would poison every downstream cosine)
     new_vectors = drop_null_vectors(new_vectors, vec_col)
     if check_layout:
-        from pyspark.errors import AnalysisException  # noqa: PLC0415
-
-        try:
-            existing_cols = new_vectors.sparkSession.read.parquet(path).columns
-        except AnalysisException:
-            existing_cols = None  # no index yet — this wave creates it
+        existing_cols = _index_columns(new_vectors.sparkSession, path)
         if existing_cols is not None and "wave" not in existing_cols:
             raise ValueError(
                 f"upsert_ivf_index: index at {path} has no wave partition "
@@ -1017,17 +1000,7 @@ def compact_ivf_index(
         # the write doesn't read the files it is replacing
         .transform(lineage_cut)
     )
-    indexed = ivf_assign_arrow(
-        latest, sorted(centroids), vec_col=vec_col
-    ).withColumn("wave", F.lit(0))
-    # static overwrite: compaction REPLACES the whole index — dynamic
-    # mode would leave the superseded wave partitions on disk
-    (
-        indexed.write.partitionBy("cell", "wave")
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .parquet(path)
-    )
+    _write_wave0(ivf_assign_arrow(latest, sorted(centroids), vec_col=vec_col), path)
 
 
 def ivf_index_report(spark, path: str, id_col: str = "vec_id") -> DataFrame:
@@ -1116,8 +1089,7 @@ def _codec_view(
                 f"{op}: index is an SQ8 tree (codes column) — pass its "
                 "frozen quantization bounds"
             )
-        mn = F.array(*[F.lit(v) for v in bounds[0]])
-        mx = F.array(*[F.lit(v) for v in bounds[1]])
+        mn, mx = _sq8_bound_arrays(bounds)
         return "codes", lambda c: sq8_decode(c, mn, mx)
     if payload == "pq_codes":
         if codebooks is None:
@@ -1338,14 +1310,9 @@ def retrain_ivf_centroids(
         # compressed-intermediate doctrine, ARCHITECTURE §3)
         .transform(lineage_cut)
     )
-    seeds = (
-        latest.orderBy(id_col).limit(n_centroids).select(id_col, vec_col)
-    )
-    seed_rows = [(r[0], [float(x) for x in r[1]]) for r in seeds.collect()]
-    new_cents = (
-        lloyd_refine_rows(latest, seed_rows, n_iters=lloyd_iters, vec_col=vec_col)
-        if lloyd_iters > 0
-        else sorted(seed_rows)
+    new_cents = _train_centroids(
+        latest, n_centroids, lloyd_iters, id_col, vec_col,
+        seeds=latest.orderBy(id_col).limit(n_centroids).select(id_col, vec_col),
     )
     build_ivf_index(
         latest, path, centroids=new_cents, id_col=id_col, vec_col=vec_col
@@ -1421,17 +1388,10 @@ def retrain_quantized_ivf(
             f"{expect_dim} dims — corrupt or foreign codes; refusing to "
             "retrain over a survivor set that would silently lose them"
         )
-    seeds = latest.orderBy(id_col).limit(n_centroids)
-    seed_rows = [(r[0], [float(x) for x in r[1]]) for r in seeds.collect()]
-    if not seed_rows:
-        raise ValueError(
-            f"{op}: index at {path} has no surviving vectors to retrain "
-            "from (empty tree?) — there is nothing to re-seed Lloyd with"
-        )
-    new_cents = (
-        lloyd_refine_rows(latest, seed_rows, n_iters=lloyd_iters, vec_col="_rv")
-        if lloyd_iters > 0
-        else sorted(seed_rows)
+    new_cents = _train_centroids(
+        latest, n_centroids, lloyd_iters, id_col, "_rv",
+        seeds=latest.orderBy(id_col).limit(n_centroids),
+        refuse_empty=f"{op} ({path})",
     )
     if payload == "codes":
         _, new_bounds = build_sq8_ivf_index(
@@ -1506,29 +1466,21 @@ def build_sq8_ivf_index(
     if centroids is not None:
         cent_rows = sorted(centroids)
     else:
-        cent_rows = _seed_centroids(
-            corpus, n_centroids, lloyd_iters, id_col, vec_col
+        cent_rows = _train_centroids(
+            corpus, n_centroids, lloyd_iters, id_col, vec_col,
+            refuse_empty="build_sq8_ivf_index",
         )
-    mn, mx = (F.array(*[F.lit(v) for v in bounds[0]]),
-              F.array(*[F.lit(v) for v in bounds[1]]))
-    indexed = (
-        ivf_assign_arrow(
-            corpus.select(id_col, vec_col), cent_rows, vec_col=vec_col
-        )
-        .select(
-            id_col,
-            sq8_codes(F.col(vec_col), mn, mx).alias("codes"),
-            "cell",
-        )
-        .withColumn("wave", F.lit(0))
-    )
-    (
-        indexed.write.partitionBy("cell", "wave")
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .parquet(path)
-    )
+    mn, mx = _sq8_bound_arrays(bounds)
+    indexed = ivf_assign_arrow(
+        corpus.select(id_col, vec_col), cent_rows, vec_col=vec_col
+    ).select(id_col, sq8_codes(F.col(vec_col), mn, mx).alias("codes"), "cell")
+    _write_wave0(indexed, path)
     return cent_rows, bounds
+
+
+def _sq8_bound_arrays(bounds: tuple[list[float], list[float]]):
+    """The frozen SQ8 bounds artifact as (mn, mx) literal array Columns."""
+    return tuple(F.array(*[F.lit(v) for v in b]) for b in bounds)
 
 
 def upsert_sq8_ivf_index(
@@ -1560,12 +1512,7 @@ def upsert_sq8_ivf_index(
         )
     new_vectors = drop_null_vectors(new_vectors, vec_col)
     if check_layout:
-        from pyspark.errors import AnalysisException  # noqa: PLC0415
-
-        try:
-            existing = new_vectors.sparkSession.read.parquet(path).columns
-        except AnalysisException:
-            existing = None  # no index yet — this wave creates it
+        existing = _index_columns(new_vectors.sparkSession, path)
         if existing is not None and (
             "codes" not in existing or "wave" not in existing
         ):
@@ -1577,8 +1524,7 @@ def upsert_sq8_ivf_index(
             )
     from .upsert import upsert_partitions  # noqa: PLC0415
 
-    mn, mx = (F.array(*[F.lit(v) for v in bounds[0]]),
-              F.array(*[F.lit(v) for v in bounds[1]]))
+    mn, mx = _sq8_bound_arrays(bounds)
     assigned = ivf_assign_arrow(
         new_vectors.select(id_col, vec_col), sorted(centroids), vec_col=vec_col
     ).select(
@@ -1639,14 +1585,8 @@ def _compact_coded_ivf_index(
         )
         .select(id_col, "cell")
         .join(latest, id_col)
-        .withColumn("wave", F.lit(0))
     )
-    (
-        indexed.write.partitionBy("cell", "wave")
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .parquet(path)
-    )
+    _write_wave0(indexed, path)
 
 
 def compact_sq8_ivf_index(
@@ -1658,8 +1598,7 @@ def compact_sq8_ivf_index(
 ) -> None:
     """Compaction for the SQ8 index: keep-last + reconstruct-and-reassign
     (see :func:`_compact_coded_ivf_index`); codes stored unchanged."""
-    mn = F.array(*[F.lit(v) for v in bounds[0]])
-    mx = F.array(*[F.lit(v) for v in bounds[1]])
+    mn, mx = _sq8_bound_arrays(bounds)
     _compact_coded_ivf_index(
         spark,
         path,
@@ -1715,43 +1654,10 @@ def query_sq8_ivf_index(
     reconstruction on recall). Output contract matches query_ivf_index:
     (query_id, neighbor_id, cos_sim, rank), cos_sim computed over the
     reconstructed neighbor."""
-    probes = ivf_assign_arrow(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")),
-        sorted(centroids),
-        vec_col="qv",
-        n_best=n_probe,
+    return _query_index(
+        spark, path, centroids, queries, k, n_probe, id_col, vec_col,
+        codec="codes", bounds=bounds, op="query_sq8_ivf_index",
     )
-    probe_cells = sorted(
-        {r["cell"] for r in probes.select("cell").distinct().collect()}
-    )
-    index = spark.read.parquet(path).filter(F.col("cell").isin(probe_cells))
-    index = _keep_latest_per_id(index, id_col, "codes")
-    index = _pin_scoring_parallelism(index)
-    mn, mx = (F.array(*[F.lit(v) for v in bounds[0]]),
-              F.array(*[F.lit(v) for v in bounds[1]]))
-    indexed = index.select(
-        F.col(id_col).alias("neighbor_id"),
-        sq8_decode(F.col("codes"), mn, mx).alias("cv"),
-        "cell",
-    )
-    scored = (
-        F.broadcast(probes)
-        .join(indexed, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos_sim"),
-        )
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    return topk_per_group(
-        scored,
-        ["query_id"],
-        [F.col("cos_sim").desc(), F.col("neighbor_id").asc()],
-        k=k,
-        rank_col="rank",
-    ).select("query_id", "neighbor_id", "cos_sim", "rank")
 
 
 PQ_M = 4
@@ -1885,8 +1791,9 @@ def build_pq_ivf_index(
     if centroids is not None:
         cent_rows = sorted(centroids)
     else:
-        cent_rows = _seed_centroids(
-            corpus, n_centroids, lloyd_iters, id_col, vec_col
+        cent_rows = _train_centroids(
+            corpus, n_centroids, lloyd_iters, id_col, vec_col,
+            refuse_empty="build_pq_ivf_index",
         )
     spark = corpus.sparkSession
     if codebooks is not None:
@@ -1924,17 +1831,7 @@ def build_pq_ivf_index(
     encoded = _pq_encode(
         corpus, cent, m=m, dsub=dsub, id_col=id_col, vec_col=vec_col
     )
-    indexed = (
-        assigned.join(encoded, [id_col, "_vkey"])
-        .drop("_vkey")
-        .withColumn("wave", F.lit(0))
-    )
-    (
-        indexed.write.partitionBy("cell", "wave")
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .parquet(path)
-    )
+    _write_wave0(assigned.join(encoded, [id_col, "_vkey"]).drop("_vkey"), path)
     return cent_rows, codebooks
 
 
@@ -1963,12 +1860,7 @@ def upsert_pq_ivf_index(
         )
     new_vectors = drop_null_vectors(new_vectors, vec_col)
     if check_layout:
-        from pyspark.errors import AnalysisException  # noqa: PLC0415
-
-        try:
-            existing = new_vectors.sparkSession.read.parquet(path).columns
-        except AnalysisException:
-            existing = None  # no index yet — this wave creates it
+        existing = _index_columns(new_vectors.sparkSession, path)
         if existing is not None and (
             "pq_codes" not in existing or "wave" not in existing
         ):
@@ -2017,44 +1909,10 @@ def query_pq_ivf_index(
     over the reconstruction, per-query top-k. A corrupt/foreign code row
     reconstructs NULL → NULL cos_sim → never outranks a real row. Output
     contract matches query_ivf_index."""
-    probes = ivf_assign_arrow(
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-        ),
-        sorted(centroids),
-        vec_col="qv",
-        n_best=n_probe,
+    return _query_index(
+        spark, path, centroids, queries, k, n_probe, id_col, vec_col,
+        codec="pq_codes", codebooks=codebooks, op="query_pq_ivf_index",
     )
-    probe_cells = sorted(
-        {r["cell"] for r in probes.select("cell").distinct().collect()}
-    )
-    index = spark.read.parquet(path).filter(F.col("cell").isin(probe_cells))
-    index = _keep_latest_per_id(index, id_col, "pq_codes")
-    index = _pin_scoring_parallelism(index)
-    decode = _pq_decode_expr(codebooks)
-    indexed = index.select(
-        F.col(id_col).alias("neighbor_id"),
-        decode(F.col("pq_codes")).alias("cv"),
-        "cell",
-    )
-    scored = (
-        F.broadcast(probes)
-        .join(indexed, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos_sim"),
-        )
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    return topk_per_group(
-        scored,
-        ["query_id"],
-        [F.col("cos_sim").desc(), F.col("neighbor_id").asc()],
-        k=k,
-        rank_col="rank",
-    ).select("query_id", "neighbor_id", "cos_sim", "rank")
 
 
 def ivf_probe_sweep(
@@ -2083,14 +1941,7 @@ def ivf_probe_sweep(
     ).transform(lineage_cut)
     rows = []
     for n_probe in probes:
-        probed = ivf_assign_arrow(
-            queries.select(
-                F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-            ),
-            sorted(centroids),
-            vec_col="qv",
-            n_best=n_probe,
-        )
+        probed = _probe_cells(queries, centroids, n_probe, id_col, vec_col)
         n_cells = probed.select("cell").distinct().count()
         graded = _grade_recall(
             truth,
@@ -2175,7 +2026,10 @@ def index_codec_frontier(
     # distinct-collect action) and one broadcast per codec — ~7
     # traversals; cut them for the same reason as the corpus
     queries = queries.select(id_col, vec_col).transform(lineage_cut)
-    cents = _seed_centroids(corpus, n_centroids, lloyd_iters, id_col, vec_col)
+    cents = _train_centroids(
+        corpus, n_centroids, lloyd_iters, id_col, vec_col,
+        refuse_empty="index_codec_frontier",
+    )
     truth = cosine_topk(
         corpus, queries, k=k, id_col=id_col, vec_col=vec_col
     ).transform(lineage_cut)
@@ -2210,26 +2064,17 @@ def index_codec_frontier(
             )
         return total
 
-    def approx(codec: str) -> DataFrame:
-        if codec == "sq8":
-            return query_sq8_ivf_index(
-                spark, spath, cents, bounds, queries,
-                k=k, n_probe=n_probe, id_col=id_col, vec_col=vec_col,
-            )
-        if codec == "pq":
-            return query_pq_ivf_index(
-                spark, ppath, cents, codebooks, queries,
-                k=k, n_probe=n_probe, id_col=id_col, vec_col=vec_col,
-            )
-        return query_ivf_index(
-            spark, fpath, cents, queries,
-            k=k, n_probe=n_probe, id_col=id_col, vec_col=vec_col,
-        )
-
     n_rows = corpus.count()
     out = []
-    for codec, path in (("float", fpath), ("sq8", spath), ("pq", ppath)):
-        agg = _grade_recall(truth, approx(codec)).agg(
+    for codec, path, payload in (
+        ("float", fpath, None), ("sq8", spath, "codes"), ("pq", ppath, "pq_codes")
+    ):
+        approx = _query_index(
+            spark, path, cents, queries, k, n_probe, id_col, vec_col,
+            codec=payload, bounds=bounds, codebooks=codebooks,
+            op="index_codec_frontier",
+        )
+        agg = _grade_recall(truth, approx).agg(
             F.round(F.avg("recall"), 6).alias("mean_recall"),
             F.round(F.min("recall"), 6).alias("min_recall"),
             F.count(F.lit(1)).alias("n_queries"),
@@ -2269,44 +2114,49 @@ def query_ivf_index(
     — the scan's PartitionFilters, not a post-read filter), score
     bucket-locally, rank per query. Matches `cosine_topk_ivf` output for
     the same corpus/seeding."""
-    probes = ivf_assign_arrow(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")),
-        sorted(centroids),
-        vec_col="qv",
-        n_best=n_probe,
+    return _query_index(
+        spark, path, centroids, queries, k, n_probe, id_col, vec_col
     )
+
+
+def _query_index(
+    spark,
+    path: str,
+    centroids: list[tuple[int, list[float]]],
+    queries: DataFrame,
+    k: int,
+    n_probe: int,
+    id_col: str,
+    vec_col: str,
+    codec: str | None = None,
+    bounds: tuple[list[float], list[float]] | None = None,
+    codebooks: list[tuple[int, int, list[float]]] | None = None,
+    op: str = "query_ivf_index",
+) -> DataFrame:
+    """Shared persisted-index query body for the float (``codec`` None),
+    SQ8 (``codes``) and PQ (``pq_codes``) trees: probe each query's
+    ``n_probe`` cells, prune the scan to them (the isin lands in the
+    scan's PartitionFilters), keep the newest wave per id within the
+    probed cells, decode the payload (:func:`_codec_view`), score
+    bucket-locally, rank per query.
+
+    The keep-last rule runs over the probed subset only, so its cost is
+    cell-bounded (see upsert_ivf_index for the cross-cell staleness
+    contract). A legacy float tree without a ``wave`` column skips the
+    window: one copy per id by construction. Quantized trees pin the
+    scoring stage's width (:func:`_pin_scoring_parallelism`) — their
+    codes are too small for byte-based AQE sizing."""
+    _, decode = _codec_view((codec,), bounds, codebooks, op)
+    probes = _probe_cells(queries, centroids, n_probe, id_col, vec_col)
     probe_cells = sorted({r["cell"] for r in probes.select("cell").distinct().collect()})
     index = spark.read.parquet(path).filter(F.col("cell").isin(probe_cells))
-    if "wave" in index.columns:
-        # incremental index (build + upsert waves): keep the NEWEST wave
-        # per id within the probed cells — a re-ingested vector
-        # supersedes its older same-cell copies; the shared keep-last
-        # rule runs over the probed subset only, so its cost is
-        # cell-bounded (see upsert_ivf_index for the cross-cell
-        # staleness contract). A legacy index skips the window entirely:
-        # one copy per id by construction, no wave column to rank on.
-        index = _keep_latest_per_id(index, id_col, vec_col)
-    indexed = index.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"), "cell"
-    )
-    scored = (
-        F.broadcast(probes)
-        .join(indexed, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos_sim"),
-        )
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    return topk_per_group(
-        scored,
-        ["query_id"],
-        [F.col("cos_sim").desc(), F.col("neighbor_id").asc()],
-        k=k,
-        rank_col="rank",
-    ).select("query_id", "neighbor_id", "cos_sim", "rank")
+    if codec is not None or "wave" in index.columns:
+        index = _keep_latest_per_id(index, id_col, codec or vec_col)
+    if codec is not None:
+        index = _pin_scoring_parallelism(index)
+    cv = F.col(vec_col) if decode is None else decode(F.col(codec))
+    indexed = index.select(F.col(id_col).alias("neighbor_id"), cv.alias("cv"), "cell")
+    return _rank_neighbors(_cosine_pairs(probes, indexed, "cell", dedup=True), k=k)
 
 
 def cosine_topk_seq_arrow(
@@ -2322,39 +2172,7 @@ def cosine_topk_seq_arrow(
     `_seq_cosine_matrix`), at numpy throughput. Use this variant when the
     result feeds a downstream decision (e.g. kNN voting) where a one-ulp
     rank flip at the k boundary would change the answer."""
-    import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
-
-    q_rows = queries.select(id_col, vec_col).collect()
-    q_ids = np.array([r[0] for r in q_rows])
-    q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
-
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            c_mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            sims = _seq_cosine_matrix(q_mat, c_mat)  # (n_queries, batch)
-            n = len(pdf)
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(q_ids, n),
-                    "neighbor_id": np.tile(pdf[id_col].to_numpy(), len(q_ids)),
-                    "cos_sim": np.round(sims.ravel(), 6),
-                }
-            )
-
-    scored = corpus.select(id_col, vec_col).mapInPandas(
-        score, schema="query_id long, neighbor_id long, cos_sim double"
-    )
-    scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
-    return topk_per_group(
-        scored,
-        ["query_id"],
-        [F.col("cos_sim").desc(), F.col("neighbor_id").asc()],
-        k=k,
-        rank_col="rank",
-    ).select("query_id", "neighbor_id", "cos_sim", "rank")
+    return _arrow_topk(corpus, queries, k, id_col, vec_col, _seq_cosine_kernel)
 
 
 def knn_label_predict(
@@ -2612,13 +2430,7 @@ def kmeans_assign(
     if n_clusters is None:
         n_clusters = derived_n_clusters(corpus.count(), target_cluster_size)
     if n_clusters <= distributed_threshold:
-        seeds = corpus.filter(F.col(id_col) < n_clusters).select(id_col, vec_col)
-        seed_rows = [(r[0], [float(x) for x in r[1]]) for r in seeds.collect()]
-        cent_rows = (
-            lloyd_refine_rows(corpus, seed_rows, n_iters=lloyd_iters, vec_col=vec_col)
-            if lloyd_iters > 0
-            else sorted(seed_rows)
-        )
+        cent_rows = _train_centroids(corpus, n_clusters, lloyd_iters, id_col, vec_col)
         return ivf_assign_arrow(
             corpus, cent_rows, vec_col=vec_col, out_col=out_col, widen=True
         )
@@ -2642,21 +2454,9 @@ def kmeans_assign(
             id_col=id_col, vec_col=vec_col,
         )
         merged = assigned.join(corpus.select(id_col, vec_col), id_col)
-        exploded = merged.select(
-            "cell", F.posexplode(F.col(vec_col)).alias("pos", "val")
-        )
-        means = exploded.groupBy("cell", "pos").agg(
-            decimal_avg(F.col("val").cast("double")).alias("m")
-        )
-        cent_df = means.groupBy("cell").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                lambda x: x["m"],
-            ).alias("cv")
-        )
         # truncate lineage between rounds (k rows, distributed — the
         # collected path's between-round collect, without the driver)
-        cent_df = cent_df.transform(lineage_cut)
+        cent_df = _cell_means(merged, ("cell",), vec_col).transform(lineage_cut)
     final = assign_nearest_distributed(
         corpus, cent_df, coarse_rows, coarse_probe=coarse_probe,
         id_col=id_col, vec_col=vec_col, out_col=out_col,
@@ -2828,9 +2628,23 @@ def jl_project(vec: Column | str, planes: list[list[float]]) -> Column:
     ~1,100 py4j round trips, ~2 s of driver wall per call. The weights
     are exactly ±1.0 (seeded_hyperplanes), so the `1.0D` / `-1.0D` SQL
     literals are the same IEEE doubles F.lit produced; the lambda fold
-    order is unchanged. Accepts the column NAME (preferred) or any
-    Column whose SQL rendering is a bare attribute reference."""
-    vec_expr = vec if isinstance(vec, str) else vec._jc.toString()
+    order is unchanged. Accepts the column NAME (preferred) or a bare
+    column-reference Column; either resolves exactly as ``F.col`` would,
+    and every name part is backtick-quoted into the SQL, so names with
+    spaces or quoted dots stay one column. Any other Column (a function,
+    an alias, an arithmetic expression) raises ValueError — its SQL
+    rendering would otherwise be pasted into the fold unchecked."""
+    col = F.col(vec) if isinstance(vec, str) else vec
+    node = col._jc.node()
+    if node.getClass().getSimpleName() != "UnresolvedAttribute":
+        raise ValueError(
+            f"jl_project: {col} is not a bare column reference; pass the "
+            "column name or F.col(name)"
+        )
+    parts = node.nameParts()
+    vec_expr = ".".join(
+        "`" + parts.apply(i).replace("`", "``") + "`" for i in range(parts.size())
+    )
     projs = []
     for plane in planes:
         arr = ", ".join(f"{w!r}D" for w in plane)
@@ -3019,13 +2833,7 @@ def cosine_topk_sq8(
             F.round(F.abs(cos_q - cos_x), 6).alias("abs_err"),
         )
     )
-    return topk_per_group(
-        scored,
-        ["query_id"],
-        [F.col("cos_sq8").desc(), F.col("neighbor_id").asc()],
-        k=k,
-        rank_col="rank",
-    ).select("query_id", "neighbor_id", "cos_sq8", "cos_exact", "abs_err", "rank")
+    return _rank_neighbors(scored, "cos_sq8", k, cols=("cos_exact", "abs_err"))
 
 
 def _sq8_recon_sql(vec: str, dim: int = 64) -> str:
@@ -3297,18 +3105,7 @@ def pq_codebooks(
         )
     for _ in range(lloyd_iters):
         assigned = _pq_assign_codes(sub, cent, keys=(id_col,))
-        means = (
-            assigned.select("j", "cell", F.posexplode("sv").alias("pos", "val"))
-            .groupBy("j", "cell", "pos")
-            .agg(decimal_avg(F.col("val").cast("double")).alias("m"))
-        )
-        cent = means.groupBy("j", "cell").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                lambda x: x["m"],
-            ).alias("cv")
-        )
-        cent = cent.transform(lineage_cut)
+        cent = _cell_means(assigned, ("j", "cell"), "sv").transform(lineage_cut)
     return cent
 
 
@@ -3395,13 +3192,9 @@ def cosine_topk_pq(
             F.round(F.abs(cos_pq - cos_x), 6).alias("abs_err"),
         )
     )
-    return topk_per_group(
-        scored,
-        ["query_id"],
-        [F.col("cos_pq").desc(), F.col("neighbor_id").asc()],
-        k=k_neighbors,
-        rank_col="rank",
-    ).select("query_id", "neighbor_id", "cos_pq", "cos_exact", "abs_err", "rank")
+    return _rank_neighbors(
+        scored, "cos_pq", k_neighbors, cols=("cos_exact", "abs_err")
+    )
 
 
 def _l2_sql(av: str, bv: str, dim: int) -> str:
@@ -3523,13 +3316,7 @@ def cosine_topk_ivfpq(
     touches."""
     corpus = drop_null_vectors(corpus, vec_col)
     spark = corpus.sparkSession
-    seeds = corpus.filter(F.col(id_col) < n_centroids).select(id_col, vec_col)
-    seed_rows = [(r[0], [float(x) for x in r[1]]) for r in seeds.collect()]
-    cent_rows = (
-        lloyd_refine_rows(corpus, seed_rows, n_iters=lloyd_iters, vec_col=vec_col)
-        if lloyd_iters > 0
-        else sorted(seed_rows)
-    )
+    cent_rows = _train_centroids(corpus, n_centroids, lloyd_iters, id_col, vec_col)
     cent_df = F.broadcast(
         spark.createDataFrame(
             [(c, v) for c, v in cent_rows], "cell bigint, ccv array<double>"
@@ -3590,13 +3377,8 @@ def cosine_topk_ivfpq(
         .withColumn("xn", norm(F.col("xh")))
         .withColumn("cn", norm(F.col("cv")))
     )
-    probes = ivf_assign_arrow(
-        corpus.filter(F.col(id_col) < n_queries).select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-        ),
-        cent_rows,
-        vec_col="qv",
-        n_best=n_probe,
+    probes = _probe_cells(
+        corpus.filter(F.col(id_col) < n_queries), cent_rows, n_probe, id_col, vec_col
     ).withColumn("qn", norm(F.col("qv")))
     cos_a = F.try_divide(
         dot(F.col("qv"), F.col("xh")), F.col("qn") * F.col("xn")
@@ -3617,14 +3399,8 @@ def cosine_topk_ivfpq(
         )
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    return topk_per_group(
-        scored,
-        ["query_id"],
-        [F.col("cos_ivfpq").desc(), F.col("neighbor_id").asc()],
-        k=k_neighbors,
-        rank_col="rank",
-    ).select(
-        "query_id", "neighbor_id", "cos_ivfpq", "cos_exact", "abs_err", "rank"
+    return _rank_neighbors(
+        scored, "cos_ivfpq", k_neighbors, cols=("cos_exact", "abs_err")
     )
 
 
@@ -3929,30 +3705,14 @@ def ivf_recall_report(
     the number an operator actually serves at, truth side unchanged
     (brute force over the live float corpus)."""
     truth = cosine_topk(corpus, queries, k=k, id_col=id_col, vec_col=vec_col)
-    # one schema-only read (footer listing, no data) detects the codec
-    # and validates the artifact with the named error; the decode side
-    # of _codec_view is a lazy closure, so nothing unused is built
-    payload, _ = _codec_view(
-        _read_index(spark, path, "ivf_recall_report").columns,
-        bounds,
-        codebooks,
-        "ivf_recall_report",
+    # one schema-only read (footer listing, no data) detects the codec;
+    # the shared query body validates the artifact with the named error
+    op = "ivf_recall_report"
+    approx = _query_index(
+        spark, path, centroids, queries, k, n_probe, id_col, vec_col,
+        codec=_codec_payload(_read_index(spark, path, op).columns),
+        bounds=bounds, codebooks=codebooks, op=op,
     )
-    if payload == "codes":
-        approx = query_sq8_ivf_index(
-            spark, path, centroids, bounds, queries,
-            k=k, n_probe=n_probe, id_col=id_col, vec_col=vec_col,
-        )
-    elif payload == "pq_codes":
-        approx = query_pq_ivf_index(
-            spark, path, centroids, codebooks, queries,
-            k=k, n_probe=n_probe, id_col=id_col, vec_col=vec_col,
-        )
-    else:
-        approx = query_ivf_index(
-            spark, path, centroids, queries,
-            k=k, n_probe=n_probe, id_col=id_col, vec_col=vec_col,
-        )
     return _grade_recall(truth, approx)
 
 

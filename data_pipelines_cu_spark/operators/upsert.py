@@ -22,19 +22,6 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 
 
-def write_partitioned(
-    df: DataFrame, path: str, partition_cols: Sequence[str], fmt: str = "parquet"
-) -> None:
-    """Date/hour-partitioned sink (K3: path contains {date} in the
-    reference; here a real partitioned table so filters prune)."""
-    (
-        df.write.format(fmt)
-        .mode("append")
-        .partitionBy(*partition_cols)
-        .save(path)
-    )
-
-
 def upsert_partitions(
     df: DataFrame, path: str, partition_cols: Sequence[str], fmt: str = "parquet"
 ) -> None:
@@ -54,10 +41,6 @@ def upsert_partitions(
         .partitionBy(*partition_cols)
         .save(path)
     )
-
-
-def read_partitioned(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
-    return spark.read.format(fmt).load(path)
 
 
 def snapshot_diff(
@@ -153,7 +136,17 @@ def compact_partitions(
         )
         if data_files and root != path:
             part_dirs.add(root)
-    n_parts = max(1, len(part_dirs))  # floor guards a degenerate flat dir
+    # a flat (not yet hive-style) directory has no `col=value` leaf dirs,
+    # so the listing cannot see the partitions: count the distinct keys
+    # instead (one pass), or each partition is sized as the whole table
+    # and written with ~P-times too many files
+    n_parts = len(part_dirs)
+    prefix = f"{partition_cols[0]}=" if partition_cols else None
+    if prefix and not any(
+        os.path.relpath(d, path).startswith(prefix) for d in part_dirs
+    ):
+        n_parts = df.select(*partition_cols).distinct().count()
+    n_parts = max(1, n_parts)  # floor guards an empty table
     per_part = total_bytes / max(n_parts, 1)
     files_per_part = max(1, math.ceil(per_part / target_file_bytes))
     # Shuffle on (partition cols + within-partition salt), not the partition

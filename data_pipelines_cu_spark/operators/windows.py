@@ -428,25 +428,6 @@ def blocked_ntile(
     )
 
 
-def lead_shift(
-    df: DataFrame,
-    order_by: str,
-    col: str,
-    n: int = 1,
-    partition_by: Sequence[str] = (),
-    out_col: str | None = None,
-) -> DataFrame:
-    """Next-row value (reference ``close.shift(-1)`` → next-day price,
-    gold_war:143-146).
-
-    NB: an unpartitioned window is a single-task sort — fine for the
-    reference's daily table (~thousands of rows), wrong for a 100 TB fact
-    table; callers at scale must supply ``partition_by`` (e.g. symbol).
-    """
-    w = Window.partitionBy(*partition_by).orderBy(order_by)
-    return df.withColumn(out_col or f"{col}_next", F.lead(col, n).over(w))
-
-
 def dedup_keep_last(
     df: DataFrame, keys: Sequence[str], order_col: str
 ) -> DataFrame:

@@ -542,3 +542,57 @@ def test_expectations_catch_injected_violations(spark):
         ex.fk_expectation(clean, "fk", parent, "pk", "fk_parent"),
     ]).collect()
     assert all(r.passed == 1 and r.n_violations == 0 for r in rep2)
+
+
+def test_gram_and_minhash_sql_quote_identifiers(spark):
+    """gram_rows and the minhash aggregates interpolate column names into
+    SQL text: a name with a space or a dot must resolve as that one
+    column (backtick-quoted), not as a parse error or a struct field."""
+    from data_pipelines_cu_spark.operators import dedup as dd
+
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox"), (2, "a b c d")],
+        "`doc id` long, `body.text` string",
+    )
+    grams = dd.gram_rows(docs, "body.text", "doc id", 3)
+    assert grams.columns == ["doc id", "gram"]
+    assert sorted(map(tuple, grams.collect())) == [
+        (1, "quick brown fox"),
+        (1, "the quick brown"),
+        (2, "a b c"),
+        (2, "b c d"),
+    ]
+
+    gx = grams.select("doc id", dd._base_hash32("gram").alias("g x"))
+    spaced = gx.groupBy("doc id").agg(*dd._minhash_cols("g x"))
+    plain = gx.withColumnRenamed("g x", "gx").groupBy("doc id").agg(
+        *dd._minhash_cols("gx")
+    )
+    assert sorted(map(tuple, spaced.collect())) == sorted(
+        map(tuple, plain.collect())
+    )
+
+
+
+def test_jl_project_quotes_names_and_refuses_expressions(spark):
+    """jl_project interpolates its column into SQL text: a name with a
+    space or a dot must resolve as that one column, and a Column that is
+    not a bare column reference must raise instead of having its
+    rendering pasted into the fold."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    from data_pipelines_cu_spark.operators import similarity as sim
+
+    planes = sim.seeded_hyperplanes(n_bits=4, dim=3, seed=11)
+    vecs = spark.createDataFrame(
+        [(1, [0.5, -1.25, 3.0], [0.5, -1.25, 3.0])],
+        "id long, `my vec` array<double>, `a.b` array<double>",
+    )
+    want = vecs.select(sim.jl_project("my vec", planes).alias("p")).first()["p"]
+    assert len(want) == 4
+    got = vecs.select(sim.jl_project(F.col("`a.b`"), planes).alias("p")).first()
+    assert got["p"] == want
+    for bad in (F.reverse(F.col("my vec")), F.col("`my vec`").alias("v")):
+        with pytest.raises(ValueError, match="bare column reference"):
+            sim.jl_project(bad, planes)

@@ -271,6 +271,38 @@ def test_compact_partitions_splits_fat_partitions(spark, tmp_path):
     assert got.count() == 50_000
 
 
+def test_compact_partitions_sizes_flat_directory_per_partition(spark, tmp_path):
+    """A flat (not yet hive-style) directory has no `date=...` leaf dirs to
+    count, so the partition count must come from the data: with 8 keys
+    and a target of 1.5x one key's bytes, every partition fits in ONE
+    file. Sizing the whole table as one partition instead writes several
+    files into every partition."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from data_pipelines_cu_spark.operators.upsert import compact_partitions
+
+    path = str(tmp_path / "t")
+    spark.range(80_000).select(
+        (F.col("id") % 8).cast("string").alias("date"), F.col("id").alias("v")
+    ).coalesce(1).write.parquet(path)
+    total = sum(
+        os.path.getsize(os.path.join(root, f))
+        for root, _d, fs in os.walk(path)
+        for f in fs
+        if f.endswith(".parquet")
+    )
+    compact_partitions(spark, path, ["date"], target_file_bytes=total * 3 // 16)
+    per_partition = {
+        d: sum(1 for f in os.listdir(os.path.join(path, d)) if f.endswith(".parquet"))
+        for d in os.listdir(path)
+        if d.startswith("date=")
+    }
+    assert len(per_partition) == 8
+    assert set(per_partition.values()) == {1}, per_partition
+
+
 def test_write_range_clustered_files_have_disjoint_ranges(spark, tmp_path):
     """Range clustering must yield per-file value ranges that do not
     overlap — the property parquet min/max skipping depends on."""

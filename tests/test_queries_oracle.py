@@ -41,3 +41,45 @@ def test_query_matches_oracle(spark, duck, sf_dir, name):
         assert df.count() >= 0
         return
     assert_matches_oracle(df, duck, q.oracle)
+
+
+def test_ann_smoke_replays_match_oracle(spark, sf_dir, tmp_path):
+    """Tier-1 smoke replay of the ANN paths whose full-table replays are
+    tier 2 (SQ8, PQ, IVF): the same operators and oracle builders over a
+    64-vector embeddings slice, so the shared trainer, cell-mean step and
+    neighbour ranker stay hash-checked in the default run."""
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from data_pipelines_cu_spark.catalog import load_table
+    from data_pipelines_cu_spark.operators import similarity as sim
+
+    path = str(tmp_path / "emb64")
+    load_table(spark, sf_dir, "embeddings").filter(
+        F.col("vec_id") < 64
+    ).write.parquet(path)
+    em = spark.read.parquet(path)
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW emb64 AS SELECT * FROM '{path}/*.parquet'")
+    try:
+        cases = [
+            (
+                sim.cosine_topk_sq8(em, k=5, n_queries=5),
+                sim.sq8_topk_oracle_sql(k=5, n_queries=5, table="emb64"),
+            ),
+            (
+                sim.cosine_topk_pq(em, k_neighbors=5, n_queries=5),
+                sim.pq_topk_oracle_sql(k_neighbors=5, n_queries=5, table="emb64"),
+            ),
+            (
+                sim.cosine_topk_ivf(
+                    em, em.filter(F.col("vec_id") < 5), k=5, n_centroids=8, n_probe=2
+                ),
+                sim.cosine_topk_ivf_oracle_sql(k=5, n_queries=5, table="emb64"),
+            ),
+        ]
+        for df, sql in cases:
+            assert df.count() > 0
+            assert_matches_oracle(df, con, sql)
+    finally:
+        con.close()
