@@ -142,15 +142,15 @@ def _path_stamp(path: str) -> tuple:
     stamp: tuple = (st.st_mtime_ns, st.st_size)
     if os.path.isdir(path):
         try:
-            children = tuple(
-                sorted(
-                    (e.name, e.stat().st_mtime_ns, e.stat().st_size)
-                    for e in os.scandir(path)
-                )
-            )
+            children = []
+            for e in os.scandir(path):
+                cst = e.stat()
+                children.append((e.name, cst.st_mtime_ns, cst.st_size))
         except OSError:
             return (None, None)
-        stamp = (*stamp, hash(children))
+        # the listing itself, not a hash of it: two listings that collide
+        # under hash() would serve a stale handle
+        stamp = (*stamp, tuple(sorted(children)))
     return stamp
 
 

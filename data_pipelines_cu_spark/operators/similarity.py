@@ -413,24 +413,45 @@ def cosine_topk_arrow(
     return _arrow_topk(corpus, queries, k, id_col, vec_col, _blas_cosine_kernel)
 
 
-# Optimized-logical-plan node names that imply an exchange (or an
-# already-wide layout) somewhere in the frame: on such a frame the
-# `.rdd` probe below is NOT job-free — under AQE, producing the final
-# RDD materializes upstream shuffle stages at call time — and the
-# post-shuffle layout is already spark.sql.shuffle.partitions wide, so
-# widening has nothing to fix. Checked textually on the optimized plan
-# (driver-side analysis only, never executes a stage).
-_WIDEN_BARRIER_NODES = (
-    "Join",
-    "Aggregate",
-    "Window",
-    "Sort",
-    "Deduplicate",
-    "Repartition",
-    "RepartitionByExpression",
-    "Exchange",
-    "GlobalLimit",
+# Optimized-logical-plan nodes a frame may hold for `_widen_if_narrow` to
+# touch it: scans (file, local, checkpointed and range leaves),
+# projections, filters and generators. Any other node — a join, an
+# aggregate, a window, a sort, a repartition, a limit — may put an
+# exchange (or an already-wide layout) in the frame, and on such a frame
+# the `.rdd` probe is NOT job-free: under AQE, producing the final RDD
+# materializes upstream shuffle stages at call time. A cached frame
+# (InMemoryRelation) is refused too: building its RDD executes the
+# cached plan, which may shuffle.
+_WIDEN_SAFE_NODES = frozenset(
+    {
+        "LogicalRelation",
+        "LogicalRDD",
+        "LocalRelation",
+        "DataSourceV2Relation",
+        "DataSourceV2ScanRelation",
+        "Range",
+        "Project",
+        "Filter",
+        "Generate",
+    }
 )
+
+
+def _scan_rooted(df: DataFrame) -> bool:
+    """True when every node of the optimized plan is in
+    ``_WIDEN_SAFE_NODES`` and none carries a subquery (a scalar subquery
+    runs its own job when the plan executes). Walks the plan's node
+    names driver-side; never executes a stage."""
+    stack = [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() not in _WIDEN_SAFE_NODES:
+            return False
+        if node.subqueries().nonEmpty():
+            return False
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return True
 
 
 def _widen_if_narrow(df: DataFrame) -> DataFrame:
@@ -442,21 +463,13 @@ def _widen_if_narrow(df: DataFrame) -> DataFrame:
     scale a real scan already has >= cores partitions and this is a no-op.
 
     PRECONDITION (enforced): the frame must be scan-rooted — scans,
-    projections, filters, generators only. On a shuffle-rooted frame the
-    ``.rdd`` partition probe is not job-free (AQE materializes the plan's
-    shuffle stages to produce the final RDD), so any barrier node in the
-    optimized plan makes this a no-op instead (r13 verdict item 3: the
-    helper was a footgun if applied after a shuffle; now it refuses)."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
+    projections, filters, generators only (``_scan_rooted``). On any
+    other frame the ``.rdd`` partition probe is not job-free (AQE
+    materializes the plan's shuffle stages to produce the final RDD), so
+    this is a no-op instead."""
+    target = df.sparkSession.sparkContext.defaultParallelism
     try:
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-    except Exception:  # noqa: BLE001 — planning hiccup: keep the plan as-is
-        return df
-    if any(node in plan for node in _WIDEN_BARRIER_NODES):
-        return df
-    try:
-        if df.rdd.getNumPartitions() >= target:
+        if not _scan_rooted(df) or df.rdd.getNumPartitions() >= target:
             return df
     except Exception:  # noqa: BLE001 — planning hiccup: keep the plan as-is
         return df

@@ -1691,7 +1691,7 @@ def min_cost_supplier_per_part(spark, sf_dir):
     """
     SELECT cn.n_name AS cust_nation, sn.n_name AS supp_nation,
            ROUND(SUM(CAST(l.l_extendedprice * (1 - l.l_discount)
-                          AS DECIMAL(18,6)))::DOUBLE, 2) AS revenue,
+                          AS DECIMAL(18,6))), 2)::DOUBLE AS revenue,
            COUNT(*) AS n_lines
     FROM lineitem l
     JOIN orders o   ON l.l_orderkey = o.o_orderkey
@@ -1722,15 +1722,20 @@ def nation_trade_flow(spark, sf_dir):
         .groupBy("cust_nation", "supp_nation")
         .agg(
             # decimal accumulation: exact, summation-order-independent —
-            # float sums can differ in the last 2dp digit across engines
+            # float sums can differ in the last 2dp digit across engines.
+            # Round the exact decimal, then cast: rounding the double
+            # splits at a half cent (Spark rounds the double's shortest
+            # decimal form half-up, DuckDB the binary value just below).
             F.round(
                 F.sum(
                     (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
                         "decimal(18,6)"
                     )
-                ).cast("double"),
+                ),
                 2,
-            ).alias("revenue"),
+            )
+            .cast("double")
+            .alias("revenue"),
             F.count(F.lit(1)).alias("n_lines"),
         )
     )

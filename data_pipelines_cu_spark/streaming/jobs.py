@@ -15,17 +15,79 @@ The reference's cadences map to streaming semantics:
 
 Tests drive these with availableNow over temp dirs — the same code path a
 1000-executor cluster runs against object storage.
+
+Stream width. Every stream starts through ``_start_stream``, which starts
+the query with ``spark.sql.shuffle.partitions`` = min(session value,
+``defaultParallelism``). A stateful query fixes its state-partition count
+when its checkpoint is created and records the width in the offset log;
+Spark restores the recorded width on every restart, so only a fresh
+checkpoint takes the narrowed width, it keeps it for the checkpoint's
+life, and an existing checkpoint keeps whatever width it recorded.
+Micro-batches run without AQE, so nothing coalesces a wide stateful stage
+or a wide shuffle inside a ``foreachBatch`` body: every task reloads its
+state-store partition and commits a delta file each batch, which on small
+batches is all fixed cost. More partitions than cores cannot run at once,
+so narrowing to the cores loses no parallelism now; a cluster that grows
+later keeps the old width for that checkpoint (start a fresh checkpoint to
+re-size). Results do not depend on the width. The conf is session-global:
+the starter reads, narrows, starts and restores it in ``finally`` under
+one module lock, so streams started from several threads never leave the
+caller's session narrowed.
 """
 
 from __future__ import annotations
+
+import threading
+from collections.abc import Callable
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..operators.aggregates import decimal_avg
+
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+# Serialises the read / narrow / start / restore of the session-global
+# shuffle width in _start_stream: unlocked, two streams started at once
+# (a Pipeline with max_parallel > 1) can interleave so the second reads
+# the first's narrowed value and restores THAT, leaving the caller's
+# session narrowed.
+_START_LOCK = threading.Lock()
+
+
+def _start_stream(
+    df: DataFrame,
+    checkpoint: str,
+    available_now: bool,
+    process: Callable[[DataFrame, int], None] | None = None,
+    sink: Callable[[DataStreamWriter], DataStreamWriter] | None = None,
+) -> StreamingQuery:
+    """Start every stream of this module: append mode, ``checkpoint``,
+    ``availableNow`` when asked, and the micro-batch body ``process``
+    (foreachBatch) or a built-in ``sink`` that configures the writer.
+
+    The query starts with spark.sql.shuffle.partitions narrowed to
+    min(session value, defaultParallelism) and the caller's value is
+    restored before returning. start() clones the session for the stream
+    before it returns, so the narrowing reaches only this query; see the
+    module docstring for why and for how restarts keep their width."""
+    spark = df.sparkSession
+    writer = df.writeStream.outputMode("append").option(
+        "checkpointLocation", checkpoint
+    )
+    writer = writer.foreachBatch(process) if process is not None else sink(writer)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    with _START_LOCK:
+        prior = spark.conf.get(_SHUFFLE_PARTITIONS)
+        width = min(int(prior), spark.sparkContext.defaultParallelism)
+        spark.conf.set(_SHUFFLE_PARTITIONS, str(width))
+        try:
+            return writer.start()
+        finally:
+            spark.conf.set(_SHUFFLE_PARTITIONS, prior)
 
 
 def _never_landed(exc: AnalysisException) -> bool:
@@ -108,16 +170,14 @@ def run_hourly_to_sink(
     close). availableNow processes the backlog then stops — the
     catchup=True analog."""
     agg = hourly_window_agg(ticks)
-    writer = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
+    return _start_stream(
+        agg,
+        checkpoint,
+        available_now,
+        sink=lambda w: w.format("parquet")
         .option("path", sink_path)
-        .option("checkpointLocation", checkpoint)
-        .partitionBy("date")
+        .partitionBy("date"),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 EVENT_SCHEMA = T.StructType(
@@ -374,14 +434,7 @@ def run_cascade(
         finally:
             batch.unpersist()
 
-    writer = (
-        agg.writeStream.outputMode("append")
-        .foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_stream(agg, checkpoint, available_now, process)
 
 
 def near_dup_batch(
@@ -466,14 +519,7 @@ def run_streaming_near_dup(
     def process(batch: DataFrame, batch_id: int) -> None:
         near_dup_batch(batch, batch_id, survivors_path, index_path)
 
-    writer = (
-        docs.writeStream.outputMode("append")
-        .foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_stream(docs, checkpoint, available_now, process)
 
 
 def run_to_versioned_table(
@@ -506,14 +552,7 @@ def run_to_versioned_table(
         finally:
             batch.unpersist()
 
-    writer = (
-        events.writeStream.outputMode("append")
-        .foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_stream(events, checkpoint, available_now, process)
 
 
 def hist_sketch_batch(
@@ -565,14 +604,7 @@ def run_streaming_hist_sketch(
     def process(batch: DataFrame, batch_id: int) -> None:
         hist_sketch_batch(batch, batch_id, counts_path, lo, hi, n_bins)
 
-    writer = (
-        events.writeStream.outputMode("append")
-        .foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_stream(events, checkpoint, available_now, process)
 
 
 def kmv_sketch_batch(
@@ -618,14 +650,7 @@ def run_streaming_kmv(
     def process(batch: DataFrame, batch_id: int) -> None:
         kmv_sketch_batch(batch, batch_id, sketch_path, group_cols, value_col, k)
 
-    writer = (
-        rows.writeStream.outputMode("append")
-        .foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_stream(rows, checkpoint, available_now, process)
 
 
 def daily_count_batch(
@@ -663,14 +688,7 @@ def run_streaming_daily_anomalies(
     def process(batch: DataFrame, batch_id: int) -> None:
         daily_count_batch(batch, batch_id, counts_path)
 
-    writer = (
-        events.writeStream.outputMode("append")
-        .foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_stream(events, checkpoint, available_now, process)
 
 
 def run_streaming_cusum(
@@ -690,14 +708,7 @@ def run_streaming_cusum(
     def process(batch: DataFrame, batch_id: int) -> None:
         daily_count_batch(batch, batch_id, counts_path)
 
-    writer = (
-        events.writeStream.outputMode("append")
-        .foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_stream(events, checkpoint, available_now, process)
 
 
 def cusum_from_counts(spark, counts_path: str) -> DataFrame:
@@ -838,14 +849,7 @@ def run_streaming_priority_sample(
             batch, batch_id, sample_path, weight_col, id_col, k
         )
 
-    writer = (
-        rows.writeStream.outputMode("append")
-        .foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_stream(rows, checkpoint, available_now, process)
 
 
 def priority_sample_from_batches(
@@ -927,14 +931,7 @@ def run_streaming_psi(
             batch, batch_id, counts_path, edges_path, value_col, n_bins
         )
 
-    writer = (
-        rows.writeStream.outputMode("append")
-        .foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_stream(rows, checkpoint, available_now, process)
 
 
 def psi_report_from_batches(
@@ -1163,14 +1160,7 @@ def run_streaming_pack_manifest(
             batch, batch_id, counts_path, token_col, shard_col
         )
 
-    writer = (
-        packed.writeStream.outputMode("append")
-        .foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_stream(packed, checkpoint, available_now, process)
 
 
 def run_streaming_tv_drift(
@@ -1199,14 +1189,7 @@ def run_streaming_tv_drift(
         )
         upsert_partitions(partial, counts_path, ["batch_id"])
 
-    writer = (
-        docs.writeStream.outputMode("append")
-        .foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_stream(docs, checkpoint, available_now, process)
 
 
 def tv_drift_from_batches(spark, counts_path: str) -> DataFrame:
@@ -1501,14 +1484,7 @@ def run_streaming_ivf_upsert(
             )
             upsert_partitions(row, drift_monitor_path, ["batch_id"])
 
-    writer = (
-        vectors.writeStream.outputMode("append")
-        .foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_stream(vectors, checkpoint, available_now, process)
 
 
 def run_streaming_ann_query(
@@ -1632,14 +1608,7 @@ def run_streaming_ann_query(
         finally:
             batch.unpersist()
 
-    writer = (
-        queries.writeStream.outputMode("append")
-        .foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_stream(queries, checkpoint, available_now, process)
 
 
 def run_streaming_bpe_encode(
@@ -1682,14 +1651,7 @@ def run_streaming_bpe_encode(
         ).withColumn("batch_id", F.lit(batch_id))
         upsert_partitions(encoded, out_path, ["batch_id"])
 
-    writer = (
-        docs.writeStream.outputMode("append")
-        .foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_stream(docs, checkpoint, available_now, process)
 
 
 def pack_manifest_from_batches(

@@ -83,3 +83,42 @@ def test_ann_smoke_replays_match_oracle(spark, sf_dir, tmp_path):
             assert_matches_oracle(df, con, sql)
     finally:
         con.close()
+
+
+def test_nation_trade_flow_rounds_half_cent_like_oracle(spark, tmp_path):
+    """A (nation, nation) revenue whose exact decimal sum ends in a half
+    cent (4353887.225) must round the same on both engines. Rounding the
+    DOUBLE of the sum split them: the double is 4353887.2249999996…, which
+    DuckDB rounds down, while Spark rounds its shortest decimal form up."""
+    import duckdb
+    import pandas as pd
+
+    from data_pipelines_cu_spark.queries import QUERIES as REGISTRY
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    tables = {
+        "nation": pd.DataFrame({"n_nationkey": [0, 1], "n_name": ["N0", "N1"]}),
+        "customer": pd.DataFrame({"c_custkey": [7], "c_nationkey": [0]}),
+        "supplier": pd.DataFrame({"s_suppkey": [3], "s_nationkey": [1]}),
+        "orders": pd.DataFrame({"o_orderkey": [11, 12], "o_custkey": [7, 7]}),
+        "lineitem": pd.DataFrame(
+            {
+                "l_orderkey": [11, 12],
+                "l_suppkey": [3, 3],
+                "l_extendedprice": [4353887.0, 0.25],
+                "l_discount": [0.0, 0.1],
+            }
+        ),
+    }
+    con = duckdb.connect()
+    try:
+        for name, pdf in tables.items():
+            pdf.to_parquet(sf / f"{name}.parquet", index=False)
+            con.sql(f"CREATE VIEW {name} AS SELECT * FROM '{sf}/{name}.parquet'")
+        q = REGISTRY["nation_trade_flow"]
+        df = q.fn(spark, str(sf))
+        assert [r.revenue for r in df.collect()] == [4353887.23]
+        assert_matches_oracle(df, con, q.oracle)
+    finally:
+        con.close()

@@ -124,6 +124,72 @@ def test_handle_cache_targeted_eviction(spark, tmp_path):
     assert ha is not None  # silence linters; the old handle simply ages out
 
 
+def test_widen_reads_plan_nodes_not_column_names(spark, tmp_path):
+    """The scan-rooted check walks plan NODE names: a narrow scan whose
+    columns are named like barrier nodes (SortKey, JoinDate) is still
+    widened, with no job run by the check."""
+    p = str(tmp_path / "named.parquet")
+    spark.range(10).selectExpr("id AS SortKey", "id AS JoinDate").coalesce(
+        1
+    ).write.parquet(p)
+    narrow = spark.read.parquet(p).filter("SortKey > 2")
+    before = _job_count(spark)
+    widened = sim._widen_if_narrow(narrow)
+    assert _job_count(spark) == before, "the plan check ran a job"
+    par = spark.sparkContext.defaultParallelism
+    assert widened.rdd.getNumPartitions() == par
+
+
+def test_widen_refuses_scalar_subquery_frames(spark, tmp_path):
+    """A scan-rooted frame whose filter holds a scalar subquery is
+    refused: the subquery's aggregate runs its own job at execution."""
+    p = str(tmp_path / "t.parquet")
+    spark.range(10).coalesce(1).write.parquet(p)
+    spark.read.parquet(p).createOrReplaceTempView("widen_sq")
+    try:
+        framed = spark.sql(
+            "SELECT id FROM widen_sq WHERE id > (SELECT avg(id) FROM widen_sq)"
+        )
+        assert sim._widen_if_narrow(framed) is framed
+    finally:
+        spark.catalog.dropTempView("widen_sq")
+
+
+def test_dir_table_stamp_keeps_listing_not_its_hash(
+    spark, tmp_path, monkeypatch
+):
+    """The directory stamp holds the children listing itself: with
+    catalog's ``hash`` forced to a constant (every listing colliding), a
+    part file rewritten in place still invalidates load_table's cached
+    frame."""
+    import os
+
+    import pandas as pd
+
+    sf = tmp_path / "sf"
+    table = sf / "nation.parquet"
+    table.mkdir(parents=True)
+
+    def land(part, keys):
+        pd.DataFrame(
+            {"n_nationkey": keys, "n_name": [f"N{k}" for k in keys]}
+        ).to_parquet(table / f"part-{part}.parquet", index=False)
+
+    land(0, [0, 1])
+    land(1, [2])
+    monkeypatch.setattr(catalog, "hash", lambda _: 0, raising=False)
+    first = catalog.load_table(spark, str(sf), "nation")
+    assert first.count() == 3
+    root = os.stat(table)
+    land(0, [5, 6, 7, 8])
+    st = os.stat(table / "part-0.parquet")
+    os.utime(table / "part-0.parquet", ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    assert os.stat(table).st_mtime_ns == root.st_mtime_ns  # root unchanged
+    fresh = catalog.load_table(spark, str(sf), "nation")
+    assert fresh is not first, "stale cached frame served after a rewrite"
+    assert sorted(r.n_nationkey for r in fresh.collect()) == [2, 5, 6, 7, 8]
+
+
 def test_minhash_sql_exprs_match_column_form(spark):
     """The r14 SQL-string construction of the minhash aggregate and band
     expressions must build the IDENTICAL analyzed trees (and therefore

@@ -3,6 +3,7 @@ agg parity with the batch operator, and the hourly→daily cascade."""
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
 
@@ -923,3 +924,214 @@ def test_streaming_cusum_matches_batch_changepoint(spark, tmp_path):
     daily_count_batch(b0, 0, counts_path)
     after = sorted(map(tuple, spark.read.parquet(counts_path).collect()))
     assert before == after
+
+
+# --- Stream width: _start_stream sizes a fresh checkpoint to the cores ------
+
+
+def _recorded_width(checkpoint: str, batch_id: int | str = 0) -> int:
+    """spark.sql.shuffle.partitions as recorded in the checkpoint's offset
+    log for ``batch_id`` (line 2 of the entry is its metadata JSON)."""
+    with open(os.path.join(checkpoint, "offsets", str(batch_id))) as f:
+        meta = json.loads(f.read().splitlines()[1])
+    return int(meta["conf"]["spark.sql.shuffle.partitions"])
+
+
+def _write_day(spark, path, date, part):
+    """One day of minute ticks plus the sentinel that closes its last
+    windows, as one file whose mtime orders it after earlier days."""
+    ticks = generate_minute_ticks(spark, date).select(
+        F.date_format("fetch_time", "yyyy-MM-dd HH:mm:ss").alias("fetch_time"),
+        "price_float",
+    )
+    rows = [
+        {"fetch_time": r.fetch_time, "price_float": r.price_float}
+        for r in ticks.collect()
+    ]
+    nxt = datetime.date.fromisoformat(date) + datetime.timedelta(days=1)
+    rows.append({"fetch_time": f"{nxt} 02:30:00", "price_float": 1.0})
+    fname = os.path.join(path, f"part-{part}.json")
+    with open(fname, "w") as f:
+        for r in rows:
+            f.write(json.dumps(r) + "\n")
+    os.utime(fname, (1_700_000_000 + part, 1_700_000_000 + part))
+
+
+def _cascade(spark, root, src, width_first=None):
+    """Run the cascade over ``src`` once per landed day (two days), like
+    the daily ingest cycle. ``width_first`` forces the width the
+    checkpoint is created at, by making the cluster look that wide.
+    Returns (hourly rows, daily rows, width recorded per batch)."""
+    from pyspark import SparkContext
+
+    ckpt = str(root / "ckpt")
+    hourly_path, daily_path = str(root / "hourly"), str(root / "daily")
+    for day, date in enumerate(["2024-02-01", "2024-02-02"]):
+        _write_day(spark, str(src), date, day)
+        prior = SparkContext.defaultParallelism
+        if day == 0 and width_first is not None:
+            SparkContext.defaultParallelism = property(lambda self: width_first)
+        try:
+            q = jobs.run_cascade(
+                jobs.read_tick_stream(spark, str(src)),
+                hourly_path,
+                daily_path,
+                ckpt,
+            )
+        finally:
+            SparkContext.defaultParallelism = prior
+        q.awaitTermination(180)
+        assert q.exception() is None
+    batches = [b for b in os.listdir(os.path.join(ckpt, "offsets")) if b.isdigit()]
+    widths = [_recorded_width(ckpt, b) for b in sorted(batches, key=int)]
+    hourly = sorted(map(tuple, spark.read.parquet(hourly_path).collect()))
+    daily = sorted(map(tuple, spark.read.parquet(daily_path).collect()))
+    return hourly, daily, widths
+
+
+def _with_width(spark, value: str):
+    """Set the session's shuffle width; returns the restore callable."""
+    prior = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", value)
+    return lambda: spark.conf.set("spark.sql.shuffle.partitions", prior)
+
+
+def test_fresh_cascade_checkpoint_records_core_width(spark, tmp_path):
+    """A new checkpoint is created at min(session width, cores), read
+    from the offset log's conf map, and the caller's width is untouched."""
+    src = tmp_path / "in"
+    src.mkdir()
+    _write_day(spark, str(src), "2024-02-01", 0)
+    restore = _with_width(spark, "32")
+    try:
+        q = jobs.run_cascade(
+            jobs.read_tick_stream(spark, str(src)),
+            str(tmp_path / "hourly"),
+            str(tmp_path / "daily"),
+            str(tmp_path / "ckpt"),
+        )
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
+        q.awaitTermination(180)
+    finally:
+        restore()
+    want = min(32, spark.sparkContext.defaultParallelism)
+    assert _recorded_width(str(tmp_path / "ckpt")) == want
+    assert spark.read.parquet(str(tmp_path / "daily")).count() == 1
+
+
+def test_wide_checkpoint_resumes_at_its_recorded_width(spark, tmp_path):
+    """A checkpoint created 32 wide (the width every stream used before
+    the starter narrowed fresh ones) keeps 32 when resumed through the
+    starter, and lands the same hourly and daily rows as a checkpoint
+    created at the narrow width."""
+    restore = _with_width(spark, "32")
+    try:
+        (tmp_path / "wide_in").mkdir()
+        (tmp_path / "narrow_in").mkdir()
+        wide = _cascade(
+            spark, tmp_path / "wide", tmp_path / "wide_in", width_first=64
+        )
+        narrow = _cascade(spark, tmp_path / "narrow", tmp_path / "narrow_in")
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
+    finally:
+        restore()
+    core = min(32, spark.sparkContext.defaultParallelism)
+    assert set(wide[2]) == {32} and len(wide[2]) >= 2
+    assert set(narrow[2]) == {core}
+    assert wide[0] == narrow[0] and len(wide[0]) == 48
+    assert wide[1] == narrow[1] and len(wide[1]) == 2
+
+
+def test_cascade_output_independent_of_width(spark, tmp_path):
+    """Guard on the invariance the narrowing relies on: the cascade's
+    hourly and daily output at the session's narrow width equals its
+    output at 32 partitions."""
+    (tmp_path / "w_in").mkdir()
+    (tmp_path / "n_in").mkdir()
+    restore = _with_width(spark, "32")
+    try:
+        wide = _cascade(spark, tmp_path / "w", tmp_path / "w_in", width_first=64)
+    finally:
+        restore()
+    restore = _with_width(spark, "2")
+    try:
+        narrow = _cascade(spark, tmp_path / "n", tmp_path / "n_in")
+    finally:
+        restore()
+    assert set(wide[2]) == {32} and set(narrow[2]) == {2}
+    assert wide[0] == narrow[0] and wide[1] == narrow[1]
+
+
+def test_concurrent_stream_starts_restore_caller_width(
+    spark, tmp_path, monkeypatch
+):
+    """Two threads start streams together (a Pipeline with
+    max_parallel > 1): both checkpoints take the core width and the
+    caller's session keeps its own width afterwards. The second thread
+    enters the starter while the first is inside start(), where an
+    unlocked starter would read the first one's narrowed width and
+    restore that."""
+    import threading
+    import time
+
+    from pyspark.sql.streaming import DataStreamWriter
+
+    src = tmp_path / "in"
+    src.mkdir()
+    _write_day(spark, str(src), "2024-02-01", 0)
+    real_start = DataStreamWriter.start
+    first_in_start = threading.Event()
+
+    def slow_start(self, *args, **kwargs):
+        first_in_start.set()
+        time.sleep(0.5)
+        return real_start(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataStreamWriter, "start", slow_start)
+    queries, errors = [], []
+
+    def start(wait, fn, *paths):
+        try:
+            if wait:
+                assert first_in_start.wait(60)
+            queries.append(fn(jobs.read_tick_stream(spark, str(src)), *paths))
+        except Exception as exc:  # noqa: BLE001 — re-raised below
+            errors.append(exc)
+
+    restore = _with_width(spark, "32")
+    try:
+        threads = [
+            threading.Thread(
+                target=start,
+                args=(
+                    False,
+                    jobs.run_cascade,
+                    str(tmp_path / "hourly_a"),
+                    str(tmp_path / "daily_a"),
+                    str(tmp_path / "ckpt_a"),
+                ),
+            ),
+            threading.Thread(
+                target=start,
+                args=(
+                    True,
+                    jobs.run_hourly_to_sink,
+                    str(tmp_path / "hourly_b"),
+                    str(tmp_path / "ckpt_b"),
+                ),
+            ),
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(120)
+            assert not t.is_alive(), "a stream start hung"
+        for q in queries:
+            q.awaitTermination(180)
+        assert not errors, errors
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
+    finally:
+        restore()
+    want = min(32, spark.sparkContext.defaultParallelism)
+    assert _recorded_width(str(tmp_path / "ckpt_a")) == want
+    assert _recorded_width(str(tmp_path / "ckpt_b")) == want
