@@ -111,7 +111,9 @@ def compact_partitions(
     (the reference's per-minute CSV appends are the degenerate case);
     at 100 TB unbounded small files dominate scan planning time. The
     rewrite is idempotent — dynamic partition overwrite replaces each
-    partition atomically. Returns the number of files written.
+    partition atomically. A flat directory's root data files are
+    deleted once the partitioned rewrite has succeeded, so the table is
+    not left on disk twice. Returns the number of files written.
     """
     import math
     import os
@@ -154,6 +156,13 @@ def compact_partitions(
     # partition to ONE task, so a fat partition could never split into
     # files_per_part files. The salt is a stable row-hash bucket.
     salt = F.pmod(F.hash(*[F.col(c) for c in df.columns]), F.lit(files_per_part))
+    # the rewrite lands in partition dirs only; root files are pre-rewrite
+    root_files = [
+        f
+        for f in os.listdir(path)
+        if not f.startswith(("_", "."))
+        and os.path.isfile(os.path.join(path, f))
+    ]
     (
         df.repartition(n_parts * files_per_part, *partition_cols, salt)
         .write.format(fmt)
@@ -162,6 +171,11 @@ def compact_partitions(
         .partitionBy(*partition_cols)
         .save(path)
     )
+    for f in root_files:
+        os.remove(os.path.join(path, f))
+        crc = os.path.join(path, f".{f}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
     out = 0
     for root, _dirs, files in os.walk(path):
         out += sum(1 for f in files if f.endswith(f".{fmt}") or f.endswith(".parquet"))

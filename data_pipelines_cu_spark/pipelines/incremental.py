@@ -142,20 +142,7 @@ def read_corpus(spark: SparkSession, state_dir: str, fs=None) -> DataFrame:
     Production keeps waves as partitions of one table; here versions ARE
     the waves, so the committed corpus is their union. Raises
     FileNotFoundError when no wave has ever committed."""
-    ledger = multi_table_batches(state_dir, fs=fs)
-    versions = sorted(
-        vs["corpus"] for vs in ledger.values() if "corpus" in vs
-    )
-    if not versions:
-        raise FileNotFoundError(f"no committed corpus waves at {state_dir}")
-    parts = [
-        read_multi_table(spark, state_dir, "corpus", version=v, fs=fs)
-        for v in versions
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return _read_all_waves(spark, state_dir, "corpus", fs=fs)
 
 
 # --- Curation v2, incremental ------------------------------------------------

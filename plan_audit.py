@@ -77,7 +77,9 @@ from __future__ import annotations
 import json
 import re
 import sys
+import urllib.error
 import urllib.request
+import uuid
 from collections import Counter
 from pathlib import Path
 
@@ -162,23 +164,29 @@ TRIAGED_SCANS = {
 }
 
 
-def _ui(base: str, app_id: str, path: str):
-    # base comes from sparkContext.uiWebUrl — never a hardcoded port:
-    # a second concurrent driver pushes this app's UI to 4041+
-    url = f"{base}/api/v1/applications/{app_id}{path}"
+def _drain(spark) -> None:
+    """Block until the listener bus has delivered every event posted so
+    far, so the status store (read by the REST API and the status
+    tracker) holds every execution, job, stage and task that has run."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+
+
+def _ui(spark, path: str):
+    """One status-REST read for this application, after a bus drain. The
+    base URL comes from ``uiWebUrl``, never a hardcoded port: a second
+    driver on the box moves this app's UI to 4041+."""
+    sc = spark.sparkContext
+    _drain(spark)
+    url = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}{path}"
     with urllib.request.urlopen(url, timeout=15) as r:
         return json.load(r)
 
 
-def _sql_executions(base: str, app_id: str, offset: int = 0) -> list:
-    """/sql executions from ``offset`` (paged). Execution ids are assigned
-    monotonically and the endpoint lists them in order, so callers track
-    their next offset and fetch incrementally — re-fetching the whole list
-    from 0 after every query made the REST traffic quadratic over a
-    200-query run (eager-checkpoint queries add many executions each)."""
+def _sql_executions(spark, offset: int = 0) -> list:
+    """/sql executions from ``offset`` (paged), in id order."""
     out: list = []
     while True:
-        page = _ui(base, app_id, f"/sql?offset={offset + len(out)}&length=100")
+        page = _ui(spark, f"/sql?offset={offset + len(out)}&length=100")
         out.extend(page)
         if len(page) < 100:
             break
@@ -186,142 +194,72 @@ def _sql_executions(base: str, app_id: str, offset: int = 0) -> list:
 
 
 class ExecCursor:
-    """Incremental, EVICTION-SAFE reader of new /sql executions.
+    """Incremental reader of the /sql executions that started after it
+    was made. Reads follow a bus drain, so every started execution is
+    listed. Once ``spark.sql.ui.retainedExecutions`` is reached each new
+    execution evicts the oldest and the list shifts left, so the cursor
+    re-reads the last row it delivered (``offset - 1``): if that row is
+    no longer ``last_id``, one full listing filtered by id replaces the
+    page."""
 
-    Offsets alone are not a stable cursor: once the UI's
-    ``spark.sql.ui.retainedExecutions`` cap is reached, every new
-    execution evicts the oldest and the whole list SHIFTS LEFT, so a
-    remembered offset silently skips (or misses entirely) the new tail —
-    detector 3/4 would go blind exactly on long audits, where eager-
-    checkpoint queries push past the cap. Execution ids are consecutive
-    integers, so the cursor verifies continuity (first new id ==
-    last_id + 1) on the fast offset path and permanently degrades to
-    fetch-all-filter-by-id — bounded by the retention cap, not by run
-    length — the first time the check fails."""
-
-    #: seconds an empty-page disambiguation stays cached — idle polling
-    #: loops stop paying a full fetch per call, while audit-style callers
-    #: (one call per multi-second query) always disambiguate fresh
-    EMPTY_CACHE_SEC = 0.5
-
-    def __init__(self, base: str, app_id: str) -> None:
-        self.base, self.app_id = base, app_id
-        full = _sql_executions(base, app_id)
+    def __init__(self, spark) -> None:
+        self.spark = spark
+        full = _sql_executions(spark)
         self.offset = len(full)
-        self.last_id = max((e["id"] for e in full), default=-1)
-        self.evicting = False
-        self._empty_confirmed_at: float | None = None
-        # ids the high-water mark jumped OVER (an execution that had not
-        # surfaced when a later one was read): delivered when they appear
-        # instead of being excluded forever by the id > last_id filter
-        self._gap_ids: set[int] = set()
-        # smallest id ever observed in a listing: eviction is confirmed
-        # only when the CURRENT oldest moved past it — i.e. an id we
-        # actually saw has vanished. "oldest > last_id+1" alone is
-        # ambiguous: at a fresh store the first ids may simply not have
-        # surfaced yet, and treating that as eviction would prune their
-        # gap entries and lose them (caught by the exactly-once property
-        # test).
-        self._min_seen: int | None = min(
-            (e["id"] for e in full), default=None
-        )
-
-    def _observe_oldest(self, oldest: int | None) -> None:
-        """Fold a full listing's oldest id into the eviction evidence:
-        a previously-SEEN id now gone proves the window shifted."""
-        if oldest is None:
-            return
-        if self._min_seen is not None and oldest > self._min_seen:
-            self.evicting = True
-        self._min_seen = (
-            oldest if self._min_seen is None else min(self._min_seen, oldest)
-        )
-
-    def _take(self, listing: list, oldest: int | None = None) -> list:
-        """Fresh items from ``listing``: ids past the high-water mark
-        PLUS any previously-skipped gap ids that have now surfaced.
-        Advances last_id, records newly-skipped ids as gaps, and prunes
-        gaps that can no longer surface."""
-        fresh = [
-            e
-            for e in listing
-            if e["id"] > self.last_id or e["id"] in self._gap_ids
-        ]
-        got = {e["id"] for e in fresh}
-        self._gap_ids -= got
-        new_last = max((i for i in got), default=self.last_id)
-        if new_last > self.last_id:
-            self._gap_ids |= (
-                set(range(self.last_id + 1, new_last)) - got
-            )
-            self.last_id = new_last
-        # prune gaps that will never surface: ids below the retained
-        # window ONLY once eviction is confirmed (otherwise a low id may
-        # merely not have surfaced yet), and ids far behind the
-        # high-water mark — an id allocated but never registered would
-        # otherwise pin the cursor on full fetches forever
-        floor = self.last_id - 1000
-        if self.evicting and oldest is not None:
-            floor = max(floor, oldest)
-        self._gap_ids = {g for g in self._gap_ids if g >= floor}
-        return fresh
+        self.last_id = full[-1]["id"] if full else -1
 
     def new_executions(self) -> list:
-        import time  # noqa: PLC0415
+        start = max(self.offset - 1, 0)
+        page = _sql_executions(self.spark, start)
+        if self.offset and (not page or page[0]["id"] != self.last_id):
+            start, page = 0, _sql_executions(self.spark)
+        new = [e for e in page if e["id"] > self.last_id]
+        self.offset = start + len(page)
+        if new:
+            self.last_id = new[-1]["id"]
+        return new
 
-        if not self.evicting:
-            new = _sql_executions(self.base, self.app_id, self.offset)
-            if (
-                new
-                and new[0]["id"] == self.last_id + 1
-                and not self._gap_ids
-            ):
-                self.offset += len(new)
-                self._empty_confirmed_at = None
-                return self._take(new)
-            if new or self._gap_ids:
-                # NON-EMPTY discontinuous page (or gap ids outstanding):
-                # either the retained window shifted (eviction) or a
-                # lower id simply hadn't surfaced yet when the page was
-                # read (a natural, transient gap). Only the full listing
-                # distinguishes them: eviction is proven iff the OLDEST
-                # retained id moved past last_id+1; a transient gap
-                # keeps the fast path, with the offset resynced to the
-                # full listing and the skipped ids tracked so they are
-                # DELIVERED when they surface. (Degrading permanently on
-                # every gap — the pre-r13 behavior — made one transient
-                # gap cost a full fetch per call forever.)
-                full = _sql_executions(self.base, self.app_id)
-                oldest = min((e["id"] for e in full), default=None)
-                self._observe_oldest(oldest)
-                fresh = self._take(full, oldest=oldest)
-                if not self.evicting:
-                    self.offset = len(full)
-                self._empty_confirmed_at = None
-                return fresh
-            # EMPTY page is ambiguous (nothing new vs everything shifted
-            # past the offset): one full fetch disambiguates — but the
-            # result is cached briefly, so an idle caller polling in a
-            # tight loop doesn't pay a full fetch per call (only a fresh
-            # item found by the full fetch proves eviction).
-            now = time.monotonic()
-            if (
-                self._empty_confirmed_at is not None
-                and now - self._empty_confirmed_at < self.EMPTY_CACHE_SEC
-            ):
-                return []
-        pre_last = self.last_id
-        full = _sql_executions(self.base, self.app_id)
-        oldest = min((e["id"] for e in full), default=None)
-        self._observe_oldest(oldest)
-        fresh = self._take(full, oldest=oldest)
-        if fresh:
-            if not self.evicting and self.last_id > pre_last:
-                self.evicting = True  # offset missed them: window shifted
-            self._empty_confirmed_at = None
-        elif not self.evicting:
-            self._empty_confirmed_at = time.monotonic()
-        return fresh
+
+def run_grouped(spark, run):
+    """Run ``run()`` under a fresh Spark job group; return its result and
+    the stage attempts of every job the group ran, RDD actions outside a
+    SQL execution included. Jobs come from the status tracker, then one
+    ``/stages/{id}?withSummaries=true&quantiles=1.0`` read per stage gives
+    status, task counts, shuffle bytes and each task metric's max
+    (``taskMetricsDistributions``). Stages the UI evicted are skipped."""
+    sc = spark.sparkContext
+    group = f"plan-audit-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        result = run()
+    finally:
+        sc._jsc.clearJobGroup()
+    _drain(spark)
+    tracker = sc.statusTracker()
+    infos = (tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(group))
+    stage_ids = {sid for info in infos if info for sid in info.stageIds}
+    stages: list = []
+    # newest first: the order of the app-wide /stages listing audit() read
+    for sid in sorted(stage_ids, reverse=True):
+        try:
+            stages.extend(
+                _ui(spark, f"/stages/{sid}?withSummaries=true&quantiles=1.0")
+            )
+        except urllib.error.HTTPError:
+            continue
+    return result, stages
+
+
+def stage_max(stages: list, metric: str) -> float | None:
+    """Largest single-task ``metric`` (a ``taskMetricsDistributions`` key,
+    e.g. ``duration`` or ``executorRunTime``, in ms) over the completed
+    stage attempts; None when no task completed."""
+    vals = [
+        st["taskMetricsDistributions"][metric][0]
+        for st in stages
+        if st.get("status") == "COMPLETE" and st.get("taskMetricsDistributions")
+    ]
+    return max(vals, default=None)
 
 
 def _scan_flag(
@@ -515,45 +453,16 @@ def exec_plan_census(plan_desc: str) -> dict:
     }
 
 
-def max_task_ms(base: str, app_id: str, executions: list) -> float | None:
-    """Largest single-task duration (ms) across the given executions'
-    successful jobs — the straggler yardstick a flag needs at flag time.
-    Walks successJobIds → stageIds → taskSummary(quantiles=1.0); any
-    REST hiccup degrades to None rather than blocking the bench."""
-    worst: float | None = None
-    try:
-        job_ids = sorted(
-            {j for ex in executions for j in ex.get("successJobIds", [])}
-        )
-        stage_ids: set[int] = set()
-        for jid in job_ids:
-            stage_ids.update(_ui(base, app_id, f"/jobs/{jid}").get("stageIds", []))
-        for sid in sorted(stage_ids):
-            try:
-                summ = _ui(
-                    base, app_id, f"/stages/{sid}/0/taskSummary?quantiles=1.0"
-                )
-            except Exception:  # noqa: BLE001 — skipped stage, not fatal
-                continue
-            dur = (summ.get("duration") or [None])[0]
-            if dur is not None:
-                worst = dur if worst is None else max(worst, dur)
-    except Exception:  # noqa: BLE001 — forensics must never block the run
-        return worst
-    return worst
-
-
 def capture_forensics(spark, run, cursor: "ExecCursor | None" = None) -> dict:
     """Run ``run`` once and return the executed-plan evidence a regression
     flag needs to be adjudicated later: the worst (max-scan) execution's
-    plan census, execution count, and the max task duration. Callers
-    without a standing cursor get a fresh one (executions before this
-    call are excluded either way)."""
-    base = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
+    plan census, execution count, and the max task duration (ms) over
+    every job ``run`` started, SQL or not. Callers without a standing
+    cursor get a fresh one (executions before this call are excluded
+    either way)."""
     if cursor is None:
-        cursor = ExecCursor(base, app_id)
-    run()
+        cursor = ExecCursor(spark)
+    _, stages = run_grouped(spark, run)
     executions = cursor.new_executions()
     censuses = [
         exec_plan_census(ex.get("planDescription", "") or "")
@@ -563,7 +472,7 @@ def capture_forensics(spark, run, cursor: "ExecCursor | None" = None) -> dict:
     return {
         "n_executions": len(executions),
         "plan": worst,
-        "max_task_ms": max_task_ms(base, app_id, executions),
+        "max_task_ms": stage_max(stages, "duration"),
     }
 
 
@@ -581,8 +490,6 @@ def audit(n_queries: int = 20) -> int:
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
-    app = spark.sparkContext.applicationId
-    base = spark.sparkContext.uiWebUrl
     detail = json.loads(
         (Path(__file__).resolve().parent / "BENCH_DETAIL.json").read_text()
     )
@@ -594,15 +501,20 @@ def audit(n_queries: int = 20) -> int:
         for k, _ in sorted(walls.items(), key=lambda kv: -kv[1])
         if k in queries
     ][:n_queries]
-    seen: set = set()
     # skip executions predating the audit (warm-up etc.) and read
     # incrementally from here (eviction-safe: see ExecCursor)
-    cursor = ExecCursor(base, app)
+    cursor = ExecCursor(spark)
     n_flags = 0
     for name in targets:
-        df = queries[name].fn(spark, SF_DIR)
-        static_census = dict(_scan_counts(df))
-        df.write.format("noop").mode("overwrite").save()
+
+        def run(fn=queries[name].fn) -> dict:
+            df = fn(spark, SF_DIR)
+            census = dict(_scan_counts(df))
+            df.write.format("noop").mode("overwrite").save()
+            return census
+
+        # the group holds the eager phase's jobs as well as the sink's
+        static_census, stages = run_grouped(spark, run)
         # detector 3: executed Scan-parquet nodes per /sql execution
         # (post-AQE-reuse truth). The metric is the MAX over this
         # query's executions, not the sum: an eager checkpoint chain
@@ -639,12 +551,8 @@ def audit(n_queries: int = 20) -> int:
                 print(json.dumps(flag))
                 if not flag.get("triaged"):
                     n_flags += 1
-        for st in _ui(base, app, "/stages?status=complete"):
-            key = (st["stageId"], st["attemptId"])
-            if key in seen:
-                continue
-            seen.add(key)
-            if st["numCompleteTasks"] < 4:
+        for st in stages:
+            if st["status"] != "COMPLETE" or st["numCompleteTasks"] < 4:
                 continue
             try:
                 # page until exhausted: a wide stage (> page size tasks)
@@ -653,8 +561,7 @@ def audit(n_queries: int = 20) -> int:
                 tasks: list = []
                 while True:
                     page = _ui(
-                        base,
-                        app,
+                        spark,
                         f"/stages/{st['stageId']}/{st['attemptId']}/taskList"
                         f"?offset={len(tasks)}&length=1000",
                     )

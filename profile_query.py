@@ -2,7 +2,7 @@
 """Per-query job-level profiler for the optimization rounds.
 
 For each named query: runs it once warm (codegen + footer caches), then
-measures a timed noop-sink run while walking the Spark UI REST listing
+measures a timed noop-sink run and reads the SQL executions it started
 (plan_audit.ExecCursor) so every SQL execution inside the query function
 — seed collects, Lloyd rounds, lineage cuts, fixpoint probes, the final
 sink — is attributed its own wall clock. This is the guide-§1 "empirical
@@ -10,7 +10,7 @@ loop" for a workload whose heavy queries are multi-action composites:
 the per-execution table says whether the wall is one slow stage (optimize
 the stage) or twenty 150 ms actions (optimize the action count).
 
-Usage: python profile_query.py q1 [q2 ...] [--repeats N]
+Usage: python profile_query.py q1 [q2 ...]
 Writes a JSON report to /tmp/profile_<name>.json and prints a summary.
 """
 
@@ -34,19 +34,15 @@ def _noop(df):
     df.write.format("noop").mode("overwrite").save()
 
 
-def profile(spark, fn, sf_dir: str, repeats: int = 1) -> dict:
-    base = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
+def profile(spark, fn, sf_dir: str) -> dict:
     _noop(fn(spark, sf_dir))  # warm: codegen, parquet footers
     import gc
 
     gc.collect()
-    cursor = ExecCursor(base, app_id)
-    cursor.new_executions()  # drain
+    cursor = ExecCursor(spark)
     t0 = time.perf_counter()
     _noop(fn(spark, sf_dir))
     wall = time.perf_counter() - t0
-    time.sleep(0.3)  # let the listing surface the last execution
     execs = cursor.new_executions()
     rows = []
     for ex in execs:

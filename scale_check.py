@@ -2,7 +2,8 @@
 """Empirical scale check for the heavy operator families (ARCHITECTURE.md
 §11 predicts linear-in-corpus cost for all five): runs each at sf0.01,
 sf0.1, and a synthetic 10×-sf0.1 corpus (~sf1.0), records wall clock and
-total shuffle-write bytes (Spark UI REST), and fits the scaling exponent
+total shuffle-write bytes (the query's job group, read through
+plan_audit's status reader), and fits the scaling exponent
 wall ~ N^e between successive decades.
 
 The synthetic sf1.0 corpus preserves DUPLICATE DENSITY — the quantity the
@@ -25,7 +26,6 @@ import math
 import os
 import sys
 import time
-import urllib.request
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
@@ -34,6 +34,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from data_pipelines_cu_spark.queries import all_queries  # noqa: E402
 from data_pipelines_cu_spark.session import get_spark  # noqa: E402
+from plan_audit import run_grouped, stage_max  # noqa: E402
 
 HEAVY = [
     "semantic_dedup_pairs",
@@ -265,53 +266,12 @@ def build_sf1_dims(spark, src="/root/testdata/sf0.1", out=SF1_DIR) -> None:
     Path(f"{out}/_BUILT_DIMS").write_text("ok\n")
 
 
-def _ui_json(path: str):
-    with urllib.request.urlopen(f"http://localhost:4040{path}", timeout=10) as r:
-        return json.load(r)
-
-
-def shuffle_bytes_since(app_id: str, seen: set[int]) -> tuple[int, set[int]]:
-    """Sum shuffleWrite bytes of completed stages not yet counted."""
-    total = 0
-    ids = set(seen)
-    for st in _ui_json(f"/api/v1/applications/{app_id}/stages?status=complete"):
-        key = (st["stageId"], st["attemptId"])
-        if key in ids:
-            continue
-        ids.add(key)
-        total += st.get("shuffleWriteBytes", 0)
-    return total, ids
-
-
-def max_task_since(app_id: str, seen: set) -> float:
-    """Max executor task seconds across stages not in ``seen`` — the
-    fat-task detector: a corpus-sized single task (global sort, giant
-    broadcast build) shows up here long before it dominates wall clock
-    at test scale. Multi-task stages whose max is ordinary and 1-task
-    stages over small inputs both read low."""
-    worst = 0.0
-    for st in _ui_json(f"/api/v1/applications/{app_id}/stages?status=complete"):
-        key = (st["stageId"], st["attemptId"])
-        if key in seen:
-            continue
-        try:
-            ts = _ui_json(
-                f"/api/v1/applications/{app_id}/stages/{st['stageId']}/"
-                f"{st['attemptId']}/taskSummary?quantiles=1.0"
-            )
-            worst = max(worst, ts["executorRunTime"][0] / 1000.0)
-        except Exception:  # noqa: BLE001 (stage evicted from UI store)
-            continue
-    return round(worst, 2)
-
-
 def main() -> None:
     spark = get_spark(
         "scale-check",
         **{"spark.ui.enabled": "true", "spark.ui.showConsoleProgress": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
-    app_id = spark.sparkContext.applicationId
     build_sf1(spark)
 
     queries = all_queries()
@@ -321,22 +281,30 @@ def main() -> None:
         ("sf1.0*", SF1_DIR, 1.0),
     ]
     results: dict[str, dict[str, dict]] = {}
-    seen: set = set()
     # warm
     queries["gopher_quality_gate"].fn(spark, "/root/testdata/sf0.01").count()
-    _, seen = shuffle_bytes_since(app_id, seen)
     for name in HEAVY:
         results[name] = {}
         for label, path, _ in scales:
-            fn = queries[name].fn
-            before = set(seen)
-            start = time.perf_counter()
-            fn(spark, path).write.format("noop").mode("overwrite").save()
-            wall = round(time.perf_counter() - start, 2)
-            sh, seen = shuffle_bytes_since(app_id, seen)
+
+            def timed(fn=queries[name].fn, path=path) -> float:
+                start = time.perf_counter()
+                fn(spark, path).write.format("noop").mode("overwrite").save()
+                return round(time.perf_counter() - start, 2)
+
+            wall, stages = run_grouped(spark, timed)
+            sh = sum(
+                st["shuffleWriteBytes"]
+                for st in stages
+                if st["status"] == "COMPLETE"
+            )
             rec = {"wall_s": wall, "shuffle_mb": round(sh / 1e6, 1)}
-            if label == "sf1.0*":  # fat-task detector at the top scale
-                rec["max_task_s"] = max_task_since(app_id, before)
+            if label == "sf1.0*":
+                # fat-task detector: a corpus-sized single task (global
+                # sort, giant broadcast build) shows up here long before
+                # it dominates wall clock at test scale
+                worst = stage_max(stages, "executorRunTime") or 0.0
+                rec["max_task_s"] = round(worst / 1000.0, 2)
             results[name][label] = rec
             print(json.dumps({"query": name, "scale": label, **rec}),
                   flush=True)

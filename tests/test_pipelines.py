@@ -293,7 +293,9 @@ def test_compact_partitions_sizes_flat_directory_per_partition(spark, tmp_path):
         for f in fs
         if f.endswith(".parquet")
     )
-    compact_partitions(spark, path, ["date"], target_file_bytes=total * 3 // 16)
+    written = compact_partitions(
+        spark, path, ["date"], target_file_bytes=total * 3 // 16
+    )
     per_partition = {
         d: sum(1 for f in os.listdir(os.path.join(path, d)) if f.endswith(".parquet"))
         for d in os.listdir(path)
@@ -301,6 +303,11 @@ def test_compact_partitions_sizes_flat_directory_per_partition(spark, tmp_path):
     }
     assert len(per_partition) == 8
     assert set(per_partition.values()) == {1}, per_partition
+    # the pre-compaction root file is gone: the table is on disk once
+    root = [f for f in os.listdir(path) if f.endswith(".parquet")]
+    assert root == [], root
+    assert written == 8
+    assert spark.read.parquet(path).count() == 80_000
 
 
 def test_write_range_clustered_files_have_disjoint_ranges(spark, tmp_path):

@@ -45,9 +45,9 @@ def test_query_matches_oracle(spark, duck, sf_dir, name):
 
 def test_ann_smoke_replays_match_oracle(spark, sf_dir, tmp_path):
     """Tier-1 smoke replay of the ANN paths whose full-table replays are
-    tier 2 (SQ8, PQ, IVF): the same operators and oracle builders over a
-    64-vector embeddings slice, so the shared trainer, cell-mean step and
-    neighbour ranker stay hash-checked in the default run."""
+    tier 2 (SQ8, PQ, IVF, IVF-PQ): the same operators and oracle builders
+    over a 64-vector embeddings slice, so the shared trainer, cell-mean
+    step and neighbour ranker stay hash-checked in the default run."""
     import duckdb
     from pyspark.sql import functions as F
 
@@ -76,6 +76,10 @@ def test_ann_smoke_replays_match_oracle(spark, sf_dir, tmp_path):
                     em, em.filter(F.col("vec_id") < 5), k=5, n_centroids=8, n_probe=2
                 ),
                 sim.cosine_topk_ivf_oracle_sql(k=5, n_queries=5, table="emb64"),
+            ),
+            (
+                sim.cosine_topk_ivfpq(em, k_neighbors=5, n_queries=5),
+                sim.ivfpq_topk_oracle_sql(k_neighbors=5, n_queries=5, table="emb64"),
             ),
         ]
         for df, sql in cases:

@@ -172,23 +172,19 @@ def test_fixed_queries_tokenize_corpus_once(spark):
     the corpus tokenize at most once per execution; a deliberately
     redundant two-consumer tokenize still reads 2 (the detector is not
     blind)."""
-    import urllib.request
-
     from pyspark.sql import functions as F
 
     from data_pipelines_cu_spark.queries import all_queries
 
     pa = _load("plan_audit")
-    base = spark.sparkContext.uiWebUrl
-    if not base:
+    if not spark.sparkContext.uiWebUrl:
         pytest.skip("Spark UI disabled in this session")
-    app = spark.sparkContext.applicationId
     # ExecCursor, not raw offsets: in the long-lived test session the UI's
     # retainedExecutions cap evicts old entries and the list shifts left —
     # a remembered offset misses every new execution (the failure the
-    # full-suite run exposed; the cursor detects the shift via id
-    # continuity and falls back to filter-by-id)
-    cursor = pa.ExecCursor(base, app)
+    # full-suite run exposed; the cursor detects the shift when its last
+    # delivered row moves and falls back to filter-by-id)
+    cursor = pa.ExecCursor(spark)
 
     def max_tok(run):
         cursor.new_executions()  # drain anything pending

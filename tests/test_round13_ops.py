@@ -1,6 +1,6 @@
 """Round-13 surfaces: flag-time bench forensics (executed-plan census +
 max task ms attached to every regression flag — round-12 verdict item 2),
-the ExecCursor gap/empty-page hardening (ADVICE), the batch-path legacy
+the /sql execution cursor (ExecCursor), the batch-path legacy
 IVF layout guard (ADVICE medium), the atomic wave-base sidecar (ADVICE),
 and degenerate/recovery probes for the round-12 serving surfaces
 (streaming ANN query vs missing/legacy index and across kill-restart,
@@ -120,7 +120,7 @@ def test_attach_forensics_decorates_flags_and_survives_stale_names(spark):
     assert bench.attach_forensics(spark, queries, "x", []) == []
 
 
-# --- ExecCursor gap / empty-page hardening --------------------------------------
+# --- ExecCursor: offset reads, eviction fallback ---------------------------------
 
 
 class _FakeSql:
@@ -131,7 +131,7 @@ class _FakeSql:
         self.listing = listing
         self.full_fetches = 0
 
-    def __call__(self, base, app_id, offset: int = 0):
+    def __call__(self, spark, offset: int = 0):
         if offset == 0:
             self.full_fetches += 1
         return self.listing[offset:]
@@ -139,82 +139,25 @@ class _FakeSql:
 
 def _cursor_with(pa, fake):
     pa._sql_executions = fake
-    return pa.ExecCursor("http://x", "app")
-
-
-def test_exec_cursor_transient_gap_keeps_fast_path():
-    """A natural id gap (an execution not yet surfaced when the page was
-    read) must NOT permanently degrade the cursor: eviction mode stays
-    off, the skipped id is TRACKED (full fetches continue only while it
-    is outstanding, hunting for it), and once the gap resolves — here by
-    falling out of the retained window — the cheap incremental path
-    resumes."""
-    pa = _load("plan_audit")
-    fake = _FakeSql([{"id": 0}, {"id": 1}])
-    cur = _cursor_with(pa, fake)
-    # id 2 in flight, id 3 already listed: discontinuous page, no eviction
-    fake.listing = [{"id": 0}, {"id": 1}, {"id": 3}]
-    got = cur.new_executions()
-    assert [e["id"] for e in got] == [3]
-    assert cur.evicting is False
-    assert cur._gap_ids == {2}
-    # while the gap is outstanding the cursor full-fetches (hunting for
-    # id 2) but stays un-degraded and delivers the new tail
-    fake.listing = [{"id": 0}, {"id": 1}, {"id": 3}, {"id": 4}]
-    got = cur.new_executions()
-    assert [e["id"] for e in got] == [4]
-    assert cur.evicting is False
-    # ids 0-1 VANISH: previously-seen ids gone = real eviction — the
-    # cursor degrades (correctly) and prunes the gap id that can no
-    # longer surface
-    fake.listing = [{"id": 3}, {"id": 4}, {"id": 5}]
-    got = cur.new_executions()
-    assert [e["id"] for e in got] == [5]
-    assert cur._gap_ids == set()
-    assert cur.evicting is True
-    # (fast-path resumption after a gap resolves by SURFACING — no
-    # eviction — is pinned by test_exec_cursor_delivers_gap_id_...)
+    return pa.ExecCursor(None)
 
 
 def test_exec_cursor_confirmed_eviction_degrades():
-    """Eviction is proven by the oldest RETAINED id moving past last_id+1
-    (the window shifted left); only then does the cursor degrade to
-    fetch-all-filter-by-id for good."""
+    """Eviction shifts the retained window left, so the row the cursor
+    delivered last is no longer at ``offset - 1``: one full listing,
+    filtered by id, delivers the new tail once, and the cursor resumes
+    offset reads from the shifted window."""
     pa = _load("plan_audit")
     fake = _FakeSql([{"id": 0}, {"id": 1}])
     cur = _cursor_with(pa, fake)
     fake.listing = [{"id": 3}, {"id": 4}, {"id": 5}]  # 0-2 evicted
     got = cur.new_executions()
     assert [e["id"] for e in got] == [3, 4, 5]
-    assert cur.evicting is True
-
-
-def test_exec_cursor_empty_page_disambiguation_is_cached():
-    """An empty incremental page is ambiguous (nothing new vs window
-    shifted past the offset): ONE full fetch disambiguates, and the
-    negative result is cached briefly so an idle polling loop doesn't
-    pay a full fetch per call."""
-    pa = _load("plan_audit")
-    fake = _FakeSql([{"id": 0}, {"id": 1}])
-    cur = _cursor_with(pa, fake)
-    assert fake.full_fetches == 1  # __init__ baseline
-    assert cur.new_executions() == []  # disambiguates: full fetch #2
-    assert fake.full_fetches == 2
-    assert cur.new_executions() == []  # cached: NO third full fetch
     assert cur.new_executions() == []
-    assert fake.full_fetches == 2
-    assert cur.evicting is False
-    # new work clears the cache via the fast path immediately
-    fake.listing = [{"id": 0}, {"id": 1}, {"id": 2}]
-    got = cur.new_executions()
-    assert [e["id"] for e in got] == [2]
-    assert fake.full_fetches == 2
-    # cache expires: after the TTL a fresh empty call disambiguates again
-    assert cur.new_executions() == []
-    assert fake.full_fetches == 3
-    cur._empty_confirmed_at -= pa.ExecCursor.EMPTY_CACHE_SEC + 1
-    assert cur.new_executions() == []
-    assert fake.full_fetches == 4
+    fake.listing.append({"id": 6})
+    before = fake.full_fetches
+    assert [e["id"] for e in cur.new_executions()] == [6]
+    assert fake.full_fetches == before  # back on the offset path
 
 
 # --- IVF lifecycle guards + degenerate/recovery probes ---------------------------
@@ -680,9 +623,7 @@ def test_sql_rest_plan_format_markers_stable(spark):
         pytest.skip("Spark UI disabled in this session")
     from data_pipelines_cu_spark.queries import all_queries
 
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    cursor = pa.ExecCursor(base, app)
+    cursor = pa.ExecCursor(spark)
     fn = all_queries()["orders_by_region"].fn
     fn(spark, "/root/testdata/sf0.001").write.format("noop").mode(
         "overwrite"
@@ -1019,30 +960,6 @@ def test_sidecar_wrong_shape_json_rejected_with_guidance(spark, tmp_path):
             run_streaming_ivf_upsert(s, idx, cents, checkpoint=str(ck))
 
 
-def test_exec_cursor_delivers_gap_id_when_it_surfaces():
-    """A gapped-over execution id must be DELIVERED when it finally
-    surfaces, not excluded forever by the id > last_id filter — the
-    detectors would silently miss that execution's scan census."""
-    pa = _load("plan_audit")
-    fake = _FakeSql([{"id": 0}, {"id": 1}])
-    cur = _cursor_with(pa, fake)
-    # id 2 in flight; 3 surfaces first
-    fake.listing = [{"id": 0}, {"id": 1}, {"id": 3}]
-    assert [e["id"] for e in cur.new_executions()] == [3]
-    assert cur._gap_ids == {2}
-    # id 2 surfaces (inserts BEFORE 3): next read must include it
-    fake.listing = [{"id": 0}, {"id": 1}, {"id": 2}, {"id": 3}]
-    got = [e["id"] for e in cur.new_executions()]
-    assert got == [2]
-    assert cur._gap_ids == set()
-    assert cur.evicting is False
-    # and the cursor is healthy afterwards: new tail rides the fast path
-    fake.listing = [{"id": 0}, {"id": 1}, {"id": 2}, {"id": 3}, {"id": 4}]
-    before = fake.full_fetches
-    assert [e["id"] for e in cur.new_executions()] == [4]
-    assert fake.full_fetches == before
-
-
 def test_lifecycle_operators_degenerate_paths(spark, tmp_path):
     """Degenerate probes for the round-13 lifecycle surfaces (the probe
     pattern that found 7 crashes in r11 and 3 in r12): NULL vectors are
@@ -1090,47 +1007,35 @@ def test_lifecycle_operators_degenerate_paths(spark, tmp_path):
 
 
 def test_exec_cursor_exactly_once_property():
-    """Property (hypothesis): under ANY out-of-order surfacing schedule
-    without eviction, interleaved with reads at arbitrary points, the
-    cursor delivers every execution exactly once — no duplicates (a
-    double-counted plan inflates detector metrics), no losses (a missed
-    execution blinds them). Eviction cases are pinned by the dedicated
-    unit tests above."""
+    """Property (hypothesis): executions surface in id order (reads
+    follow a listener-bus drain) while the retained window's oldest id
+    moves forward at random. Every read delivers exactly the retained
+    ids past the last one delivered: no duplicate (a double-counted plan
+    inflates detector metrics) and no retained execution missed (a
+    missed one blinds them). Only ids evicted before any read saw them
+    are lost."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
     pa = _load("plan_audit")
 
-    @settings(max_examples=30, deadline=None)
+    @settings(max_examples=50, deadline=None)
     @given(st.data())
     def run(data):
-        n = data.draw(st.integers(min_value=1, max_value=25))
-        # surfacing order: ids may surface late by a bounded displacement
-        order = list(range(n))
-        for i in range(n - 1):
-            if data.draw(st.booleans()):
-                order[i], order[i + 1] = order[i + 1], order[i]
-        surfaced: list[int] = []
         fake = _FakeSql([])
-        pa._sql_executions = fake
-        cur = pa.ExecCursor("http://x", "app")
-        cur.EMPTY_CACHE_SEC = 0.0  # property runs faster than the TTL
+        hi = data.draw(st.integers(min_value=0, max_value=5))
+        lo, last = 0, hi - 1
+        fake.listing = [{"id": x} for x in range(lo, hi)]
+        cur = _cursor_with(pa, fake)
         delivered: list[int] = []
-        i = 0
-        while i < len(order) or True:
-            if i < len(order):
-                batch = data.draw(st.integers(min_value=1, max_value=4))
-                surfaced.extend(order[i : i + batch])
-                i += batch
-                fake.listing = [{"id": x} for x in sorted(surfaced)]
-            if data.draw(st.booleans()) or i >= len(order):
-                delivered.extend(e["id"] for e in cur.new_executions())
-            if i >= len(order):
-                # drain: two final reads pick up any outstanding gaps
-                delivered.extend(e["id"] for e in cur.new_executions())
-                delivered.extend(e["id"] for e in cur.new_executions())
-                break
-        assert sorted(delivered) == list(range(n)), (order, delivered)
+        for _ in range(data.draw(st.integers(min_value=1, max_value=12))):
+            hi += data.draw(st.integers(min_value=0, max_value=4))
+            lo = data.draw(st.integers(min_value=lo, max_value=hi))
+            fake.listing = [{"id": x} for x in range(lo, hi)]
+            got = [e["id"] for e in cur.new_executions()]
+            assert got == [x for x in range(lo, hi) if x > last], (lo, hi)
+            delivered.extend(got)
+            last = max([last, *got])
         assert len(delivered) == len(set(delivered)), "duplicate delivery"
 
     run()
