@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .materialize import lineage_cut
+
 
 def decimal_avg(val: Column, count_of: Column | None = None) -> Column:
     """Order-independent mean: exact decimal sum, then one double division.
@@ -647,7 +649,6 @@ def psi_value_drift(
     value_col: str = "value",
     id_col: str = "event_id",
     n_bins: int = 10,
-    materialize: str = "local",
     plan_width: int | None = None,
 ) -> DataFrame:
     """(bin, n_ref, n_cur, p_ref, p_cur, psi_term, psi_total): the data
@@ -663,12 +664,10 @@ def psi_value_drift(
     approximate alternative), then a broadcast of the 1-row edge array and
     one corpus-wide group-by-bin. The corpus never sorts globally.
 
-    ``materialize`` ('local' | 'reliable') picks where the plan's two
-    lineage cuts live — the tagged corpus table here and the blocked
-    rank's ranged table (see windows.blocked_row_number): a 100 TB
-    caller under executor-loss risk passes 'reliable' (requires
-    ``setCheckpointDir`` on durable storage). ``plan_width`` passes
-    through to the blocked rank, skipping its driver-side width
+    Both lineage cuts (the tagged corpus table here and the blocked
+    rank's ranged table) go through materialize.lineage_cut, so
+    ``spark.graft.reliableCuts`` decides local vs reliable. ``plan_width``
+    passes through to the blocked rank, skipping its driver-side width
     derivation when the caller knows a bound (post-shuffle lineage →
     windows.post_shuffle_width); left None, the derivation is memoized
     per analyzed plan, so repeated windows over one frame compile once."""
@@ -676,10 +675,6 @@ def psi_value_drift(
 
     from .windows import blocked_row_number  # noqa: PLC0415
 
-    if materialize not in ("local", "reliable"):
-        raise ValueError(
-            f"materialize must be 'local' or 'reliable', got {materialize!r}"
-        )
     spark = df.sparkSession
     ev = df.select(
         F.col(id_col).alias("_id"),
@@ -695,24 +690,17 @@ def psi_value_drift(
     # one corpus materialization feeds the ranking AND the binning — the
     # naive plan re-derives this subtree (and rescans the table) per
     # consumer; the checkpoint holds 3 narrow columns
-    tagged = ev.crossJoin(cut).select(
-        "_id", "_v", (F.col("_d") < F.col("_cut")).alias("_is_ref")
-    )
-    # explicit per-call knob, like blocked_row_number's: 'local' means
-    # LOCAL — it must not be upgraded (or turned into a missing-dir
-    # error) by the session-wide spark.graft.reliableCuts conf, which is
-    # why this site bypasses the lineage_cut chokepoint deliberately
-    tagged = (
-        tagged.localCheckpoint(eager=True)
-        if materialize == "local"
-        else tagged.checkpoint(eager=True)
+    tagged = lineage_cut(
+        ev.crossJoin(cut).select(
+            "_id", "_v", (F.col("_d") < F.col("_cut")).alias("_is_ref")
+        )
     )
     ref = tagged.filter("_is_ref")
     n_ref = F.broadcast(ref.agg(F.count(F.lit(1)).alias("_nr")))
     ranked = (
         blocked_row_number(
             ref.select("_v", "_id"), ["_v", "_id"], "_r",
-            materialize=materialize, plan_width=plan_width,
+            plan_width=plan_width,
         )
         .select("_v", "_r")
         .crossJoin(n_ref)
@@ -1139,7 +1127,6 @@ def psi_reference_edges(
     value_col: str = "value",
     id_col: str = "event_id",
     n_bins: int = 10,
-    materialize: str = "local",
     plan_width: int | None = None,
 ) -> DataFrame:
     """1-row (edges array) of the reference distribution's selection
@@ -1147,9 +1134,9 @@ def psi_reference_edges(
     every future window against (the streaming PSI job broadcasts it per
     micro-batch). Edge selection ranks through the two-level blocked rank
     (windows.blocked_row_number), so the reference corpus never
-    single-task sorts; ``materialize`` ('local' | 'reliable') and
-    ``plan_width`` (skip the rank's driver-side width compile when the
-    lineage is known post-shuffle) pass through to that rank."""
+    single-task sorts; ``plan_width`` (skip the rank's driver-side width
+    compile when the lineage is known post-shuffle) passes through to
+    that rank."""
     from .windows import blocked_row_number  # noqa: PLC0415
 
     spark = ref.sparkSession
@@ -1160,8 +1147,7 @@ def psi_reference_edges(
     )
     ranked = (
         blocked_row_number(
-            vals, ["_v", "_id"], "_r",
-            materialize=materialize, plan_width=plan_width,
+            vals, ["_v", "_id"], "_r", plan_width=plan_width
         )
         .select("_v", "_r")
         .crossJoin(n_ref)
@@ -1294,7 +1280,6 @@ def gini_concentration(
     fact_key: str = "o_custkey",
     amount_col: str = "o_totalprice",
     n_deciles: int = 10,
-    materialize: str = "local",
 ) -> DataFrame:
     """(decile, n_entities, decile_amount, cum_share, gini): amounts are
     exact decimal sums per entity (zero-filled across the full entity
@@ -1304,8 +1289,6 @@ def gini_concentration(
     one TWO-LEVEL BLOCKED rank (windows.blocked_row_number: the entity
     base never single-task sorts; ranks are total-order exact, so the
     ROW_NUMBER oracle is byte-identical), one 10-row group.
-    ``materialize`` ('local' | 'reliable') passes through to that
-    rank's lineage cut.
     """
     from pyspark.sql import Window as W  # noqa: PLC0415
 
@@ -1342,7 +1325,6 @@ def gini_concentration(
         per,
         ["_x", "_k"],
         rank_col="_r",
-        materialize=materialize,
         plan_width=width,
     ).select("_x", "_r")
     stats = F.broadcast(

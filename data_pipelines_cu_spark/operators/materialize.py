@@ -20,19 +20,12 @@ fault-tolerance trade for the whole engine:
   multi-hour deployments composing several checkpointing operators —
   the ADVICE round-12 caveat, now a switch instead of a doc note.
 
-Out of scope, deliberately:
-
-- ``streaming/jobs.py`` micro-batch internals: reliable checkpoints
-  accumulate one file set per cut per micro-batch with no cleanup hook
-  on a continuous stream — unbounded storage. Streams release their
-  per-batch frames with persist/try-finally-unpersist instead (the
-  round-12 single-action migration); their recovery story is the
-  stream checkpoint itself.
-- ``windows.blocked_row_number`` and ``aggregates.psi_value_drift``:
-  both carry their own per-call ``materialize='local'|'reliable'`` knob
-  — a caller ranking a corpus-sized table should choose deliberately at
-  the call site, and an explicit per-call choice must not be silently
-  overridden by a session conf.
+Out of scope, deliberately: ``streaming/jobs.py`` micro-batch internals.
+Reliable checkpoints accumulate one file set per cut per micro-batch
+with no cleanup hook on a continuous stream — unbounded storage. Streams
+release their per-batch frames with persist/try-finally-unpersist
+instead (the round-12 single-action migration); their recovery story is
+the stream checkpoint itself.
 """
 
 from __future__ import annotations

@@ -1283,7 +1283,6 @@ def quality_quantile_calibrate(
     score_col: str = "quality",
     group_col: str = "source",
     id_col: str = "doc_id",
-    materialize: str = "local",
     plan_width: int | None = None,
 ) -> DataFrame:
     """(id, group, score, src_rank, calibrated): each doc's within-source
@@ -1295,9 +1294,9 @@ def quality_quantile_calibrate(
     TWO-LEVEL BLOCKED global rank (windows.blocked_row_number: the corpus
     never single-task sorts; ranks are total-order exact over
     (score, id), so the ROW_NUMBER oracle twin is byte-identical) + a
-    rank-keyed join. ``materialize`` ('local' | 'reliable') and
-    ``plan_width`` (skip the rank's driver-side width compile when the
-    caller knows a bound) pass through to the blocked rank."""
+    rank-keyed join. ``plan_width`` (skip the rank's driver-side width
+    compile when the caller knows a bound) passes through to the blocked
+    rank."""
     from pyspark.sql import Window as W  # noqa: PLC0415
 
     from .windows import blocked_row_number  # noqa: PLC0415
@@ -1325,7 +1324,6 @@ def quality_quantile_calibrate(
         ),
         ["_gscore", "_gid"],
         rank_col="_grank",
-        materialize=materialize,
         plan_width=plan_width,
     ).select("_gscore", "_grank")
     return (

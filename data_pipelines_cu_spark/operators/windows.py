@@ -13,6 +13,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .materialize import lineage_cut
+
 
 def topk_per_group(
     df: DataFrame,
@@ -111,7 +113,6 @@ def blocked_row_number(
     order_by: Sequence,
     rank_col: str = "_r",
     n_blocks: int | None = None,
-    materialize: str = "local",
     plan_width: int | None = None,
 ) -> DataFrame:
     """Exact global ROW_NUMBER over ``order_by`` with NO single-task global
@@ -155,30 +156,12 @@ def blocked_row_number(
     without the cut (measured: 128 file scans and zero reuse for three
     chained ntiles; 3 scans with it).
 
-    ``materialize`` picks where that cut lives — the cost is real and a
-    caller ranking a genuinely corpus-sized table should choose
-    deliberately:
-
-    - ``"local"`` (default): ``localCheckpoint(eager=True)`` — executor
-      block storage, no extra shuffle or HDFS round-trip, but it PINS a
-      full copy of the ranged input on executor storage until the
-      DataFrame is garbage-collected (three chained calls, as in RFM, pin
-      three copies) and the lineage cut is NON-RELIABLE: losing any
-      executor after materialization makes the job unrecoverable (no
-      lineage left to recompute from). Right for gate/bench-sized tables
-      and for clusters where task retry, not executor loss, is the
-      failure mode.
-    - ``"reliable"``: ``checkpoint(eager=True)`` to the SparkContext's
-      checkpoint directory (caller must have called
-      ``spark.sparkContext.setCheckpointDir`` on durable storage, e.g.
-      HDFS/S3). One extra write+read of the ranged table, but executor
-      loss recovers by re-reading the checkpoint — the right trade for a
-      100 TB corpus where re-running the whole upstream plan costs hours.
+    The cut is :func:`~.materialize.lineage_cut`, so the engine-wide
+    ``spark.graft.reliableCuts`` conf decides whether it is local (the
+    default) or reliable. A local cut pins a full copy of the ranged
+    input on executor storage until the DataFrame is garbage-collected
+    (three chained calls, as in RFM, pin three copies).
     """
-    if materialize not in ("local", "reliable"):
-        raise ValueError(
-            f"materialize must be 'local' or 'reliable', got {materialize!r}"
-        )
     if n_blocks is None:
         n_blocks = (
             max(32, plan_width)
@@ -188,11 +171,7 @@ def blocked_row_number(
     ranged = df.repartitionByRange(n_blocks, *order_by).withColumn(
         "_brn_blk", F.spark_partition_id()
     )
-    part = (
-        ranged.localCheckpoint(eager=True)
-        if materialize == "local"
-        else ranged.checkpoint(eager=True)
-    )
+    part = lineage_cut(ranged)
     # The ranking window requires ClusteredDistribution(_brn_blk); the
     # checkpoint records RangePartitioning(order_by), which does NOT
     # satisfy it, so Catalyst inserts a hash exchange — and an IMPLICIT
@@ -259,7 +238,6 @@ def take_ordered(
     n: int,
     rank_col: str | None = None,
     n_blocks: int | None = None,
-    materialize: str = "local",
     merge_rows_budget: int = 134_217_728,
     plan_width: int | None = None,
 ) -> DataFrame:
@@ -308,12 +286,9 @@ def take_ordered(
     ``n`` (on the fast path it is minted by a row_number window over the
     ALREADY n-bounded result; on the blocked path it IS the blocked
     global rank, which must be long anyway past 2^31 selected rows).
-    ``materialize`` passes through to the blocked path's lineage cut
-    ('local' | 'reliable' — see :func:`blocked_row_number`; large
-    selections over genuinely corpus-sized inputs should pick
-    'reliable'). ``n_blocks=None`` derives the blocked path's block
-    count from the input width (see :func:`derived_block_count`) —
-    the already-priced merge width is reused, so the plan compiles once.
+    ``n_blocks=None`` derives the blocked path's block count from the
+    input width (see :func:`derived_block_count`) — the already-priced
+    merge width is reused, so the plan compiles once.
 
     Two contract notes. (1) BOUNDED-PLAN CARVE-OUT: when the child's
     statically-known ``maxRows`` is ≤ ``n`` (e.g. ``spark.range``, local
@@ -381,9 +356,9 @@ def take_ordered(
     # compile is amortized there
     if n_blocks is None and est_partitions is not None:
         n_blocks = max(32, est_partitions)
-    ranked = blocked_row_number(
-        df, order_by, "_tko_rn", n_blocks, materialize
-    ).filter(F.col("_tko_rn") <= n)
+    ranked = blocked_row_number(df, order_by, "_tko_rn", n_blocks).filter(
+        F.col("_tko_rn") <= n
+    )
     if rank_col is not None:
         return ranked.withColumnRenamed("_tko_rn", rank_col)
     return ranked.drop("_tko_rn")
@@ -395,7 +370,6 @@ def blocked_ntile(
     n_tiles: int,
     out_col: str = "tile",
     n_blocks: int | None = None,
-    materialize: str = "local",
     plan_width: int | None = None,
 ) -> DataFrame:
     """Exact SQL NTILE(n) over ``order_by`` without the single-task global
@@ -406,11 +380,8 @@ def blocked_ntile(
     (``order_by`` must be a total order for the assignment to be
     deterministic, same as the window form). The q = 0 branch (fewer rows
     than tiles: tile = rank) stays inside the IF's untaken arm, so ANSI
-    mode never sees the div-by-zero. ``materialize`` passes through to
-    :func:`blocked_row_number` (see its fault-tolerance note)."""
-    ranked = blocked_row_number(
-        df, order_by, "_bnt_rn", n_blocks, materialize, plan_width
-    )
+    mode never sees the div-by-zero."""
+    ranked = blocked_row_number(df, order_by, "_bnt_rn", n_blocks, plan_width)
     tot = F.broadcast(ranked.agg(F.count(F.lit(1)).alias("_bnt_n")))
     tile = F.expr(
         f"CAST(IF(_bnt_rn <= (_bnt_n % {n_tiles})"

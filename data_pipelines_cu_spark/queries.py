@@ -1143,8 +1143,7 @@ def sql_best_hour_verbatim(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Multimodal plumbing — binary payload feature extraction via mapInPandas
-# (kernel = deterministic digest; the decode stub is the plug point)
+# Document payload digests — each doc's UTF-8 bytes as a binary payload
 # ---------------------------------------------------------------------------
 @register(
     "doc_payload_features",
@@ -1156,17 +1155,15 @@ def sql_best_hour_verbatim(spark, sf_dir):
     """,
 )
 def doc_payload_features(spark, sf_dir):
-    """Treats each doc's UTF-8 bytes as an opaque binary payload and runs
-    the Arrow-batched mapInPandas feature extractor (multimodal plumbing
-    exercised for real; only the decode kernel is fake)."""
-    from .operators.multimodal import extract_features
-
-    d = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("media_id"), F.encode("text", "UTF-8").alias("payload")
-    )
-    feats = extract_features(d)
-    return feats.select(
-        F.col("media_id").alias("doc_id"), "sha256", "n_bytes"
+    """Treats each doc's UTF-8 bytes as an opaque binary payload and
+    reports its sha256 and byte length — JVM-side ``sha2``/``length``,
+    the same functions as the oracle (text is not an image, so no media
+    decoder runs)."""
+    payload = F.encode("text", "UTF-8")
+    return _t(spark, sf_dir, "documents").select(
+        "doc_id",
+        F.sha2(payload, 256).alias("sha256"),
+        F.length(payload).cast("long").alias("n_bytes"),
     )
 
 
@@ -5723,7 +5720,7 @@ def ann_lsh_recall_q(spark, sf_dir):
     FROM tiers
     """,
 )
-def customer_rfm_segments_q(spark, sf_dir, materialize="local"):
+def customer_rfm_segments_q(spark, sf_dir):
     """RFM customer segmentation (recency / frequency / monetary
     quartiles, tier 1 = best): the standard marketing-analytics cut, as
     one aggregate + three EXACT NTILE assignments with deterministic
@@ -5731,10 +5728,7 @@ def customer_rfm_segments_q(spark, sf_dir, materialize="local"):
     rank (windows.blocked_ntile), so the customer base never single-task
     sorts and the NTILE oracle stays byte-identical. The monetary sum is
     an exact decimal fold (the decimal_avg discipline), so quartile
-    boundaries hash-gate. ``materialize`` ('local' | 'reliable') picks
-    the three chained blocked ranks' lineage-cut flavor — a 100 TB
-    caller under executor-loss risk passes 'reliable' (requires
-    ``setCheckpointDir`` on durable storage)."""
+    boundaries hash-gate."""
     o = _t(spark, sf_dir, "orders")
     base = o.groupBy("o_custkey").agg(
         F.max("o_orderdate").alias("last_order"),
@@ -5768,7 +5762,6 @@ def customer_rfm_segments_q(spark, sf_dir, materialize="local"):
             [F.col(metric).desc(), F.col("o_custkey")],
             4,
             col,
-            materialize=materialize,
             plan_width=win.post_shuffle_width(spark),
         )
     return tiers.select(

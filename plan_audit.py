@@ -182,11 +182,13 @@ def _ui(spark, path: str):
         return json.load(r)
 
 
-def _sql_executions(spark, offset: int = 0) -> list:
-    """/sql executions from ``offset`` (paged), in id order."""
+def _sql_executions(spark, offset: int = 0, plans: bool = True) -> list:
+    """/sql executions from ``offset`` (paged), in id order. With
+    ``plans=False`` each row leaves out its plan text and node graph."""
+    lean = "" if plans else "&details=false&planDescription=false"
     out: list = []
     while True:
-        page = _ui(spark, f"/sql?offset={offset + len(out)}&length=100")
+        page = _ui(spark, f"/sql?offset={offset + len(out)}&length=100{lean}")
         out.extend(page)
         if len(page) < 100:
             break
@@ -204,7 +206,8 @@ class ExecCursor:
 
     def __init__(self, spark) -> None:
         self.spark = spark
-        full = _sql_executions(spark)
+        # only the count and the last id are needed: no plans
+        full = _sql_executions(spark, plans=False)
         self.offset = len(full)
         self.last_id = full[-1]["id"] if full else -1
 

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_pipelines_cu_spark.operators import llm, multimodal
+from tests import media_encoders as enc
 
 
 def _media_df(spark):
@@ -21,69 +22,88 @@ def test_attach_media_meta(spark):
     assert r.meta.mime == "application/octet-stream"
 
 
+def _image_blobs():
+    """The same random 5x7 image as PPM, BMP, PNG and baseline JPEG."""
+    import numpy as np
+
+    px = np.random.default_rng(5).integers(0, 256, (5, 7, 3), dtype=np.uint8)
+    return [
+        enc_fn(px)
+        for enc_fn in (
+            multimodal.encode_ppm,
+            multimodal.encode_bmp,
+            multimodal.encode_png,
+            multimodal.encode_jpeg_baseline,
+        )
+    ]
+
+
+def _blob_df(spark, blobs):
+    """One row per blob, then one NULL payload (id = len(blobs))."""
+    rows = [(i, bytearray(b)) for i, b in enumerate(blobs)]
+    return spark.createDataFrame(
+        rows + [(len(blobs), None)], "media_id long, payload binary"
+    )
+
+
 def test_extract_features_stub_deterministic(spark):
-    df = _media_df(spark)
+    """Real encoded images through the Arrow stage: digest, length and
+    decoded-pixel features per blob, identical across runs; a NULL
+    payload gives NULL outputs and an undecodable one fails loudly."""
+    import hashlib
+
+    blobs = _image_blobs()
+    df = _blob_df(spark, blobs)
     a = multimodal.extract_features(df).orderBy("media_id").collect()
     b = multimodal.extract_features(df).orderBy("media_id").collect()
-    assert [r.sha256 for r in a] == [r.sha256 for r in b]
-    assert all(len(r.feature) == 8 for r in a)
-    assert all(0.0 <= v < 1.0 for r in a for v in r.feature)
-    assert a[0].n_bytes == 100 and a[4].n_bytes == 500
+    assert a == b
+    assert [r.sha256 for r in a[:-1]] == [
+        hashlib.sha256(x).hexdigest() for x in blobs
+    ]
+    assert [r.n_bytes for r in a[:-1]] == [len(x) for x in blobs]
+    for r, x in zip(a, blobs):
+        assert r.feature == pytest.approx(
+            multimodal.decode_image_real(x), rel=1e-6
+        )
+        assert all(0.0 <= v <= 1.0 for v in r.feature)
+    assert (a[-1].sha256, a[-1].n_bytes, a[-1].feature) == (None, None, None)
+    junk = spark.createDataFrame(
+        [(1, bytearray(b"not an image"))], "media_id long, payload binary"
+    )
+    with pytest.raises(Exception, match="ValueError"):
+        multimodal.extract_features(junk).collect()
 
 
 def test_real_decoder_rejects_compressed_formats():
-    # compressed formats still need a codec library; the real kernel
-    # decodes PPM/BMP and refuses anything else loudly
+    # a truncated PNG does not decode: the kernel refuses it loudly
     with pytest.raises(ValueError):
         multimodal.decode_image_real(b"\x89PNG")
 
 
-def test_frame_sample_plan(spark):
-    df = multimodal.attach_media_meta(_media_df(spark))
-    plan = multimodal.frame_sample_plan(df, every_n=1)
-    per = {r.media_id: r["count"] for r in plan.groupBy("media_id").count().collect()}
-    # fake frame count = n_bytes/1000 + 1 → 1 frame for small blobs
-    assert per[0] == 1
-
-
 def test_sample_frames_decode_stage(spark):
     """Frame fan-out carries the blob to the Arrow decode stage: one row
-    per sampled frame, per-frame deterministic bytes of out_w*out_h."""
-    big = spark.createDataFrame(
-        [(1, b"v" * 5000), (2, b"w" * 1000)], ["media_id", "payload"]
+    per sampled frame of a real MJPEG AVI, out_w*out_h grayscale bytes
+    per frame, different per frame and identical across runs."""
+    import numpy as np
+
+    def video(n_frames):
+        return enc.encode_avi_mjpeg(
+            [np.full((8, 8, 3), 40 * i + 20, np.uint8) for i in range(n_frames)]
+        )
+
+    df = spark.createDataFrame(
+        [(1, video(5)), (2, video(2))], "media_id long, payload binary"
     )
-    df = multimodal.attach_media_meta(big)
-    frames = multimodal.sample_frames(df, every_n=2, out_w=4, out_h=3)
-    rows = frames.collect()
-    # media 1: fake frame count 6 → indices 0,2,4; media 2: count 2 → 0
-    got = {(r.media_id, r.frame_idx) for r in rows}
-    assert got == {(1, 0), (1, 2), (1, 4), (2, 0)}
-    assert all(len(r.frame) == 12 for r in rows)
-    # frames differ per index but are deterministic across runs
-    by_key = {(r.media_id, r.frame_idx): r.frame for r in rows}
+
+    def sample():
+        rows = multimodal.sample_frames_mjpeg(df, every_n=2, out_w=4, out_h=3)
+        return {(r.media_id, r.frame_idx): r.frame for r in rows.collect()}
+
+    by_key = sample()
+    assert set(by_key) == {(1, 0), (1, 2), (1, 4), (2, 0)}
+    assert all(len(f) == 12 for f in by_key.values())
     assert by_key[(1, 0)] != by_key[(1, 2)]
-    again = {
-        (r.media_id, r.frame_idx): r.frame
-        for r in multimodal.sample_frames(df, every_n=2, out_w=4, out_h=3).collect()
-    }
-    assert by_key == again
-
-
-def test_audio_chunk_features(spark):
-    """Chunk fan-out slices the payload JVM-side; features depend on the
-    chunk's own bytes (different chunks → different features)."""
-    audio = spark.createDataFrame(
-        [(1, bytes(range(256)) * 40), (2, b"")], ["media_id", "payload"]
-    )  # 10240 bytes → 3 chunks at 4000; empty payload → 1 chunk
-    out = multimodal.audio_chunk_features(audio, bytes_per_chunk=4000, dim=4)
-    rows = out.collect()
-    per = {}
-    for r in rows:
-        per.setdefault(r.media_id, {})[r.chunk_idx] = tuple(r.feature)
-    assert set(per[1]) == {0, 1, 2}
-    assert set(per[2]) == {0}
-    assert per[1][0] != per[1][2]  # chunk content drives the feature
-    assert all(len(f) == 4 for c in per.values() for f in c.values())
+    assert by_key == sample()
 
 
 def test_llm_extract_mock_and_contract(spark):
@@ -117,24 +137,37 @@ def test_llm_extractor_deterministic(spark):
 
 
 def test_resize_images_stub_contract(spark):
-    """Resize yields exactly out_w*out_h bytes per blob, deterministically,
-    and composes with feature extraction without leaving binary columns."""
+    """Resize decodes each real blob to exactly out_w x out_h
+    nearest-neighbor pixels, deterministically, passes a NULL payload
+    through as NULL, and composes with feature extraction without
+    leaving binary columns."""
+    import numpy as np
+
     from data_pipelines_cu_spark.operators import multimodal as mm
 
-    df = spark.createDataFrame(
-        [(1, b"abc"), (2, b"defg"), (3, None)], "media_id long, payload binary"
-    )
+    blobs = _image_blobs()
+    df = _blob_df(spark, blobs)
     out = mm.resize_images(df, 4, 3)
     rows = {r.media_id: r for r in out.collect()}
-    assert all(len(r.resized) == 12 for r in rows.values())
     assert all(r.out_w == 4 and r.out_h == 3 for r in rows.values())
+    for i, blob in enumerate(blobs):
+        src = mm.decode_pixels(blob)
+        want = src[(np.arange(3) * 5) // 3][:, (np.arange(4) * 7) // 4]
+        assert np.array_equal(mm.decode_pixels(bytes(rows[i].resized)), want)
+    assert rows[len(blobs)].resized is None
     again = {r.media_id: r.resized for r in mm.resize_images(df, 4, 3).collect()}
     assert {k: r.resized for k, r in rows.items()} == again
-    assert rows[1].resized != rows[2].resized
-    chained = mm.extract_features(
-        out.select("media_id", F.col("resized").alias("payload"))
-    )
-    assert chained.count() == 3
+    chained = {
+        r.media_id: r.feature
+        for r in mm.extract_features(
+            out.select("media_id", F.col("resized").alias("payload"))
+        ).collect()
+    }
+    assert chained[len(blobs)] is None
+    for i in range(len(blobs)):
+        assert chained[i] == pytest.approx(
+            mm.decode_image_real(bytes(rows[i].resized)), rel=1e-6
+        )
 
 
 def test_real_pixel_codec_round_trip():
@@ -164,7 +197,7 @@ def test_real_decode_features_through_arrow(spark):
     px[:, :, 2] = np.arange(16).reshape(4, 4) * 10  # blue gradient
     blob = mm.encode_bmp(px)
     df = spark.createDataFrame([(1, bytearray(blob))], "media_id long, payload binary")
-    row = mm.extract_features(df, kernel=mm.decode_image_real).collect()[0]
+    row = mm.extract_features(df).collect()[0]
     feats = row.feature
     assert abs(feats[0] - 200 / 255.0) < 1e-6            # mean R
     assert abs(feats[1]) < 1e-6                          # mean G = 0
@@ -185,7 +218,7 @@ def test_real_resize_through_arrow(spark):
     df = spark.createDataFrame(
         [(1, bytearray(mm.encode_ppm(px)))], "media_id long, payload binary"
     )
-    row = mm.resize_images(df, 2, 2, kernel=mm.resize_image_real).collect()[0]
+    row = mm.resize_images(df, 2, 2).collect()[0]
     out = mm.decode_pixels(bytes(row.resized))
     assert out.shape == (2, 2, 3)
     assert np.array_equal(out, px[[0, 2]][:, [0, 2]])  # nearest = floor index
@@ -211,13 +244,13 @@ def test_wav_codec_round_trip_and_chunk_walk():
 
     rng = np.random.default_rng(3)
     mono = rng.integers(-32768, 32767, size=500, dtype=np.int16)
-    sr, back = mm.decode_wav(mm.encode_wav(mono, 8000))
+    sr, back = mm.decode_wav(enc.encode_wav(mono, 8000))
     assert sr == 8000 and np.array_equal(back[:, 0], mono)
     stereo = rng.integers(-32768, 32767, size=(300, 2), dtype=np.int16)
-    _, back2 = mm.decode_wav(mm.encode_wav(stereo))
+    _, back2 = mm.decode_wav(enc.encode_wav(stereo))
     assert np.array_equal(back2, stereo)
     # inject a LIST chunk between fmt and data
-    blob = mm.encode_wav(mono, 8000)
+    blob = enc.encode_wav(mono, 8000)
     fmt_end = 12 + 8 + 16
     extra = b"LIST" + struct.pack("<I", 4) + b"INFO"
     patched = blob[:fmt_end] + extra + blob[fmt_end:]
@@ -242,7 +275,7 @@ def test_wav_chunk_features_real_samples_through_arrow(spark):
     t = np.arange(12000)
     wave = np.where((t // 40) % 2 == 0, 1000, -1000).astype(np.int16)
     df = spark.createDataFrame(
-        [(1, bytearray(mm.encode_wav(wave, 8000)))],
+        [(1, bytearray(enc.encode_wav(wave, 8000)))],
         "media_id long, payload binary",
     )
     rows = {r.chunk_idx: r for r in
@@ -420,7 +453,7 @@ def test_png_flows_through_arrow_resize(spark):
     df = spark.createDataFrame(
         [(1, bytearray(mm.encode_png(px)))], "media_id long, payload binary"
     )
-    row = mm.resize_images(df, 2, 2, kernel=mm.resize_image_real).collect()[0]
+    row = mm.resize_images(df, 2, 2).collect()[0]
     out = mm.decode_pixels(bytes(row.resized))
     assert out.shape == (2, 2, 3)
     assert np.array_equal(out, px[[0, 2]][:, [0, 2]])
@@ -484,11 +517,11 @@ def test_jpeg_flows_through_arrow_decode_and_resize(spark):
     df = spark.createDataFrame(
         [(1, bytearray(blob))], "media_id long, payload binary"
     )
-    row = mm.extract_features(df, kernel=mm.decode_image_real).collect()[0]
+    row = mm.extract_features(df).collect()[0]
     # flat field survives JPEG exactly -> features are exact
     assert abs(row.feature[0] - 200 / 255.0) < 1e-6
     assert abs(row.feature[1]) < 1e-6
-    rrow = mm.resize_images(df, 4, 4, kernel=mm.resize_image_real).collect()[0]
+    rrow = mm.resize_images(df, 4, 4).collect()[0]
     out = mm.decode_pixels(bytes(rrow.resized))
     assert out.shape == (4, 4, 3)
     assert np.array_equal(out, px[[0, 4, 8, 12]][:, [0, 4, 8, 12]])
@@ -553,7 +586,7 @@ def test_progressive_jpeg_decodes_identically_to_baseline():
         .astype(np.uint8),
     ]
     for img in images:
-        prog = mm.encode_jpeg_progressive(img)
+        prog = enc.encode_jpeg_progressive(img)
         base = mm.encode_jpeg_baseline(img)
         got = mm.decode_pixels(prog)
         want = mm.decode_pixels(base)

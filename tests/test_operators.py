@@ -596,3 +596,28 @@ def test_jl_project_quotes_names_and_refuses_expressions(spark):
     for bad in (F.reverse(F.col("my vec")), F.col("`my vec`").alias("v")):
         with pytest.raises(ValueError, match="bare column reference"):
             sim.jl_project(bad, planes)
+
+
+def test_lineage_cuts_go_through_one_chokepoint():
+    """spark.graft.reliableCuts decides every lineage cut only if no
+    module cuts on its own: outside operators/materialize.py (the
+    chokepoint) and streaming/jobs.py (micro-batch frames, where reliable
+    cuts would pile up one file set per batch), the package calls neither
+    localCheckpoint nor checkpoint."""
+    import ast
+    from pathlib import Path
+
+    import data_pipelines_cu_spark
+
+    root = Path(data_pipelines_cu_spark.__file__).parent
+    exempt = {root / "operators" / "materialize.py", root / "streaming" / "jobs.py"}
+    calls = [
+        f"{path.relative_to(root)}:{node.lineno}"
+        for path in sorted(root.rglob("*.py"))
+        if path not in exempt
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("localCheckpoint", "checkpoint")
+    ]
+    assert calls == [], f"lineage cuts bypassing lineage_cut: {calls}"

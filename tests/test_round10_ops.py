@@ -8,6 +8,7 @@ from __future__ import annotations
 import pytest
 
 from data_pipelines_cu_spark.operators import sampling as smp
+from tests import media_encoders as enc
 
 
 def test_pack_sequences_rejects_id_equals_token_col():
@@ -273,11 +274,11 @@ def test_webp_color_cache_only_stream():
         np.array([[[37, 201, 96]]], np.uint8), (11, 13, 1)
     )
     for bits in (1, 11):
-        blob = mm.encode_webp_lossless(uniform, cache_bits=bits)
+        blob = enc.encode_webp_lossless(uniform, cache_bits=bits)
         assert np.array_equal(mm.decode_pixels(blob), uniform)
     two = np.zeros((6, 8, 3), np.uint8)
     two[:, 1::2] = (255, 10, 7)
-    blob = mm.encode_webp_lossless(two, cache_bits=2)
+    blob = enc.encode_webp_lossless(two, cache_bits=2)
     assert np.array_equal(mm.decode_pixels(blob), two)
 
 

@@ -16,6 +16,8 @@ from pathlib import Path
 
 import pytest
 
+from tests.test_plan_audit import _cursor_with, _FakeSql
+
 REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
 
@@ -121,25 +123,6 @@ def test_attach_forensics_decorates_flags_and_survives_stale_names(spark):
 
 
 # --- ExecCursor: offset reads, eviction fallback ---------------------------------
-
-
-class _FakeSql:
-    """Scripted stand-in for plan_audit._sql_executions: serves slices of
-    a mutable listing and counts full fetches (offset=0) separately."""
-
-    def __init__(self, listing):
-        self.listing = listing
-        self.full_fetches = 0
-
-    def __call__(self, spark, offset: int = 0):
-        if offset == 0:
-            self.full_fetches += 1
-        return self.listing[offset:]
-
-
-def _cursor_with(pa, fake):
-    pa._sql_executions = fake
-    return pa.ExecCursor(None)
 
 
 def test_exec_cursor_confirmed_eviction_degrades():
@@ -853,36 +836,6 @@ def test_selftest_status_requires_real_capture():
         == "error"
     )
     assert bench.selftest_status(None) == "error"
-
-
-def test_psi_materialize_local_is_not_overridden_by_reliable_cuts(spark):
-    """psi_value_drift's per-call materialize knob keeps the same
-    contract as blocked_row_number's: an EXPLICIT 'local' stays local
-    even when spark.graft.reliableCuts=true — the session conf must not
-    upgrade (or, with no checkpoint dir, break) a deliberate per-call
-    choice."""
-    from pyspark.sql import functions as F
-
-    from data_pipelines_cu_spark.operators.aggregates import psi_value_drift
-    from data_pipelines_cu_spark.operators.materialize import (
-        RELIABLE_CUTS_CONF,
-    )
-
-    ev = spark.range(400).select(
-        F.col("id").alias("event_id"),
-        F.timestamp_seconds(F.lit(1_700_000_000) + F.col("id") * 3600).alias(
-            "ts"
-        ),
-        (F.col("id") % 37).cast("double").alias("value"),
-    )
-    spark.conf.set(RELIABLE_CUTS_CONF, "true")
-    try:
-        # must not raise even with no checkpoint dir guaranteed: the
-        # explicit 'local' bypasses the session-wide chokepoint
-        out = psi_value_drift(ev, materialize="local")
-        assert out.count() > 0
-    finally:
-        spark.conf.set(RELIABLE_CUTS_CONF, "false")
 
 
 def test_occupancy_skew_detects_total_collapse(spark, tmp_path):

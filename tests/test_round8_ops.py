@@ -1,5 +1,5 @@
 """Round-8 regression tests: the take_ordered threshold guard's helpers
-(reliable blocked-rank materialization), the interval-join coarse-lane
+(reliable blocked-rank lineage cuts), the interval-join coarse-lane
 gate + inverted intervals, GIF corrupt-stream strictness (out-of-range
 palette index, zero-size descriptor), the PCA DECIMAL(37,12) headroom,
 CUSUM degenerate series (single day, constant series, exact |G| ties),
@@ -22,6 +22,7 @@ from data_pipelines_cu_spark.operators.windows import (
     blocked_row_number,
     take_ordered,
 )
+from tests import media_encoders as enc
 
 
 def _ranks(df, cols=("k", "r")):
@@ -32,31 +33,33 @@ def _ranks(df, cols=("k", "r")):
 
 
 def test_blocked_row_number_reliable_checkpoint(spark, tmp_path):
-    """materialize='reliable' writes the lineage cut to the checkpoint
-    dir (recoverable after executor loss) and ranks identically to the
-    default local variant."""
+    """spark.graft.reliableCuts=true writes the lineage cut to the
+    checkpoint dir (recoverable after executor loss) and ranks
+    identically to the default local cut; with no checkpoint dir the
+    rank raises lineage_cut's error instead of cutting locally."""
+    from data_pipelines_cu_spark.operators.materialize import (
+        RELIABLE_CUTS_CONF,
+    )
+
     sc = spark.sparkContext
     old_dir = sc._jsc.sc().getCheckpointDir()
-    sc.setCheckpointDir(str(tmp_path / "ckpt"))
+    rows = [(i, [3.5, None, 1.0, 3.5][i % 4]) for i in range(200)]
+    df = spark.createDataFrame(rows, "k long, v double").repartition(5)
+    local = blocked_row_number(df, ["v", "k"], rank_col="r")
+    spark.conf.set(RELIABLE_CUTS_CONF, "true")
     try:
-        rows = [(i, [3.5, None, 1.0, 3.5][i % 4]) for i in range(200)]
-        df = spark.createDataFrame(rows, "k long, v double").repartition(5)
-        local = blocked_row_number(df, ["v", "k"], rank_col="r")
-        reliable = blocked_row_number(
-            df, ["v", "k"], rank_col="r", materialize="reliable"
-        )
+        if not old_dir.isDefined():
+            with pytest.raises(ValueError, match="no checkpoint directory"):
+                blocked_row_number(df, ["v", "k"], rank_col="r")
+        sc.setCheckpointDir(str(tmp_path / "ckpt"))
+        reliable = blocked_row_number(df, ["v", "k"], rank_col="r")
         assert _ranks(local) == _ranks(reliable)
         ckpts = list((tmp_path / "ckpt").rglob("*"))
         assert ckpts, "reliable checkpoint wrote nothing to the dir"
     finally:
+        spark.conf.set(RELIABLE_CUTS_CONF, "false")
         if old_dir.isDefined():
             sc.setCheckpointDir(old_dir.get())
-
-
-def test_blocked_row_number_bad_materialize_rejected(spark):
-    df = spark.range(3)
-    with pytest.raises(ValueError, match="materialize"):
-        blocked_row_number(df, ["id"], materialize="persist")
 
 
 def test_blocked_ntile_tiles_and_blocks_exceed_rows(spark):
@@ -416,7 +419,7 @@ def test_avi_mjpeg_round_trip_first_frame():
 
     for n, h, w, seed in [(1, 8, 8, 0), (3, 17, 9, 1), (5, 24, 40, 2)]:
         frames = _frames(n, h, w, seed)
-        blob = mm.encode_avi_mjpeg(frames)
+        blob = enc.encode_avi_mjpeg(frames)
         split = mm.avi_mjpeg_frames(blob)
         assert len(split) == n
         first = mm.decode_pixels(blob)
@@ -435,7 +438,7 @@ def test_avi_rejects_other_codecs_and_corruption():
 
     from data_pipelines_cu_spark.operators import multimodal as mm
 
-    blob = bytearray(mm.encode_avi_mjpeg(_frames(2, 8, 8)))
+    blob = bytearray(enc.encode_avi_mjpeg(_frames(2, 8, 8)))
     # flip the strh handler + strf biCompression fourccs to H264
     i = blob.find(b"MJPG")
     while i != -1:
@@ -443,13 +446,13 @@ def test_avi_rejects_other_codecs_and_corruption():
         i = blob.find(b"MJPG")
     with _pytest.raises(ValueError, match="codec"):
         mm.avi_mjpeg_frames(bytes(blob))
-    good = mm.encode_avi_mjpeg(_frames(2, 8, 8))
+    good = enc.encode_avi_mjpeg(_frames(2, 8, 8))
     with _pytest.raises(ValueError):
         mm.avi_mjpeg_frames(good[:40])  # truncated chunk run
     with _pytest.raises(ValueError, match="RIFF/AVI"):
         mm.avi_mjpeg_frames(b"RIFF\x04\x00\x00\x00WAVE")
     with _pytest.raises(ValueError):
-        mm.encode_avi_mjpeg([])
+        enc.encode_avi_mjpeg([])
 
 
 def test_avi_real_frame_sampling_end_to_end(spark):
@@ -461,8 +464,8 @@ def test_avi_real_frame_sampling_end_to_end(spark):
     from data_pipelines_cu_spark.operators import multimodal as mm
 
     vids = [
-        (1, mm.encode_avi_mjpeg(_frames(5, 16, 16, 3))),
-        (2, mm.encode_avi_mjpeg(_frames(2, 16, 16, 4))),
+        (1, enc.encode_avi_mjpeg(_frames(5, 16, 16, 3))),
+        (2, enc.encode_avi_mjpeg(_frames(2, 16, 16, 4))),
     ]
     df = spark.createDataFrame(vids, "media_id long, payload binary")
     out = mm.sample_frames_mjpeg(df, every_n=2, out_w=4, out_h=4)
@@ -487,7 +490,7 @@ def test_avi_drop_frames_rec_lists_and_stream_filter():
 
     from data_pipelines_cu_spark.operators import multimodal as mm
 
-    base = bytearray(mm.encode_avi_mjpeg(_frames(2, 8, 8, 7)))
+    base = bytearray(enc.encode_avi_mjpeg(_frames(2, 8, 8, 7)))
     # rebuild the movi LIST as: frame0, a drop frame, a foreign
     # stream-1 chunk, then frame1 wrapped in a 'rec ' LIST
     frames = mm.avi_mjpeg_frames(bytes(base))
@@ -517,7 +520,7 @@ def test_avi_bi_rgb_compression_falls_back_to_strh_handler():
     still be accepted — the all-zero fourcc no longer overrides strh."""
     from data_pipelines_cu_spark.operators import multimodal as mm
 
-    blob = bytearray(mm.encode_avi_mjpeg(_frames(1, 8, 8, 9)))
+    blob = bytearray(enc.encode_avi_mjpeg(_frames(1, 8, 8, 9)))
     # strf's biCompression sits 16 bytes into the strf body
     strf_at = bytes(blob).index(b"strf") + 8 + 16
     assert bytes(blob[strf_at : strf_at + 4]) == b"MJPG"
@@ -529,7 +532,7 @@ def test_sample_frames_mjpeg_honors_id_col(spark):
     from data_pipelines_cu_spark.operators import multimodal as mm
 
     df = spark.createDataFrame(
-        [(7, mm.encode_avi_mjpeg(_frames(3, 8, 8, 5)))],
+        [(7, enc.encode_avi_mjpeg(_frames(3, 8, 8, 5)))],
         "video_id long, payload binary",
     )
     out = mm.sample_frames_mjpeg(df, every_n=2, id_col="video_id").collect()
@@ -542,7 +545,7 @@ def test_sample_frames_mjpeg_single_input_scan(spark):
     from data_pipelines_cu_spark.operators import multimodal as mm
 
     df = spark.createDataFrame(
-        [(1, mm.encode_avi_mjpeg(_frames(2, 8, 8, 6)))],
+        [(1, enc.encode_avi_mjpeg(_frames(2, 8, 8, 6)))],
         "media_id long, payload binary",
     )
     plan = (
@@ -591,7 +594,7 @@ def test_sample_frames_mjpeg_string_id(spark):
     from data_pipelines_cu_spark.operators import multimodal as mm
 
     df = spark.createDataFrame(
-        [("vid-a", mm.encode_avi_mjpeg(_frames(2, 8, 8, 8)))],
+        [("vid-a", enc.encode_avi_mjpeg(_frames(2, 8, 8, 8)))],
         "video_id string, payload binary",
     )
     out = mm.sample_frames_mjpeg(df, every_n=1, id_col="video_id").collect()
@@ -608,7 +611,7 @@ def test_avi_hex_stream_numbers_accepted():
 
     from data_pipelines_cu_spark.operators import multimodal as mm
 
-    base = mm.encode_avi_mjpeg(_frames(1, 8, 8, 11))
+    base = enc.encode_avi_mjpeg(_frames(1, 8, 8, 11))
     frames = mm.avi_mjpeg_frames(base)
 
     def chunk(fourcc, body):
@@ -653,7 +656,7 @@ def test_avi_hex_spelling_not_absorbed_when_decimal_stream_exists():
 
     from data_pipelines_cu_spark.operators import multimodal as mm
 
-    base = mm.encode_avi_mjpeg(_frames(1, 8, 8, 13))
+    base = enc.encode_avi_mjpeg(_frames(1, 8, 8, 13))
     frames = mm.avi_mjpeg_frames(base)
 
     def chunk(fourcc, body):

@@ -2,8 +2,8 @@
 blocked-rank family (the fixed n_blocks=32 parallelism ceiling is gone),
 take_ordered's compile-free pricing ladder + boundary probes (AT the
 threshold, AT the merge budget, n >= row count on the blocked path, the
-EliminateLimits bounded-plan carve-out), materialize='reliable' plumbed
-through the blocked-rank consumers, the now-LAZY interval-join lane
+EliminateLimits bounded-plan carve-out), spark.graft.reliableCuts
+reaching the blocked-rank consumers, the now-LAZY interval-join lane
 gate (no job at plan-build time), AVI stream ids past 99 (hex spelling)
 and past 0xFF (explicit reject), and frame sampling with every_n above
 every container's frame count."""
@@ -11,6 +11,7 @@ every container's frame count."""
 from __future__ import annotations
 
 import struct
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import DataFrame
@@ -20,12 +21,14 @@ from pyspark.sql import functions as F
 from data_pipelines_cu_spark.operators import aggregates as ag
 from data_pipelines_cu_spark.operators import joins as jn
 from data_pipelines_cu_spark.operators import text as tx
+from data_pipelines_cu_spark.operators.materialize import RELIABLE_CUTS_CONF
 from data_pipelines_cu_spark.operators.windows import (
     blocked_row_number,
     derived_block_count,
     post_shuffle_width,
     take_ordered,
 )
+from tests import media_encoders as enc
 
 
 def _plan(df):
@@ -197,6 +200,15 @@ def ckpt_dir(spark, tmp_path):
         sc.setCheckpointDir(old.get())
 
 
+@contextmanager
+def _reliable_cuts(spark):
+    spark.conf.set(RELIABLE_CUTS_CONF, "true")
+    try:
+        yield
+    finally:
+        spark.conf.set(RELIABLE_CUTS_CONF, "false")
+
+
 def test_psi_value_drift_reliable_materialize(spark, ckpt_dir):
     rows = [
         (i, f"2024-01-{1 + (i % 10):02d} 00:00:00", float((i * 13) % 97))
@@ -204,20 +216,10 @@ def test_psi_value_drift_reliable_materialize(spark, ckpt_dir):
     ]
     df = spark.createDataFrame(rows, "event_id long, ts string, value double")
     local = sorted(map(tuple, ag.psi_value_drift(df).collect()))
-    rel = sorted(
-        map(tuple, ag.psi_value_drift(df, materialize="reliable").collect())
-    )
+    with _reliable_cuts(spark):
+        rel = sorted(map(tuple, ag.psi_value_drift(df).collect()))
     assert local == rel
     assert list(ckpt_dir.rglob("*")), "reliable cut wrote nothing"
-
-
-def test_psi_value_drift_bad_materialize_rejected(spark):
-    df = spark.createDataFrame(
-        [(1, "2024-01-01 00:00:00", 1.0)],
-        "event_id long, ts string, value double",
-    )
-    with pytest.raises(ValueError, match="materialize"):
-        ag.psi_value_drift(df, materialize="cached")
 
 
 def test_gini_and_calibrate_reliable_materialize(spark, ckpt_dir):
@@ -226,27 +228,18 @@ def test_gini_and_calibrate_reliable_materialize(spark, ckpt_dir):
         [(i % 25, float(10 + i)) for i in range(200)],
         "o_custkey long, o_totalprice double",
     )
-    g_loc = sorted(map(tuple, ag.gini_concentration(ents, fact).collect()))
-    g_rel = sorted(
-        map(
-            tuple,
-            ag.gini_concentration(ents, fact, materialize="reliable").collect(),
-        )
-    )
-    assert g_loc == g_rel
     docs = spark.createDataFrame(
         [(i, f"s{i % 3}", float((i * 31) % 83)) for i in range(120)],
         "doc_id long, source string, quality double",
     )
+    g_loc = sorted(map(tuple, ag.gini_concentration(ents, fact).collect()))
     c_loc = sorted(map(tuple, tx.quality_quantile_calibrate(docs).collect()))
-    c_rel = sorted(
-        map(
-            tuple,
-            tx.quality_quantile_calibrate(
-                docs, materialize="reliable"
-            ).collect(),
+    with _reliable_cuts(spark):
+        g_rel = sorted(map(tuple, ag.gini_concentration(ents, fact).collect()))
+        c_rel = sorted(
+            map(tuple, tx.quality_quantile_calibrate(docs).collect())
         )
-    )
+    assert g_loc == g_rel
     assert c_loc == c_rel
     assert list(ckpt_dir.rglob("*"))
 
@@ -256,7 +249,8 @@ def test_rfm_query_reliable_materialize(spark, sf_dir, ckpt_dir):
 
     fn = all_queries()["customer_rfm_segments"].fn
     loc = sorted(map(tuple, fn(spark, sf_dir).collect()))
-    rel = sorted(map(tuple, fn(spark, sf_dir, materialize="reliable").collect()))
+    with _reliable_cuts(spark):
+        rel = sorted(map(tuple, fn(spark, sf_dir).collect()))
     assert loc == rel
 
 
@@ -353,7 +347,7 @@ def _one_jpeg():
     from data_pipelines_cu_spark.operators import multimodal as mm
 
     frame = np.full((8, 8, 3), 128, dtype=np.uint8)
-    return mm.avi_mjpeg_frames(mm.encode_avi_mjpeg([frame]))[0]
+    return mm.avi_mjpeg_frames(enc.encode_avi_mjpeg([frame]))[0]
 
 
 def test_avi_stream_index_over_99_matches_hex_spelling():
@@ -394,7 +388,7 @@ def test_sample_frames_every_n_past_frame_count(spark):
 
     from data_pipelines_cu_spark.operators import multimodal as mm
 
-    mk = lambda seed: mm.encode_avi_mjpeg(  # noqa: E731
+    mk = lambda seed: enc.encode_avi_mjpeg(  # noqa: E731
         [
             np.full((8, 8, 3), 60 + 10 * i + seed, dtype=np.uint8)
             for i in range(3)
@@ -415,7 +409,7 @@ def _rt_webp(img, **kw):
 
     from data_pipelines_cu_spark.operators import multimodal as mm
 
-    blob = mm.encode_webp_lossless(img, **kw)
+    blob = enc.encode_webp_lossless(img, **kw)
     out = mm.decode_pixels(blob)
     assert np.array_equal(out, img[:, :, :3]), kw
     return blob
@@ -469,7 +463,7 @@ def test_webp_decode_rejections():
     from data_pipelines_cu_spark.operators import multimodal as mm
 
     img = np.zeros((2, 2, 3), np.uint8)
-    good = bytearray(mm.encode_webp_lossless(img))
+    good = bytearray(enc.encode_webp_lossless(img))
     lossy = bytes(good).replace(b"VP8L", b"VP8 ")
     with _pytest.raises(ValueError, match="lossy"):
         mm.decode_pixels(lossy)
@@ -491,7 +485,7 @@ def test_webp_rides_the_media_pipeline(spark):
 
     rng = np.random.RandomState(3)
     img = rng.randint(0, 256, (6, 5, 3), np.uint8)
-    blob = mm.encode_webp_lossless(img, subtract_green=True)
+    blob = enc.encode_webp_lossless(img, subtract_green=True)
     assert np.array_equal(mm.decode_pixels(blob), img)
 
 
@@ -505,11 +499,11 @@ def test_webp_encoder_validates_arguments():
     from data_pipelines_cu_spark.operators import multimodal as mm
 
     with _pytest.raises(ValueError, match="16384"):
-        mm.encode_webp_lossless(np.zeros((1, 16385, 3), np.uint8))
+        enc.encode_webp_lossless(np.zeros((1, 16385, 3), np.uint8))
     img = np.zeros((2, 2, 3), np.uint8)
     for bad in (12, 16, -1):
         with _pytest.raises(ValueError, match="cache_bits"):
-            mm.encode_webp_lossless(img, cache_bits=bad)
+            enc.encode_webp_lossless(img, cache_bits=bad)
     # a >512-px dimension spans multiple constant predictor tiles
     wide = np.tile(
         np.arange(600, dtype=np.uint8).reshape(1, 600, 1) % 251, (2, 1, 3)
@@ -532,7 +526,7 @@ def test_webp_corrupt_streams_raise_valueerror_only():
     img = rng.randint(0, 256, (9, 11, 3), np.uint8)
     random.seed(42)
     for kw in (dict(subtract_green=True, cache_bits=4, lz77=True), dict(predictor=11)):
-        base = mm.encode_webp_lossless(img, **kw)
+        base = enc.encode_webp_lossless(img, **kw)
         for _ in range(400):
             blob = bytearray(base)
             for _ in range(random.randint(1, 4)):
@@ -577,12 +571,12 @@ def test_webp_rejects_zero_dimensions_and_dup_simple_symbols():
 
     for shape in ((0, 4, 3), (4, 0, 3)):
         with _pytest.raises(ValueError, match="1..16384"):
-            mm.encode_webp_lossless(np.zeros(shape, np.uint8))
+            enc.encode_webp_lossless(np.zeros(shape, np.uint8))
     # hand-build a stream whose first prefix code is simple, 2 symbols,
     # both 0x41: header(32) + no-transform(1) + no-cache(1) +
     # no-meta(1) + simple(1) + two-symbols(1) + 8-bit-first(1) +
     # 0x41(8) + 0x41(8)
-    bw = mm._Vp8lBitWriter()
+    bw = enc._Vp8lBitWriter()
     bw.bits(3, 14)  # w-1
     bw.bits(3, 14)  # h-1
     bw.bits(0, 1)
