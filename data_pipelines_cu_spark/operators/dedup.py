@@ -1406,28 +1406,38 @@ def incremental_near_dup(
     band width, exactly as in the batch pair path. In-batch ties resolve
     greedily: lowest id in a bucket survives.
 
-    Shuffles: band rows only (id + 32-byte hash), one semi-join against
-    the index and one bucket-min aggregate — per-batch cost is linear in
-    batch size and index lookups, never corpus text.
+    Shuffles: band rows only (id + 32-byte hash). One window over the
+    batch's band rows tagged-unioned with the index's (band, bhash),
+    partitioned by bucket: a row is hit when an index row shares its
+    bucket or its id is above the bucket's minimum id. A second window
+    by id drops every row of a doc with any hit. No join, and the band
+    rows are computed once, so the operator needs no lineage cut of its
+    own — per-batch cost is linear in batch size and index lookups, never
+    corpus text.
     """
     bands = minhash_band_rows(incoming, text_col, id_col, n)
-    # both the index probe and the bucket-min read these rows; materialize
-    # once (same lineage-cut idiom as the band self-join in pair dedup)
-    bands = bands.transform(lineage_cut)
-    idx_hit = (
-        bands.join(band_index.select("band", "bhash"), ["band", "bhash"], "leftsemi")
-        .select(id_col)
-        .distinct()
+    probe = band_index.select(
+        F.lit(None).cast(bands.schema[id_col].dataType).alias(id_col),
+        "band",
+        "bhash",
+        F.lit(True).alias("_idx"),
     )
-    bucket_min = bands.groupBy("band", "bhash").agg(F.min(id_col).alias("_min_id"))
-    batch_hit = (
-        bands.join(bucket_min, ["band", "bhash"])
-        .filter(F.col(id_col) > F.col("_min_id"))
-        .select(id_col)
-        .distinct()
+    bucket = Window.partitionBy("band", "bhash")
+    hit = F.max("_idx").over(bucket) | (
+        F.col(id_col) > F.min(id_col).over(bucket)
     )
-    losers = idx_hit.unionByName(batch_hit).distinct()
-    return bands.join(losers, id_col, "left_anti")
+    flagged = (
+        bands.withColumn("_idx", F.lit(False))
+        .unionByName(probe)
+        .withColumn("_hit", hit)
+        .filter(~F.col("_idx"))
+    )
+    lost = F.max("_hit").over(Window.partitionBy(id_col))
+    return (
+        flagged.withColumn("_lost", lost)
+        .filter(~F.col("_lost"))
+        .select(id_col, "band", "bhash")
+    )
 
 
 # --- Passage-level exact duplication -----------------------------------------

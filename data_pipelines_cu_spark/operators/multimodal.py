@@ -1274,7 +1274,8 @@ def sample_frames_mjpeg(
     BEFORE decode is the scale-critical ordering: a 2-hour video's
     frames decode on many tasks instead of serially inside one, and the
     repartition on (media_id, frame_idx) between the two stages spreads
-    one viral video across the cluster."""
+    one viral video across the cluster. A NULL payload has no frames, so
+    its row yields no frame rows."""
     import pandas as pd  # noqa: PLC0415
 
     id_type = df.schema[id_col].dataType  # honor non-long media keys too
@@ -1304,6 +1305,7 @@ def sample_frames_mjpeg(
 
     frames = (
         df.select(id_col, payload_col)
+        .filter(F.col(payload_col).isNotNull())
         .mapInPandas(count, schema=count_schema)
         .select(
             id_col,

@@ -449,6 +449,14 @@ def read_multi_table(
     (default) or an explicit COMMITTED version. Raises FileNotFoundError if
     the table has never been committed and ValueError for an orphan
     version."""
+    return spark.read.parquet(_multi_table_path(root, name, version, fs))
+
+
+def _multi_table_path(
+    root: str, name: str, version: int | None = None, fs=None
+) -> str:
+    """Directory of a committed version of ``name`` (the current one by
+    default); raises as :func:`read_multi_table` documents."""
     manifest, _ = _read_manifest(root, fs)
     tables = manifest.get("tables", {})
     history = manifest.get("table_history", {}).get(name, [])
@@ -458,4 +466,4 @@ def read_multi_table(
         version = int(tables[name])
     if int(version) not in {int(v) for v in history}:
         raise ValueError(f"version {version} of {name!r} never committed at {root}")
-    return spark.read.parquet(f"{root.rstrip('/')}/{name}/v={int(version)}")
+    return f"{root.rstrip('/')}/{name}/v={int(version)}"

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.aggregates import daily_rollup, multi_stat_time_bucket
+from ..operators.materialize import lineage_cut
 from ..operators.upsert import upsert_partitions
 from ..operators.windows import dedup_keep_last
 
@@ -46,15 +47,19 @@ def run_backfill(
 ) -> dict[str, DataFrame]:
     """The 30-day backfill flow (15:82-197): dedup → hourly → daily, each
     layer upserted at partition granularity (date) so recomputing any day
-    replaces exactly that day's partitions."""
-    ticks = dedup_ticks(raw)
+    replaces exactly that day's partitions. The keep-last ticks, with
+    their ``date`` column, are cut once (``lineage_cut``), so the three
+    writes read the dedup result instead of each re-reading the source and
+    re-running the dedup window."""
+    dated = (
+        dedup_ticks(raw)
+        .withColumn("date", F.date_format("fetch_time", "yyyy-MM-dd"))
+        .transform(lineage_cut)
+    )
+    ticks = dated.drop("date")
     hourly = hourly_stats(ticks)
     daily = daily_stats(hourly)
-    upsert_partitions(
-        ticks.withColumn("date", F.date_format("fetch_time", "yyyy-MM-dd")),
-        os.path.join(base_path, "raw"),
-        ["date"],
-    )
+    upsert_partitions(dated, os.path.join(base_path, "raw"), ["date"])
     upsert_partitions(hourly, os.path.join(base_path, "hourly"), ["date"])
     upsert_partitions(daily, os.path.join(base_path, "daily"), ["date"])
     return {"ticks": ticks, "hourly": hourly, "daily": daily}

@@ -1,11 +1,11 @@
 """Incremental curation: the production daily-ingest wave.
 
 Each wave of new documents is curated AGAINST PERSISTED STATE rather than
-by rescanning the corpus: exact dedup anti-joins the admitted-digest
-table, near-dup probes the admitted LSH band index, decontamination
-screens against the benchmark, and ALL THREE state tables (corpus,
-digests, bands) advance under ONE atomic multi-table commit keyed by the
-wave id (operators/table.commit_batch_multi) — so a crashed or replayed
+by rescanning the corpus: exact dedup windows the wave over the
+admitted-digest table, near-dup probes the admitted LSH band index,
+decontamination screens against the benchmark, and ALL THREE state tables
+(corpus, digests, bands) advance under ONE atomic multi-table commit keyed
+by the wave id (operators/table.commit_batch_multi) — so a crashed or replayed
 wave can never double-admit a document or tear the state. A crash at ANY
 point either leaves no table advanced (the wave's data dirs are invisible
 orphans; the replay recomputes from the same pre-wave committed state and
@@ -22,18 +22,25 @@ State is ADMITTED-ONLY by design, and that is self-consistent:
 - a recurring contaminated doc is re-caught by the contamination screen
   (benchmark membership is stateless).
 
-Scale: each wave shuffles digests/band hashes only (32-byte rows), the
-benchmark grams broadcast, and state updates are unions of the prior
-committed snapshot with the wave's admitted rows. Here the union rewrites
-the snapshot (fixture-sized state); a production deployment appends a
-wave partition to each state table instead — the commit protocol is
-unchanged. Reference grounding: the course's backfill anti-join upsert
-(lecture3/15:186-188), keyed on content and made stateful + transactional.
+Scale: each wave shuffles digests/band hashes only (32-byte rows) plus
+the wave's own rows, the benchmark grams broadcast, and state updates are
+unions of the prior committed snapshot with the wave's admitted rows. The
+wave's decisions land in ONE per-doc frame (doc columns, content hash,
+exact / near / admitted flags, surviving band rows) cut once, so the three
+state writes and the four counts read it instead of re-running the
+dedup plan: a wave runs about a dozen Spark jobs, set by dispatch, not by
+data. Here the union rewrites the snapshot (fixture-sized state); a
+production deployment appends a wave partition to each state table
+instead — the commit protocol is unchanged. Reference grounding: the
+course's backfill anti-join upsert (lecture3/15:186-188), keyed on
+content and made stateful + transactional.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import json
+
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.dedup import (
@@ -43,6 +50,7 @@ from ..operators.dedup import (
 )
 from ..operators.windows import take_ordered
 from ..operators.table import (
+    _multi_table_path,
     commit_batch_multi,
     multi_table_batches,
     read_multi_table,
@@ -51,10 +59,14 @@ from ..operators.materialize import lineage_cut
 
 
 def _load_state(spark: SparkSession, root: str, name: str, schema: str, fs=None):
+    """The current committed version of state table ``name``, read with its
+    declared ``schema`` (no schema-inference job); empty before the first
+    commit."""
     try:
-        return read_multi_table(spark, root, name, fs=fs)
+        path = _multi_table_path(root, name, fs=fs)
     except FileNotFoundError:
         return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(path)
 
 
 def ingest_wave(
@@ -77,43 +89,82 @@ def ingest_wave(
     bands = _load_state(
         spark, state_dir, "bands", "doc_id long, band int, bhash string", fs
     )
+    doc_cols = [id_col] + [c for c in new_docs.columns if c != id_col]
 
-    # 1. exact dedup: first occurrence in the wave, then anti-join the
-    # admitted-digest table (32-byte keys only)
-    inc = new_docs.select(
-        F.col(id_col), F.md5(normalized_text(text_col)).alias("content_hash")
+    # 1. exact dedup: one window over the wave's rows tagged-unioned with
+    # the admitted digests, by content hash (32-byte keys). A doc survives
+    # when no state row shares its hash and it holds the lowest id of its
+    # hash group in the wave.
+    by_hash = Window.partitionBy("content_hash")
+    exact = (
+        new_docs.select(
+            *doc_cols,
+            F.md5(normalized_text(text_col)).alias("content_hash"),
+            F.lit(False).alias("_seen"),
+        )
+        .unionByName(
+            digests.withColumn("_seen", F.lit(True)), allowMissingColumns=True
+        )
+        .withColumn(
+            "_exact",
+            ~F.max("_seen").over(by_hash)
+            & (F.col(id_col) == F.min(id_col).over(by_hash)),
+        )
+        .filter(~F.col("_seen"))
     )
-    firsts = inc.groupBy("content_hash").agg(F.min(id_col).alias(id_col))
-    fresh = firsts.join(
-        digests.select("content_hash").distinct(), "content_hash", "left_anti"
-    )
-    s1 = new_docs.join(fresh.select(id_col), id_col)
 
-    # 2. near-dup against the admitted band index (+ in-wave collisions)
+    # 2. near-dup against the admitted band index (+ in-wave collisions):
+    # a doc survives when the operator returns band rows for it
     surviving_bands = incremental_near_dup(
-        s1, bands, text_col=text_col, id_col=id_col
-    ).transform(lineage_cut)
-    s2 = s1.join(surviving_bands.select(id_col).distinct(), id_col)
+        exact.filter("_exact"), bands, text_col=text_col, id_col=id_col
+    )
+    frame = exact.join(
+        surviving_bands.groupBy(id_col).agg(
+            F.collect_list(F.struct("band", "bhash")).alias("_bands")
+        ),
+        id_col,
+        "left",
+    ).withColumn("_near", F.col("_bands").isNotNull())
 
     # 3. benchmark decontamination (broadcast gram digests, stateless)
+    admitted = F.col("_near")
     if benchmark is not None:
-        hits = contamination_hits(s2, benchmark, text_col=text_col, id_col=id_col)
-        s3 = s2.join(hits.select(id_col), id_col, "left_anti")
-    else:
-        s3 = s2
-    s3 = s3.transform(lineage_cut)
-    admitted_ids = s3.select(id_col)
-    admitted_bands = surviving_bands.join(admitted_ids, id_col, "leftsemi")
-    admitted_digests = inc.join(admitted_ids, id_col, "leftsemi").select(
-        "content_hash"
-    )
+        hits = contamination_hits(
+            frame.filter("_near"), benchmark, text_col=text_col, id_col=id_col
+        ).select(id_col, F.lit(True).alias("_hit"))
+        frame = frame.join(hits, id_col, "left")
+        admitted = admitted & F.col("_hit").isNull()
 
-    # 4. transactional state advance: ONE commit point for all three tables
+    # 4. the one cut: every write below reads this frame. The four counts
+    # are metrics observed while the cut's own job runs (no job of their
+    # own, and a replayed wave, whose commit writes nothing, still gets
+    # them), read back from the query execution the cut ran. Not through
+    # pyspark's Observation helper: it gives the session an
+    # ObservationManager that Spark cannot serialize, and every later
+    # Spark ML fit in that session then fails with "Task not
+    # serializable".
+    observed = frame.withColumn("_admitted", admitted).observe(
+        "ingest_wave_counts",
+        F.count(F.lit(1)).alias("incoming"),
+        F.count_if("_exact").alias("after_exact"),
+        F.count_if("_near").alias("after_near_dup"),
+        F.count_if("_admitted").alias("admitted"),
+    )
+    frame = observed.transform(lineage_cut)
+    counts = json.loads(
+        observed._jdf.queryExecution()
+        .observedMetrics()
+        .apply("ingest_wave_counts")
+        .json()
+    )
+    kept = frame.filter("_admitted")
+
+    # 5. transactional state advance: ONE commit point for all three tables
     versions = commit_batch_multi(
         {
-            "corpus": s3,
-            "digests": digests.unionByName(admitted_digests).distinct(),
-            "bands": bands.unionByName(admitted_bands),
+            "corpus": kept.select(*doc_cols),
+            "digests": digests.unionByName(kept.select("content_hash")).distinct(),
+            "bands": bands.unionByName(kept.select(id_col, F.inline("_bands"))),
         },
         state_dir,
         wave_id,
@@ -124,10 +175,7 @@ def ingest_wave(
 
     return {
         "wave_id": wave_id,
-        "incoming": new_docs.count(),
-        "after_exact": s1.count(),
-        "after_near_dup": s2.count(),
-        "admitted": s3.count(),
+        **counts,
         "corpus_version": versions["corpus"],
         "digest_version": versions["digests"],
         "bands_version": versions["bands"],

@@ -399,38 +399,43 @@ def run_cascade(
 ) -> StreamingQuery:
     """The hourly→daily cascade via foreachBatch (§7.3 hard part 5):
     each micro-batch upserts hourly partitions, then recomputes the daily
-    rollup for exactly the affected dates — streaming level 1, idempotent
-    batch level 2, mirroring the reference's separate DAGs."""
+    rollup for exactly the affected dates, reading back only their
+    ``date=`` directories — streaming level 1, idempotent batch level 2,
+    mirroring the reference's separate DAGs. A micro-batch that closed no
+    window writes nothing."""
     from ..operators.aggregates import daily_rollup
     from ..operators.upsert import upsert_partitions
 
     agg = hourly_window_agg(ticks)
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        # genuinely two-action body (hourly land + affected-date collect):
-        # cache around it so the micro-batch plan executes ONCE — the old
-        # isEmpty() probe was a third execution of the upstream plan.
-        # persist/unpersist, not localCheckpoint: a continuous stream
-        # must release its blocks deterministically per batch, not when
-        # GC happens to collect the checkpoint reference.
+        # two-action body (affected-date collect + hourly land): cache
+        # around it so the micro-batch plan executes ONCE. persist/
+        # unpersist, not localCheckpoint: a continuous stream must release
+        # its blocks deterministically per batch, not when GC happens to
+        # collect the checkpoint reference.
         batch = batch.persist()
         try:
-            spark = batch.sparkSession
+            affected = [
+                r.date for r in batch.select("date").distinct().collect()
+            ]
+            if not affected:  # no window closed: nothing to land or roll up
+                return
             # Hour-granularity partitions: each closed window overwrites
             # only its own (date, hour) directory. Partitioning by date
             # alone would make every micro-batch replace the whole day
             # with just that batch's windows, deleting hours closed in
             # earlier batches.
             upsert_partitions(batch, hourly_path, ["date", "hour"])
-            affected = [
-                r.date for r in batch.select("date").distinct().collect()
-            ]
-            if not affected:  # empty micro-batch: nothing to roll up
-                return
-            hourly_all = spark.read.parquet(hourly_path).filter(
-                F.col("date").isin(affected)
+            # read back only the affected days, typed by the batch's own
+            # schema: no listing of the table's whole history, no schema
+            # inference
+            hourly = (
+                batch.sparkSession.read.schema(batch.schema)
+                .option("basePath", hourly_path)
+                .parquet(*[f"{hourly_path}/date={d}" for d in affected])
             )
-            upsert_partitions(daily_rollup(hourly_all), daily_path, ["date"])
+            upsert_partitions(daily_rollup(hourly), daily_path, ["date"])
         finally:
             batch.unpersist()
 

@@ -180,3 +180,245 @@ def test_v2_waves_plus_replay_match_one_shot_shards(spark, sf_dir, tmp_path):
     # double-replay of an already-committed wave is a ledger no-op
     r2b = inc.ingest_wave_v2(spark, w2, state, wave_id=2, fs=fs)
     assert r2b["corpus_version"] == r2["corpus_version"]
+
+
+# --- The one-cut wave against the composition it replaced ------------------
+# The two functions below are the previous ingest_wave and
+# incremental_near_dup compositions, kept verbatim (bar names) as
+# test-local references: groupBy + anti-join + join-back exact dedup, a
+# cut band frame probed by a semi-join and a bucket-min join, and four
+# counts that re-run the plan. They are not shipped code.
+
+
+def _ref_incremental_near_dup(
+    incoming, band_index, text_col="text", id_col="doc_id", n=3
+):
+    from pyspark.sql import functions as F
+
+    from data_pipelines_cu_spark.operators.dedup import minhash_band_rows
+    from data_pipelines_cu_spark.operators.materialize import lineage_cut
+
+    bands = minhash_band_rows(incoming, text_col, id_col, n)
+    bands = bands.transform(lineage_cut)
+    idx_hit = (
+        bands.join(band_index.select("band", "bhash"), ["band", "bhash"], "leftsemi")
+        .select(id_col)
+        .distinct()
+    )
+    bucket_min = bands.groupBy("band", "bhash").agg(F.min(id_col).alias("_min_id"))
+    batch_hit = (
+        bands.join(bucket_min, ["band", "bhash"])
+        .filter(F.col(id_col) > F.col("_min_id"))
+        .select(id_col)
+        .distinct()
+    )
+    losers = idx_hit.unionByName(batch_hit).distinct()
+    return bands.join(losers, id_col, "left_anti")
+
+
+def _ref_load_state(spark, root, name, schema, fs=None):
+    from data_pipelines_cu_spark.operators.table import read_multi_table
+
+    try:
+        return read_multi_table(spark, root, name, fs=fs)
+    except FileNotFoundError:
+        return spark.createDataFrame([], schema)
+
+
+def _ref_ingest_wave(
+    spark, new_docs, state_dir, wave_id, benchmark=None,
+    text_col="text", id_col="doc_id", fs=None,
+):
+    from pyspark.sql import functions as F
+
+    from data_pipelines_cu_spark.operators.dedup import (
+        contamination_hits,
+        normalized_text,
+    )
+    from data_pipelines_cu_spark.operators.materialize import lineage_cut
+    from data_pipelines_cu_spark.operators.table import (
+        commit_batch_multi,
+        multi_table_batches,
+    )
+
+    digests = _ref_load_state(spark, state_dir, "digests", "content_hash string", fs)
+    bands = _ref_load_state(
+        spark, state_dir, "bands", "doc_id long, band int, bhash string", fs
+    )
+    inc_ = new_docs.select(
+        F.col(id_col), F.md5(normalized_text(text_col)).alias("content_hash")
+    )
+    firsts = inc_.groupBy("content_hash").agg(F.min(id_col).alias(id_col))
+    fresh = firsts.join(
+        digests.select("content_hash").distinct(), "content_hash", "left_anti"
+    )
+    s1 = new_docs.join(fresh.select(id_col), id_col)
+    surviving_bands = _ref_incremental_near_dup(
+        s1, bands, text_col=text_col, id_col=id_col
+    ).transform(lineage_cut)
+    s2 = s1.join(surviving_bands.select(id_col).distinct(), id_col)
+    if benchmark is not None:
+        hits = contamination_hits(s2, benchmark, text_col=text_col, id_col=id_col)
+        s3 = s2.join(hits.select(id_col), id_col, "left_anti")
+    else:
+        s3 = s2
+    s3 = s3.transform(lineage_cut)
+    admitted_ids = s3.select(id_col)
+    admitted_bands = surviving_bands.join(admitted_ids, id_col, "leftsemi")
+    admitted_digests = inc_.join(admitted_ids, id_col, "leftsemi").select(
+        "content_hash"
+    )
+    versions = commit_batch_multi(
+        {
+            "corpus": s3,
+            "digests": digests.unionByName(admitted_digests).distinct(),
+            "bands": bands.unionByName(admitted_bands),
+        },
+        state_dir,
+        wave_id,
+        fs=fs,
+    )
+    if versions is None:
+        versions = multi_table_batches(state_dir, fs=fs)[str(wave_id)]
+    return {
+        "wave_id": wave_id,
+        "incoming": new_docs.count(),
+        "after_exact": s1.count(),
+        "after_near_dup": s2.count(),
+        "admitted": s3.count(),
+        "corpus_version": versions["corpus"],
+        "digest_version": versions["digests"],
+        "bands_version": versions["bands"],
+    }
+
+
+def _state(spark, state_dir):
+    """Committed corpus, digests and bands as multisets, plus columns."""
+    from collections import Counter
+
+    from data_pipelines_cu_spark.operators.table import read_multi_table
+
+    out = {}
+    for name in ("corpus", "digests", "bands"):
+        df = read_multi_table(spark, state_dir, name)
+        out[name] = (df.columns, Counter(map(tuple, df.collect())))
+    return out
+
+
+def _wave_docs(spark, rows):
+    return spark.createDataFrame(rows, "doc_id long, text string, lang string")
+
+
+def test_one_cut_wave_matches_reference_composition(spark, tmp_path):
+    """Wave by wave, ingest_wave and the composition it replaced return the
+    same dicts and commit the same corpus, digests and bands: in-wave exact
+    duplicates, re-sent copies of admitted docs, near-dups within a wave
+    and against the index, docs under 3 words (no band rows), NULL text, a
+    contaminated doc, a replayed wave and an empty wave."""
+    bench = _docs(spark, [(9000, BENCH_TEXT)])
+    base = "spark rows join group count window stream batch table scan"
+    waves = [
+        (None, [
+            (5, base, "en"),
+            (3, "  SPARK rows join group count window stream batch table scan", "en"),
+            (2, "one two three four five six seven eight nine ten", "de"),
+            (4, "one two three four five six seven eight nine eleven", "de"),
+            (6, "two words", "en"),
+            (7, None, "en"),
+            (8, None, "fr"),
+            (9, "completely different words about training data goes here", "en"),
+        ]),
+        (bench, [
+            (101, base, "en"),  # re-sent copy of admitted doc 3
+            (1, "one two three four five six seven eight nine twelve", "de"),
+            (103, "report contains alpha beta gamma quoted from the benchmark", "en"),
+            (104, "yet another genuinely novel document for the second wave", "en"),
+            (105, "yet another genuinely novel document for the second wave", "en"),
+            (106, "hi", "en"),
+            (107, None, "en"),
+            (108, "fresh material on lakehouse formats and vector search engines", "en"),
+        ]),
+        (bench, "replay"),
+        (None, []),
+        (bench, [
+            (301, "report contains alpha beta gamma quoted from the benchmark", "en"),
+            (302, "yet another genuinely novel document for the second wave", "en"),
+            (303, "the fourth wave brings one more brand new document along", "en"),
+            (304, "the fourth wave brings one more brand new document aboard", "en"),
+        ]),
+    ]
+    got_dir, want_dir = str(tmp_path / "got"), str(tmp_path / "want")
+    wave_id = 0
+    for benchmark, rows in waves:
+        if rows != "replay":
+            wave_id += 1
+            docs = _wave_docs(spark, rows)
+        got = inc.ingest_wave(spark, docs, got_dir, wave_id, benchmark=benchmark)
+        want = _ref_ingest_wave(spark, docs, want_dir, wave_id, benchmark=benchmark)
+        assert got == want, (wave_id, rows == "replay")
+        assert _state(spark, got_dir) == _state(spark, want_dir), wave_id
+    # the cases above bite: each stage drops something somewhere
+    corpus = {r.doc_id for r in inc.read_corpus(spark, got_dir).collect()}
+    assert corpus == {3, 2, 9, 104, 108, 303}
+
+
+def test_incremental_near_dup_against_index_and_batch(spark):
+    """The band rows of surviving docs, and only theirs: a doc colliding
+    with the index or with a lower id in the batch loses all its rows; a
+    doc with no band rows (under 3 words, NULL text) does not survive.
+    Equal, as a multiset, to the composition the operator replaced."""
+    from collections import Counter
+
+    from data_pipelines_cu_spark.operators.dedup import (
+        incremental_near_dup,
+        minhash_band_rows,
+    )
+
+    index = minhash_band_rows(_docs(spark, [
+        (1, "alpha beta gamma delta epsilon zeta eta theta"),
+        (2, "one two three four five six seven eight nine"),
+    ]))
+    batch = _docs(spark, [
+        (10, "alpha beta gamma delta epsilon zeta eta iota"),  # vs index
+        (11, "spark rows join group count window stream batch"),
+        (12, "spark rows join group count window stream batch"),  # vs 11
+        (13, "too short"),
+        (14, None),
+        (15, "completely different words about training data here"),
+    ])
+    got = incremental_near_dup(batch, index)
+    assert got.columns == ["doc_id", "band", "bhash"]
+    rows = Counter(map(tuple, got.collect()))
+    assert {r[0] for r in rows} == {11, 15}
+    assert sum(rows.values()) == 16
+    want = Counter(map(tuple, _ref_incremental_near_dup(batch, index).collect()))
+    assert rows == want
+
+
+def test_wave_job_budget(spark, sf_dir, tmp_path):
+    """A wave is one cut plus its three state writes: at most 12 Spark jobs
+    for the fixture corpus's second wave (the composition it replaced ran
+    52 here — schema inference of each state table, two cuts, and four
+    counts that re-ran the dedup plan)."""
+    from tests.util import jobs_of
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    state = str(tmp_path / "state")
+    inc.ingest_wave(spark, docs.filter("doc_id % 2 = 0"), state, wave_id=1)
+    second = docs.filter("doc_id % 2 = 1")
+    n = jobs_of(spark, lambda: inc.ingest_wave(spark, second, state, wave_id=2))
+    assert n <= 12, n
+
+
+def test_wave_leaves_session_serializable(spark, tmp_path):
+    """Spark ML fits serialize the SparkSession inside their closures, so
+    a wave must leave the session serializable: its counts are observed
+    metrics read from the cut's query execution, not pyspark's
+    Observation helper, whose session-level manager Spark cannot
+    serialize."""
+    inc.ingest_wave(
+        spark, _docs(spark, [(1, BENCH_TEXT)]), str(tmp_path / "s"), wave_id=1
+    )
+    jvm = spark._jvm
+    out = jvm.java.io.ObjectOutputStream(jvm.java.io.ByteArrayOutputStream())
+    out.writeObject(spark._jsparkSession)

@@ -595,3 +595,20 @@ def test_progressive_jpeg_decodes_identically_to_baseline():
             f"shape {img.shape}: max diff "
             f"{np.abs(got.astype(int) - want.astype(int)).max()}"
         )
+
+
+def test_sample_frames_null_payload_yields_no_frames(spark):
+    """A NULL payload next to a real MJPEG AVI: the AVI fans out as usual
+    and the NULL row yields no frame rows instead of failing the count
+    stage."""
+    import numpy as np
+
+    avi = enc.encode_avi_mjpeg(
+        [np.full((8, 8, 3), 60 * i, np.uint8) for i in range(3)]
+    )
+    df = spark.createDataFrame(
+        [(1, None), (2, avi)], "media_id long, payload binary"
+    )
+    rows = multimodal.sample_frames_mjpeg(df, every_n=1, out_w=4, out_h=4)
+    got = sorted((r.media_id, r.frame_idx, len(r.frame)) for r in rows.collect())
+    assert got == [(2, 0, 16), (2, 1, 16), (2, 2, 16)]

@@ -423,3 +423,14 @@ def test_perceptron_learns_separable_data(spark, duck):
             n_iters=3,
         ),
     )
+
+
+def test_backfill_job_budget(spark, tmp_path):
+    """The keep-last ticks are cut once and all three layers are written
+    from the cut: at most 8 Spark jobs for one day (9 when each write
+    re-ran the dedup window over the source)."""
+    from tests.util import jobs_of
+
+    raw = generate_minute_ticks(spark, "2024-02-01")
+    base = str(tmp_path / "binance")
+    assert jobs_of(spark, lambda: binance.run_backfill(spark, raw, base)) <= 8

@@ -1135,3 +1135,55 @@ def test_concurrent_stream_starts_restore_caller_width(
     want = min(32, spark.sparkContext.defaultParallelism)
     assert _recorded_width(str(tmp_path / "ckpt_a")) == want
     assert _recorded_width(str(tmp_path / "ckpt_b")) == want
+
+
+# --- Spark job budgets of the ingest cycle's micro-batch bodies -------------
+
+
+def test_cascade_cycle_job_budget(spark, tmp_path):
+    """One availableNow cascade cycle after the first runs at most 4
+    micro-batch jobs (6 before): the data batch closes no window and
+    returns after its date collect, and the closing batch reads back only
+    its affected date instead of listing every hourly partition."""
+    from tests.util import group_jobs
+
+    src = tmp_path / "in"
+    src.mkdir()
+    for day, date in enumerate(["2024-02-01", "2024-02-02"]):
+        _write_day(spark, str(src), date, day)
+        q = jobs.run_cascade(
+            jobs.read_tick_stream(spark, str(src)),
+            str(tmp_path / "hourly"),
+            str(tmp_path / "daily"),
+            str(tmp_path / "ckpt"),
+        )
+        q.awaitTermination(180)
+        assert q.exception() is None
+    n = group_jobs(spark, str(q.runId))
+    assert n <= 4, n
+    daily = spark.read.parquet(str(tmp_path / "daily")).collect()
+    # day 2 also holds day 1's sentinel tick (02:30)
+    assert sorted(r.total_data_points for r in daily) == [1440, 1441]
+
+
+def test_near_dup_batch_job_budget(spark, tmp_path):
+    """A near-dup micro-batch cuts its surviving band rows once: the
+    operator no longer cuts its own band frame, so the body runs at most
+    10 Spark jobs (15 before)."""
+    from tests.util import jobs_of
+
+    sv, ix = str(tmp_path / "sv"), str(tmp_path / "ix")
+    b0 = spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon zeta eta theta"),
+         (2, "one two three four five six seven eight nine")],
+        "doc_id long, text string",
+    )
+    b1 = spark.createDataFrame(
+        [(101, "alpha beta gamma delta epsilon zeta eta iota"),
+         (104, "completely different words about training data here")],
+        "doc_id long, text string",
+    )
+    jobs.near_dup_batch(b0, 0, sv, ix)
+    n = jobs_of(spark, lambda: jobs.near_dup_batch(b1, 1, sv, ix))
+    assert n <= 10, n
+    assert {r.doc_id for r in spark.read.parquet(sv).collect()} == {1, 2, 104}

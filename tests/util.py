@@ -57,3 +57,26 @@ def assert_matches_oracle(spark_df, duck, sql):
         (a, b) for a, b in zip(s_rows, d_rows) if a != b
     ]
     assert not mismatches, f"value mismatch (first 3): {mismatches[:3]}"
+
+
+def group_jobs(spark, group: str) -> int:
+    """Spark jobs run so far under job group ``group``, read from the
+    status tracker after the listener bus has delivered every event (a
+    streaming query tags its micro-batch jobs with its run id)."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def jobs_of(spark, run) -> int:
+    """Run ``run()`` under a fresh job group; return its Spark job count."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc._jsc.clearJobGroup()
+    return group_jobs(spark, group)
