@@ -16,12 +16,16 @@ shared step: ``_cosine_pairs`` (broadcast-query scoring), ``_rank_neighbors``
 (per-query top-k, score DESC then neighbor id ASC), ``_lsh_topk`` (single-
 and multi-probe bucket LSH), ``_arrow_topk`` (the collected-query Arrow
 brute force around either cosine kernel), ``_train_centroids`` (seed collect
-+ Lloyd refinement), ``_cell_means`` (the decimal per-cell mean of a Lloyd
++ Lloyd refinement, on the driver for a corpus under the local Lloyd gate
+of ``_small_corpus``), ``_cell_means`` (the decimal per-cell mean of a Lloyd
 round) and ``_query_index`` (probe, prune, keep-last, decode, score, rank
 over a persisted float/SQ8/PQ index tree).
 """
 
 from __future__ import annotations
+
+import functools
+import os
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -541,6 +545,230 @@ def _cell_means(
     )
 
 
+# The local Lloyd gate (ARCHITECTURE.md §11, "Centroid-assign crossover").
+# A corpus of at most LOCAL_LLOYD_MAX_ROWS rows and LOCAL_LLOYD_MAX_VALUES
+# vector elements, whose per-round kernel work rows × n_cells × dim is at
+# most LOCAL_LLOYD_MAX_WORK, is collected once and refined on the driver;
+# anything larger keeps the per-round Spark loop. Measured on 4 cores: the
+# driver finish still won at the largest admitted size (32k vectors,
+# k = 500, dim 64: 5.0 s against 6.8 s), and under ~10k vectors a round's
+# wall is Spark dispatch, not scoring. The row bound also caps the scan a
+# corpus past the gate costs.
+LOCAL_LLOYD_MAX_ROWS = 32_768
+LOCAL_LLOYD_MAX_VALUES = 1 << 21
+LOCAL_LLOYD_MAX_WORK = 1 << 30
+
+_LOCAL_BLOCK_ROWS = 512  # rows per block of the driver-side assign
+_DEC_SCALE = 10**12  # DECIMAL(38,12): decimal_avg's exact-sum type
+_DEC_LIMIT = 10**38  # |unscaled| bound of a DECIMAL(38, s) value
+
+
+def _unscaled(dec):
+    """Unscaled integers of a null-free pyarrow decimal128 array, read from
+    its 16-byte little-endian two's-complement words: int64 when every
+    value fits, else exact Python ints."""
+    import numpy as np  # noqa: PLC0415
+
+    words = np.frombuffer(dec.buffers()[1], dtype=np.int64)
+    words = words[2 * dec.offset : 2 * (dec.offset + len(dec))]
+    lo, hi = words[0::2], words[1::2]
+    if np.array_equal(hi, lo >> 63):
+        return lo
+    return hi.astype(object) * 2**64 + lo.view(np.uint64).astype(object)
+
+
+def _small_corpus(
+    corpus: DataFrame,
+    vec_col: str,
+    n_cells: int,
+    dim: int = 1,
+    id_col: str | None = None,
+) -> tuple[tuple | None, list[tuple[int, list[float]]] | None]:
+    """THE local Lloyd gate: one bounded collect, ``limit(max_rows + 1)``
+    of the corpus on one task. Spark counts the limited rows and their
+    widest vector first (a window over the limited frame) and ships the
+    vectors — each element also cast to DECIMAL(38,12) by Spark, exactly
+    as :func:`_cell_means` casts it — only when rows, rows × dim and rows
+    × ``n_cells`` × dim are within the gate, so a corpus past it costs a
+    bounded scan and no payload. With ``id_col`` the same job also
+    collects the default seed rows (``id_col < n_cells``) from the whole
+    corpus, so no separate seed collect runs on either path.
+
+    Returns (corpus, seed rows). The corpus is (V, U): the (rows, dim)
+    float64 vectors as the Arrow assign kernel sees them, and the same
+    elements as unscaled DECIMAL(38,12) integers (int64, or Python ints
+    when a value does not fit). It is None (the distributed loop runs)
+    past the gate, or when the vectors are not a null-free
+    rectangle (null vectors or elements, ragged or empty arrays) — the
+    driver kernel only takes the shape whose Spark result it reproduces
+    bit for bit; the seed rows are None without ``id_col``. ``dim`` is
+    the vector width when already known (the seeds were collected
+    first), so the row bound can honour the other two bounds before the
+    scan."""
+    import numpy as np  # noqa: PLC0415
+    import pyarrow.compute as pc  # noqa: PLC0415
+
+    cells = max(n_cells, 1)
+    max_rows = min(
+        LOCAL_LLOYD_MAX_ROWS,
+        LOCAL_LLOYD_MAX_VALUES // dim,
+        LOCAL_LLOYD_MAX_WORK // (cells * dim),
+    )
+    vec = F.col(vec_col)
+    parts = []
+    if max_rows > 0:
+        whole = Window.partitionBy()
+        rows = F.count(F.lit(1)).over(whole)
+        values = rows.cast("double") * F.max(F.size(vec)).over(whole)
+        admit = (
+            (rows <= max_rows)
+            & (values <= LOCAL_LLOYD_MAX_VALUES)
+            & (values * cells <= LOCAL_LLOYD_MAX_WORK)
+        )
+        decimals = F.transform(
+            vec, lambda x: x.cast("double").cast("decimal(38,12)")
+        )
+        parts.append(
+            corpus.coalesce(1).limit(max_rows + 1).select(
+                F.lit(False).alias("seed"),
+                admit.alias("ok"),
+                F.when(admit, vec).alias("v"),
+                F.when(admit, decimals).alias("u"),
+            )
+        )
+    if id_col is not None:
+        id_type = corpus.schema[id_col].dataType
+        parts = [p.withColumn("id", F.lit(None).cast(id_type)) for p in parts]
+        parts.append(
+            corpus.filter(F.col(id_col) < n_cells).select(
+                F.lit(True).alias("seed"),
+                F.lit(None).cast("boolean").alias("ok"),
+                vec.alias("v"),
+                F.lit(None).cast("array<decimal(38,12)>").alias("u"),
+                F.col(id_col).alias("id"),
+            )
+        )
+    if not parts:
+        return None, None
+    tbl = functools.reduce(lambda a, b: a.unionByName(b), parts).toArrow()
+    seed_rows = None
+    if id_col is not None:
+        seeds = tbl.filter(tbl.column("seed"))
+        seed_rows = [
+            (i, [float(x) for x in v])
+            for i, v in zip(
+                seeds.column("id").to_pylist(), seeds.column("v").to_pylist()
+            )
+        ]
+    if max_rows <= 0:
+        return None, seed_rows
+    head = tbl.filter(pc.invert(tbl.column("seed")))
+    n = head.num_rows
+    if n == 0:
+        return (np.zeros((0, 0)), np.zeros((0, 0), np.int64)), seed_rows
+    if not head.column("ok")[0].as_py():
+        return None, seed_rows
+    v = head.column("v").combine_chunks()
+    width = pc.min_max(pc.list_value_length(v))
+    dim = width["max"].as_py()
+    if v.null_count or not dim or width["min"].as_py() != dim:
+        return None, seed_rows
+    vals, decs = v.flatten(), head.column("u").combine_chunks().flatten()
+    if vals.null_count or decs.null_count:
+        return None, seed_rows
+    V = vals.to_numpy(zero_copy_only=False).astype(np.float64).reshape(n, dim)
+    return (V, _unscaled(decs).reshape(n, dim)), seed_rows
+
+
+def _exact_cell_means(labels, U) -> list[tuple[int, list[float]]] | None:
+    """:func:`_cell_means` on the driver, exactly: per cell, the unscaled
+    DECIMAL(38,12) element sums as exact integers, each converted to the
+    nearest double (Spark's decimal → double cast is correctly rounded)
+    and divided by the member count. Empty cells drop out. Returns None
+    when a sum leaves DECIMAL(38,12), where Spark's overflow rule — not
+    this kernel — decides the result."""
+    import numpy as np  # noqa: PLC0415
+
+    order = np.argsort(labels, kind="stable")
+    cells, starts, counts = np.unique(
+        labels[order], return_index=True, return_counts=True
+    )
+    members = U[order]
+    if members.dtype != object:
+        peak = max(int(members.max()), -int(members.min()))
+        if peak * len(members) >= 2**63:  # an int64 sum could wrap
+            members = members.astype(object)
+    sums = np.add.reduceat(members, starts, axis=0)
+    if sums.dtype != object and int(np.abs(sums).max()) < 2**53:
+        means = (sums / _DEC_SCALE) / counts[:, None]  # exact int → double
+        return [(int(c), m.tolist()) for c, m in zip(cells, means)]
+    if any(abs(int(s)) >= _DEC_LIMIT for s in sums.ravel()):
+        return None
+    return [
+        (int(c), [(int(s) / _DEC_SCALE) / int(n) for s in row])
+        for c, n, row in zip(cells, counts, sums)
+    ]
+
+
+def _lloyd_local(
+    V, U, cent_rows: list[tuple[int, list[float]]], n_iters: int
+) -> list[tuple[int, list[float]]] | None:
+    """The Lloyd rounds of :func:`lloyd_refine_rows` on a collected corpus:
+    the same j-sequential cosine kernel and stable argsort as
+    :func:`ivf_assign_arrow` (highest score, lowest cell on ties, NaN scores
+    last), then :func:`_exact_cell_means`. Rows are scored in blocks, like
+    the kernel's Arrow batches (a row's scores do not depend on its
+    block), on a few threads: numpy releases the GIL, and the blocks stay
+    cache-sized. None when a mean leaves the decimal range (the caller
+    runs the distributed loop instead)."""
+    import numpy as np  # noqa: PLC0415
+    from concurrent.futures import ThreadPoolExecutor  # noqa: PLC0415
+
+    if len(V) == 0:
+        return []
+    step = _LOCAL_BLOCK_ROWS
+    blocks = [V[i : i + step] for i in range(0, len(V), step)]
+    with ThreadPoolExecutor(min(len(blocks), os.cpu_count() or 1, 8)) as pool:
+        for _ in range(n_iters):
+            cell_ids = np.array([c[0] for c in cent_rows], dtype=np.int64)
+            C = np.array([c[1] for c in cent_rows], dtype=np.float64)
+
+            def nearest(block):
+                S = _seq_cosine_matrix(block, C)
+                return cell_ids[np.argsort(-S, axis=1, kind="stable")[:, 0]]
+
+            labels = np.concatenate(list(pool.map(nearest, blocks)))
+            cent_rows = _exact_cell_means(labels, U)
+            if cent_rows is None:
+                return None
+    return cent_rows
+
+
+def _lloyd_rounds(
+    corpus: DataFrame,
+    small: tuple | None,
+    seed_rows: list[tuple[int, list[float]]],
+    n_iters: int,
+    vec_col: str,
+) -> list[tuple[int, list[float]]]:
+    """Lloyd from ``seed_rows``: on the driver over ``small`` when the gate
+    admitted the corpus, else one Spark round trip per round."""
+    cent_rows = sorted(seed_rows)
+    if small is not None:
+        local = _lloyd_local(*small, cent_rows, n_iters)
+        if local is not None:
+            return local
+    for _ in range(n_iters):
+        assigned = ivf_assign_arrow(
+            corpus.select(vec_col), cent_rows, vec_col=vec_col, widen=True
+        )
+        cent_rows = sorted(
+            (r["cell"], [float(x) for x in r["cv"]])
+            for r in _cell_means(assigned, ("cell",), vec_col).collect()
+        )
+    return cent_rows
+
+
 def lloyd_refine_rows(
     corpus: DataFrame,
     seed_rows: list[tuple[int, list[float]]],
@@ -553,21 +781,22 @@ def lloyd_refine_rows(
     (:func:`_cell_means`), repeat. Returns sorted (cell, cv) rows, cell
     keeping the seed centroid's id; ``n_iters=0`` returns the sorted seeds.
 
-    Each iteration is one Arrow centroid-assign pass (partition-local, no
-    shuffle) plus one n_cells × dim aggregate; the tiny centroid set is
-    collected between rounds (index metadata, not corpus data), truncating
-    lineage so iteration i+1 never re-executes iteration i. Cost per round
-    is independent of partition layout and linear in corpus size."""
-    cent_rows = sorted(seed_rows)
-    for _ in range(n_iters):
-        assigned = ivf_assign_arrow(
-            corpus.select(vec_col), cent_rows, vec_col=vec_col, widen=True
-        )
-        cent_rows = sorted(
-            (r["cell"], [float(x) for x in r["cv"]])
-            for r in _cell_means(assigned, ("cell",), vec_col).collect()
-        )
-    return cent_rows
+    A small corpus (the gate of :func:`_small_corpus`: at most
+    LOCAL_LLOYD_MAX_ROWS rows, LOCAL_LLOYD_MAX_VALUES elements and
+    LOCAL_LLOYD_MAX_WORK scoring work per round) is collected once and
+    every round runs on the driver, with results bit-identical to the
+    Spark rounds: there the corpus itself, not only the centroid set,
+    reaches the driver, bounded by the gate. A larger corpus runs one
+    Arrow centroid-assign pass (partition-local, no shuffle) plus one
+    n_cells × dim aggregate per round; only the centroid set is collected
+    between rounds, truncating lineage so iteration i+1 never re-executes
+    iteration i. That cost per round is independent of partition layout
+    and linear in corpus size."""
+    small = None
+    if n_iters > 0 and seed_rows:
+        dim = max(len(seed_rows[0][1]), 1)
+        small, _ = _small_corpus(corpus, vec_col, len(seed_rows), dim)
+    return _lloyd_rounds(corpus, small, seed_rows, n_iters, vec_col)
 
 
 def _train_centroids(
@@ -581,13 +810,20 @@ def _train_centroids(
 ) -> list[tuple[int, list[float]]]:
     """THE centroid-training rule for every IVF / k-means operator and
     index builder: collect the seed frame — (id, vector) rows, n by
-    contract, index metadata never corpus-sized — and refine it by
-    ``lloyd_iters`` order-independent Lloyd rounds over ``corpus``. The
-    default seeds are the n lowest ids (``id < n``); the retrains pass
-    their own ``orderBy(id).limit(n)`` frame over the keep-last survivors.
-    The oracles pin both rules. One place, not six — a seeding or
+    contract — and refine it by ``lloyd_iters`` order-independent Lloyd
+    rounds over ``corpus`` (:func:`lloyd_refine_rows`). The default seeds
+    are the n lowest ids (``id < n``); the retrains pass their own
+    ``orderBy(id).limit(n)`` frame over the keep-last survivors. The
+    oracles pin both rules. One place, not six — a seeding or
     refinement tweak replicated by hand would let a rebuilt index
     silently disagree with the one it replaces.
+
+    With the default seeds one job collects the seed rows together with
+    the local Lloyd gate's bounded collect (:func:`_small_corpus`): a
+    corpus the gate admits reaches the driver whole (bounded by the
+    gate) and is refined there, and no separate seed collect runs on
+    either path. A retrain's own seed frame keeps its collect, and
+    :func:`lloyd_refine_rows` gates the corpus after it.
 
     ``refuse_empty`` (the operator name) makes an empty seed set raise —
     the index builders and the quantized retrain refuse loudly, because
@@ -596,15 +832,21 @@ def _train_centroids(
     not be empty' assert, the PQ builder silently returned ([], [])).
     Unset, an empty seed set trains no centroids and the caller's result
     is empty (the registered queries' empty-corpus contract)."""
-    if seeds is None:
-        seeds = corpus.filter(F.col(id_col) < n_centroids).select(id_col, vec_col)
-    seed_rows = [(r[0], [float(x) for x in r[1]]) for r in seeds.collect()]
+    gated = seeds is None and lloyd_iters > 0
+    if gated:
+        small, seed_rows = _small_corpus(corpus, vec_col, n_centroids, id_col=id_col)
+    else:
+        if seeds is None:
+            seeds = corpus.filter(F.col(id_col) < n_centroids).select(id_col, vec_col)
+        seed_rows = [(r[0], [float(x) for x in r[1]]) for r in seeds.collect()]
     if not seed_rows and refuse_empty is not None:
         raise ValueError(
             f"{refuse_empty}: no seed vectors to train centroids from (no "
             "surviving vectors after the NULL-vector admission rule, or no "
             "ids in the seed range)"
         )
+    if gated:
+        return _lloyd_rounds(corpus, small, seed_rows, lloyd_iters, vec_col)
     return lloyd_refine_rows(corpus, seed_rows, n_iters=lloyd_iters, vec_col=vec_col)
 
 
@@ -2319,7 +2561,8 @@ def kmeans_clusters(
     Seeding and refinement are identical to cosine_topk_ivf (lowest-id
     seeds + decimal-mean Lloyd rounds, RNG-free), so the result is exactly
     reproducible in the SQL oracle. The corpus-side cost is one broadcast
-    centroid-assign scan per Lloyd round plus one final assign — linear,
+    centroid-assign scan per Lloyd round (none for a corpus under the local
+    Lloyd gate, refined on the driver) plus one final assign — linear,
     partition-local, no corpus shuffle at any step.
     """
     corpus = drop_null_vectors(corpus, vec_col)
@@ -2434,12 +2677,13 @@ def kmeans_assign(
     use this form and skip a corpus self-join on the id.
 
     Below ``distributed_threshold`` clusters the centroid table is
-    collected and broadcast (one Arrow scan per Lloyd round — the right
-    plan through the SemDeDup regime, k ≲ 10⁵). Above it, centroids stay
-    a DataFrame end-to-end and assignment goes through the two-level
-    cogroup path (assign_nearest_distributed): only the ~sqrt(k) coarse
-    quantizer ever reaches the driver. See ARCHITECTURE.md §11 for the
-    crossover analysis."""
+    collected and broadcast (one Arrow scan per Lloyd round, or none under
+    the local Lloyd gate — the right plan through the SemDeDup regime,
+    k ≲ 10⁵). Above it, centroids stay a DataFrame end-to-end and
+    assignment goes through the two-level cogroup path
+    (assign_nearest_distributed): only the ~sqrt(k) coarse quantizer ever
+    reaches the driver. See ARCHITECTURE.md §11 for the crossover
+    analysis."""
     if n_clusters is None:
         n_clusters = derived_n_clusters(corpus.count(), target_cluster_size)
     if n_clusters <= distributed_threshold:

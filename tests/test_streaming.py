@@ -1042,6 +1042,52 @@ def test_wide_checkpoint_resumes_at_its_recorded_width(spark, tmp_path):
     assert wide[1] == narrow[1] and len(wide[1]) == 2
 
 
+def test_wide_checkpoint_state_files_carry_checksums(spark, tmp_path):
+    """The resumed wide cascade above, with state-store maintenance forced
+    to snapshot after every delta: each state delta and snapshot file has
+    its checkpoint checksum file (``<file>.crc``, written while
+    spark.sql.streaming.checkpoint.fileChecksum.enabled is on, its
+    default), so a restart verifies every state file it loads. The
+    restart's "No checksum file found for …/<version>.snapshot" warnings
+    name snapshot versions that were never written: the provider probes
+    for a snapshot before it replays the deltas."""
+    import time
+
+    store = spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore
+    forced = {
+        "spark.sql.streaming.stateStore.minDeltasForSnapshot": "1",
+        "spark.sql.streaming.stateStore.maintenanceInterval": "200ms",
+    }
+    prior = {k: spark.conf.get(k, None) for k in forced}
+    # the maintenance task restarts at the next store load, at the
+    # session's interval then in force
+    store.stopMaintenanceTask()
+    for k, v in forced.items():
+        spark.conf.set(k, v)
+    restore = _with_width(spark, "32")
+    state = tmp_path / "wide" / "ckpt" / "state"
+    try:
+        (tmp_path / "in").mkdir()
+        _cascade(spark, tmp_path / "wide", tmp_path / "in", width_first=64)
+        deadline = time.monotonic() + 60
+        while not any(state.rglob("*.snapshot")) and time.monotonic() < deadline:
+            time.sleep(0.2)
+    finally:
+        restore()
+        store.stopMaintenanceTask()
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert spark.conf.get("spark.sql.streaming.checkpoint.fileChecksum.enabled") == "true"
+    files = [p for p in state.rglob("*") if p.suffix in (".delta", ".snapshot")]
+    assert any(p.suffix == ".snapshot" for p in files)
+    assert any(p.suffix == ".delta" for p in files)
+    unverified = [str(p) for p in files if not p.with_name(p.name + ".crc").exists()]
+    assert not unverified, unverified[:3]
+
+
 def test_cascade_output_independent_of_width(spark, tmp_path):
     """Guard on the invariance the narrowing relies on: the cascade's
     hourly and daily output at the session's narrow width equals its
