@@ -18,15 +18,18 @@ and multi-probe bucket LSH), ``_arrow_topk`` (the collected-query Arrow
 brute force around either cosine kernel), ``_train_centroids`` (seed collect
 + Lloyd refinement, on the driver for a corpus under the local Lloyd gate
 of ``_small_corpus``), ``_cell_means`` (the decimal per-cell mean of a Lloyd
-round) and ``_query_index`` (probe, prune, keep-last, decode, score, rank
-over a persisted float/SQ8/PQ index tree).
+round), ``_index_codec`` (which codec a persisted index tree is — float,
+SQ8 or PQ — with its encoder and decoder) and ``_write_index`` (assign,
+encode and write one wave of a persisted index).
 """
 
 from __future__ import annotations
 
 import functools
 import os
+from typing import Callable, NamedTuple
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -506,7 +509,7 @@ def ivf_assign_arrow(
 
     def fn(batches):
         for pdf in batches:
-            if len(pdf) == 0:
+            if len(pdf) == 0 or not cents:  # no centroids: no cell, no row
                 continue
             V = np.array(list(pdf[vec_col]), dtype=np.float64)
             S = _seq_cosine_matrix(V, C)
@@ -752,8 +755,11 @@ def _lloyd_rounds(
     vec_col: str,
 ) -> list[tuple[int, list[float]]]:
     """Lloyd from ``seed_rows``: on the driver over ``small`` when the gate
-    admitted the corpus, else one Spark round trip per round."""
+    admitted the corpus, else one Spark round trip per round. No seeds
+    train no centroids."""
     cent_rows = sorted(seed_rows)
+    if not cent_rows:
+        return []
     if small is not None:
         local = _lloyd_local(*small, cent_rows, n_iters)
         if local is not None:
@@ -1118,10 +1124,8 @@ def build_ivf_index(
             corpus, n_centroids, lloyd_iters, id_col, vec_col,
             refuse_empty="build_ivf_index",
         )
-    _write_wave0(
-        ivf_assign_arrow(corpus.select(id_col, vec_col), cent_rows, vec_col=vec_col),
-        path,
-    )
+    codec = _index_codec(None, path, "build_ivf_index")
+    _write_index(corpus, path, cent_rows, codec, 0, id_col, vec_col)
     return cent_rows
 
 
@@ -1140,15 +1144,196 @@ def _write_wave0(indexed: DataFrame, path: str) -> None:
     )
 
 
-def _index_columns(spark, path: str) -> list[str] | None:
-    """The persisted index tree's columns (one file listing + footer),
-    or None when there is no index at ``path`` yet."""
-    from pyspark.errors import AnalysisException  # noqa: PLC0415
+class IndexNotFoundError(AnalysisException, ValueError):
+    """No readable IVF index at a path: Spark's analysis failure (the
+    path is missing, or an empty directory with no schema to infer) and
+    a caller error at once — the next step is always to build the index."""
 
+
+def _read_index(spark, path: str, op: str) -> DataFrame:
+    """Read a persisted IVF index for a lifecycle operator, translating
+    the raw AnalysisException (PATH_NOT_FOUND / UNABLE_TO_INFER_SCHEMA
+    on an empty dir) into one actionable :class:`IndexNotFoundError`."""
     try:
-        return spark.read.parquet(path).columns
+        return spark.read.parquet(path)
+    except AnalysisException as exc:
+        raise IndexNotFoundError(
+            f"{op}: no readable IVF index at {path}; build it "
+            "(similarity.build_ivf_index) first"
+        ) from exc
+
+
+class _Codec(NamedTuple):
+    """A persisted index tree's codec, as :func:`_index_codec` resolves
+    it. ``payload`` is the stored vector column (None for a float tree,
+    which stores the vector column itself); ``encode(rows, vectors,
+    id_col, vec_col)`` turns cell-assigned float rows into the rows a
+    wave stores; ``decode`` maps the payload to the float view queries
+    score; ``dim`` is that view's width."""
+
+    payload: str | None = None
+    encode: Callable | None = None
+    decode: Callable | None = None
+    dim: int | None = None
+
+    def key(self, vec_col: str) -> str:
+        """The stored column the keep-last rule ties on."""
+        return self.payload or vec_col
+
+    def view(self, vec_col: str) -> Column:
+        """The float vector a stored row means."""
+        if self.decode is None:
+            return F.col(vec_col)
+        return self.decode(F.col(self.payload))
+
+
+def _index_codec(
+    columns: list[str] | None,
+    path: str,
+    op: str,
+    bounds: tuple[list[float], list[float]] | None = None,
+    codebooks: list[tuple[int, int, list[float]]] | None = None,
+) -> _Codec:
+    """THE codec rule of the persisted IVF index: every build, upsert,
+    compaction, query, lifecycle report and stream starter asks it which
+    codec a tree is. ``columns`` are the tree's, or None when ``path``
+    holds no index yet (the artifact passed decides; none = float). A
+    ``codes`` column is SQ8 under the frozen ``bounds``, ``pq_codes`` is
+    PQ under the frozen ``codebooks``, anything else is float.
+
+    Every mismatch between the tree and the artifacts passed refuses
+    before any job runs: a quantized tree without its artifact (decoding
+    is impossible without it), a float tree given one, a quantized tree
+    given the other codec's artifact too, both artifacts for a new path.
+    A wave encoded under the wrong codec would land rows no reader can
+    score — a float wave in a quantized tree has NULL codes."""
+    if columns is None:
+        if bounds is not None and codebooks is not None:
+            raise ValueError(
+                f"{op}: both bounds (SQ8) and codebooks (PQ) passed for a "
+                f"new index at {path} — pick one codec"
+            )
+        sq8, pq = bounds is not None, codebooks is not None
+    else:
+        sq8, pq = "codes" in columns, "pq_codes" in columns
+    if sq8:
+        if bounds is None:
+            raise ValueError(
+                f"{op}: {path} is an SQ8 index (codes column) — pass its "
+                "frozen quantization bounds"
+            )
+        if codebooks is not None:
+            raise ValueError(
+                f"{op}: {path} is an SQ8 index but PQ codebooks were ALSO "
+                "passed — artifacts from two different indexes? pick the "
+                "one that matches this tree"
+            )
+        mn, mx = _sq8_bound_arrays(bounds)
+        return _Codec(
+            "codes",
+            lambda rows, _, id_col, vec_col: rows.select(
+                id_col, sq8_codes(F.col(vec_col), mn, mx).alias("codes"), "cell"
+            ),
+            lambda c: sq8_decode(c, mn, mx),
+            len(bounds[0]),
+        )
+    if pq:
+        if codebooks is None:
+            raise ValueError(
+                f"{op}: {path} is a PQ index (pq_codes column) — pass its "
+                "frozen codebooks"
+            )
+        if bounds is not None:
+            raise ValueError(
+                f"{op}: {path} is a PQ index but SQ8 bounds were ALSO "
+                "passed — artifacts from two different indexes? pick the "
+                "one that matches this tree"
+            )
+        m, dsub = _pq_geometry(codebooks)
+
+        def encode(rows, vectors, id_col, vec_col):
+            # join back on (id, vector-string): duplicate ids in one batch
+            # keep their OWN codes and cells (see _pq_encode)
+            cent = _pq_codebook_df(vectors.sparkSession, codebooks)
+            coded = _pq_encode(vectors, cent, m, dsub, id_col, vec_col)
+            keyed = rows.select(
+                id_col, F.col(vec_col).cast("string").alias("_vkey"), "cell"
+            )
+            return keyed.join(coded, [id_col, "_vkey"]).drop("_vkey")
+
+        return _Codec("pq_codes", encode, _pq_decode_expr(codebooks), m * dsub)
+    if bounds is not None or codebooks is not None:
+        kind = "an SQ8" if bounds is not None else "a PQ"
+        raise ValueError(
+            f"{op}: index at {path} is a FLOAT tree but a quantization "
+            f"artifact was passed — it is not {kind} wave index. Wrong "
+            "index path, or the tree was rebuilt under another codec? A "
+            "float tree takes no artifact (to retrain one, use "
+            "retrain_ivf_centroids)"
+        )
+    return _Codec()
+
+
+def _open_for_write(
+    spark,
+    path: str,
+    op: str,
+    bounds: tuple[list[float], list[float]] | None = None,
+    codebooks: list[tuple[int, int, list[float]]] | None = None,
+) -> tuple[DataFrame | None, _Codec]:
+    """(tree, codec) for a wave writer — one file listing + footer; the
+    tree is None when ``path`` holds no index yet (the first wave creates
+    it in the codec the artifacts imply, and wave 0 stays an empty build
+    namespace). A tree written before the wave partition level is
+    refused: (cell, wave) partitions written into a cell-only tree make
+    a mixed layout no reader can open."""
+    try:
+        tree = spark.read.parquet(path)
     except AnalysisException:
-        return None
+        tree = None
+    columns = None if tree is None else tree.columns
+    codec = _index_codec(columns, path, op, bounds, codebooks)
+    if tree is not None and "wave" not in tree.columns:
+        raise ValueError(
+            f"{op}: index at {path} has no wave partition level "
+            "(pre-round-11 layout); rebuild it with build_ivf_index before "
+            "wave upserts — mixing partition layouts in one path is "
+            "unreadable"
+        )
+    return tree, codec
+
+
+def _write_index(
+    vectors: DataFrame,
+    path: str,
+    cent_rows: list[tuple[int, list[float]]],
+    codec: _Codec,
+    wave: int,
+    id_col: str,
+    vec_col: str,
+) -> None:
+    """THE encode-and-write body of every index write, build or wave:
+    drop NULL vectors (the admission rule — a None row crashes the Arrow
+    assign kernel, and a NULL in the index would poison every cosine),
+    assign each vector its cell under the frozen centroids at FULL
+    precision (quantization error costs re-rank margin, never cells),
+    encode the stored payload, and write. Wave 0 is the whole tree
+    (:func:`_write_wave0`); a wave k > 0 lands in its own (cell, wave)
+    partitions by dynamic overwrite, so a replayed wave replaces itself
+    instead of doubling rows (the upsert_partitions idempotency
+    contract)."""
+    from .upsert import upsert_partitions  # noqa: PLC0415
+
+    vectors = drop_null_vectors(vectors, vec_col).select(id_col, vec_col)
+    rows = ivf_assign_arrow(vectors, cent_rows, vec_col=vec_col)
+    if codec.encode is not None:
+        rows = codec.encode(rows, vectors, id_col, vec_col)
+    if wave == 0:
+        _write_wave0(rows, path)
+    else:
+        upsert_partitions(
+            rows.withColumn("wave", F.lit(wave)), path, ["cell", "wave"]
+        )
 
 
 def upsert_ivf_index(
@@ -1158,7 +1343,8 @@ def upsert_ivf_index(
     wave: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    check_layout: bool = True,
+    bounds: tuple[list[float], list[float]] | None = None,
+    codebooks: list[tuple[int, int, list[float]]] | None = None,
 ) -> None:
     """Incremental wave append to a persisted IVF index under FROZEN
     centroids — the serving-side reality a one-shot build ignores: new
@@ -1179,43 +1365,46 @@ def upsert_ivf_index(
     :func:`compact_ivf_index` reconciles (documented staleness — the
     standard LSM/lakehouse trade: cheap upserts, periodic compaction).
 
-    A pre-round-11 index written without the wave partition level is
-    rejected loudly — writing (cell, wave) partitions into a cell-only
-    tree would create a mixed layout no reader can open (the streaming
-    wrapper and compaction already guard this; the batch write path
-    must too, or a direct call corrupts the index silently until some
-    later read fails). A missing path is fine: the first wave creates
-    the index and wave 0 stays an empty build namespace. The check reads
-    the index schema (one file listing + footer); a caller that has
-    already verified the layout for the index's lifetime — the streaming
-    wrapper checks once at wave-base pin time, then writes a wave per
-    micro-batch — passes ``check_layout=False`` to skip the per-call
-    listing.
-    """
+    CODEC from the tree (:func:`_index_codec`): an SQ8 tree takes its
+    frozen ``bounds`` (values outside them clamp to 0/255 — the
+    scalar-quantization saturation trade; a drifted value range is one
+    more signal the drift trigger's retrain refreshes), a PQ tree its
+    frozen ``codebooks`` (the PQ geometry is derived from them, never
+    passed), a float tree neither; any mismatch refuses. A missing path
+    is created by this wave in the codec the artifacts imply. Every call
+    reads the tree's schema (one file listing + footer) and refuses a
+    pre-round-11 tree written without the wave partition level — the
+    streaming ingest resolves the codec once at stream start and writes
+    its waves through :func:`_write_index` instead."""
     if wave < 1:
         raise ValueError(
             f"upsert_ivf_index: wave must be >= 1 (wave 0 is the build), "
             f"got {wave}"
         )
-    # the admission rule, enforced at EVERY write path: NULL vectors are
-    # never ingested (a None row crashes the Arrow assign kernel, and a
-    # NULL landing in the index would poison every downstream cosine)
-    new_vectors = drop_null_vectors(new_vectors, vec_col)
-    if check_layout:
-        existing_cols = _index_columns(new_vectors.sparkSession, path)
-        if existing_cols is not None and "wave" not in existing_cols:
-            raise ValueError(
-                f"upsert_ivf_index: index at {path} has no wave partition "
-                "level (pre-round-11 layout); rebuild it with "
-                "build_ivf_index before wave upserts — mixing partition "
-                "layouts in one path is unreadable"
-            )
-    from .upsert import upsert_partitions  # noqa: PLC0415
+    _, codec = _open_for_write(
+        new_vectors.sparkSession, path, "upsert_ivf_index", bounds, codebooks
+    )
+    _write_index(new_vectors, path, sorted(centroids), codec, wave, id_col, vec_col)
 
-    assigned = ivf_assign_arrow(
-        new_vectors.select(id_col, vec_col), sorted(centroids), vec_col=vec_col
-    ).withColumn("wave", F.lit(wave))
-    upsert_partitions(assigned, path, ["cell", "wave"])
+
+def _refuse_unreconstructed(
+    recon: DataFrame, dim: int, op: str, path: str, action: str
+) -> None:
+    """One pass over the ``_rv`` reconstructions: a row whose codes fail
+    to reconstruct to ``dim`` values (corrupt or foreign codes, e.g. a
+    wave replayed under a retrained artifact) refuses the offline
+    rewrite before any write — the query path scores such a row as NULL
+    cosine (it never ranks), but a rewrite would launder it under a
+    fabricated cell, or drop it with no error."""
+    n_bad = recon.filter(
+        F.col("_rv").isNull() | (F.size("_rv") != dim)
+    ).count()
+    if n_bad:
+        raise ValueError(
+            f"{op}: {n_bad} row(s) at {path} failed to reconstruct to "
+            f"{dim} dims — corrupt or foreign codes (codes written under a "
+            f"different codebook/bounds artifact?); refusing to {action}"
+        )
 
 
 def compact_ivf_index(
@@ -1224,18 +1413,28 @@ def compact_ivf_index(
     centroids: list[tuple[int, list[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    bounds: tuple[list[float], list[float]] | None = None,
+    codebooks: list[tuple[int, int, list[float]]] | None = None,
 ) -> None:
     """Compaction: collapse all waves to keep-last per id, REASSIGN every
     survivor's cell from its (possibly updated) embedding, and rewrite
     the index as a fresh wave 0 — after this, cross-cell staleness is
     gone and the index equals a clean :func:`build_ivf_index` of the
     survivor set under the same frozen centroids (pinned by test).
-    Keep-last is (wave DESC, then embedding-bytes for a deterministic
+    Keep-last is (wave DESC, then payload bytes for a deterministic
     same-wave tiebreak); run it offline like the build — the rewrite is
     a plain overwrite, not a snapshot-isolated publish. A legacy index
     written before the wave partition level (cell-only layout) defaults
     to wave 0 — it is by definition all build rows, and compacting it
     migrates it to the current layout.
+
+    CODEC from the tree (:func:`_index_codec`; pass an SQ8 tree's
+    ``bounds`` or a PQ tree's ``codebooks``): a quantized survivor is
+    reassigned from its RECONSTRUCTED vector — the one the query path
+    scores — and its stored codes are carried through UNCHANGED (no
+    decode → re-encode round trip to accumulate quantization error). A
+    survivor whose codes fail to reconstruct aborts the compaction
+    before any write (:func:`_refuse_unreconstructed`).
 
     COMPACTION MUST QUIESCE THE INGEST, including its replay window: a
     streaming wave REPLAYED after a compaction re-lands its original
@@ -1248,14 +1447,24 @@ def compact_ivf_index(
     → new waves start at 1) and nothing older can replay. Resuming the
     OLD checkpoint after a compaction is the one sequence that corrupts
     silently."""
+    op = "compact_ivf_index"
+    raw = _read_index(spark, path, op)
+    codec = _index_codec(raw.columns, path, op, bounds, codebooks)
+    key = codec.key(vec_col)
     latest = (
-        _keep_latest_per_id(spark.read.parquet(path), id_col, vec_col)
-        .select(id_col, vec_col)
+        _keep_latest_per_id(raw, id_col, key)
+        .select(id_col, key)
         # the source partitions are rewritten below — cut the lineage so
         # the write doesn't read the files it is replacing
         .transform(lineage_cut)
     )
-    _write_wave0(ivf_assign_arrow(latest, sorted(centroids), vec_col=vec_col), path)
+    if codec.decode is None:
+        _write_wave0(ivf_assign_arrow(latest, sorted(centroids), vec_col=vec_col), path)
+        return
+    recon = latest.select(id_col, codec.view(vec_col).alias("_rv"))
+    _refuse_unreconstructed(recon, codec.dim, op, path, "compact them into a fresh wave 0")
+    cells = ivf_assign_arrow(recon, sorted(centroids), vec_col="_rv")
+    _write_wave0(cells.select(id_col, "cell").join(latest, id_col), path)
 
 
 def ivf_index_report(spark, path: str, id_col: str = "vec_id") -> DataFrame:
@@ -1289,23 +1498,6 @@ def ivf_index_report(spark, path: str, id_col: str = "vec_id") -> DataFrame:
     )
 
 
-def _read_index(spark, path: str, op: str) -> DataFrame:
-    """Read a persisted IVF index for a lifecycle operator, translating
-    the raw AnalysisException (PATH_NOT_FOUND / UNABLE_TO_INFER_SCHEMA
-    on an empty dir) into the same actionable error the serving stream
-    raises — the operator's next step is always the same: build the
-    index first."""
-    from pyspark.errors import AnalysisException  # noqa: PLC0415
-
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as exc:
-        raise ValueError(
-            f"{op}: no readable IVF index at {path}; build it "
-            "(similarity.build_ivf_index) first"
-        ) from exc
-
-
 def _pin_scoring_parallelism(latest: DataFrame) -> DataFrame:
     """AQE sizes post-shuffle parallelism by SHUFFLE BYTES, and
     quantized codes are 16-64x smaller than the vectors they decode to:
@@ -1321,49 +1513,6 @@ def _pin_scoring_parallelism(latest: DataFrame) -> DataFrame:
     never decoded vectors."""
     n = latest.sparkSession.sparkContext.defaultParallelism
     return latest.repartition(n)
-
-
-def _codec_view(
-    columns: list[str],
-    bounds: tuple[list[float], list[float]] | None,
-    codebooks: list[tuple[int, int, list[float]]] | None,
-    op: str,
-):
-    """THE codec-detection rule for every lifecycle operator that must
-    work over any index tree (float / SQ8 / PQ): given the tree's
-    columns, return ``(payload_col, decode_fn)`` where ``payload_col``
-    is the stored column the keep-last rule ties on and ``decode_fn``
-    maps it to a float view, or ``(None, None)`` for a float tree. A
-    quantized tree whose frozen artifact was not passed fails fast with
-    the artifact named — reconstructing without it is impossible, and
-    guessing silently would be worse."""
-    payload = _codec_payload(columns)
-    if payload == "codes":
-        if bounds is None:
-            raise ValueError(
-                f"{op}: index is an SQ8 tree (codes column) — pass its "
-                "frozen quantization bounds"
-            )
-        mn, mx = _sq8_bound_arrays(bounds)
-        return "codes", lambda c: sq8_decode(c, mn, mx)
-    if payload == "pq_codes":
-        if codebooks is None:
-            raise ValueError(
-                f"{op}: index is a PQ tree (pq_codes column) — pass its "
-                "frozen codebooks"
-            )
-        return "pq_codes", _pq_decode_expr(codebooks)
-    return None, None
-
-
-def _codec_payload(columns: list[str]) -> str | None:
-    """Codec detection alone (no artifact validation, no decoder
-    construction): ``codes`` = SQ8, ``pq_codes`` = PQ, None = float."""
-    if "codes" in columns:
-        return "codes"
-    if "pq_codes" in columns:
-        return "pq_codes"
-    return None
 
 
 def _keep_latest_per_id(
@@ -1431,18 +1580,12 @@ def ivf_drift_report(
     the query path scores, so the drift reading describes what serving
     actually sees; pass the tree's frozen artifact (``bounds`` /
     ``codebooks``) or fail fast with it named."""
-    raw = _read_index(spark, path, "ivf_drift_report")
-    payload, decode = _codec_view(
-        raw.columns, bounds, codebooks, "ivf_drift_report"
+    op = "ivf_drift_report"
+    raw = _read_index(spark, path, op)
+    codec = _index_codec(raw.columns, path, op, bounds, codebooks)
+    latest = _keep_latest_per_id(raw, id_col, codec.key(vec_col)).select(
+        "cell", "wave", codec.view(vec_col).alias(vec_col)
     )
-    if payload is not None:
-        latest = _keep_latest_per_id(raw, id_col, payload).select(
-            "cell", "wave", decode(F.col(payload)).alias(vec_col)
-        )
-    else:
-        latest = _keep_latest_per_id(raw, id_col, vec_col).select(
-            "cell", "wave", vec_col
-        )
     cent_df = F.broadcast(
         spark.createDataFrame(
             [(c, [float(x) for x in v]) for c, v in sorted(centroids)],
@@ -1610,15 +1753,15 @@ def retrain_quantized_ivf(
     restart with a FRESH checkpoint and the new artifacts."""
     op = "retrain_quantized_ivf"
     raw = _read_index(spark, path, op)
-    payload, decode = _codec_view(raw.columns, bounds, codebooks, op)
-    if payload is None:
+    codec = _index_codec(raw.columns, path, op, bounds, codebooks)
+    if codec.payload is None:
         raise ValueError(
             f"{op}: index at {path} is a float tree — use "
             "retrain_ivf_centroids"
         )
     latest = (
-        _keep_latest_per_id(raw, id_col, payload)
-        .select(id_col, decode(F.col(payload)).alias("_rv"))
+        _keep_latest_per_id(raw, id_col, codec.payload)
+        .select(id_col, codec.decode(F.col(codec.payload)).alias("_rv"))
         # survivor reconstructions feed seeding, Lloyd, artifact
         # learning, AND the rewrite of the very files they came from:
         # one lineage cut (ARCHITECTURE §3)
@@ -1629,26 +1772,16 @@ def retrain_quantized_ivf(
     # the rebuild's drop_null_vectors (permanent data loss with no
     # error) — or crash the seed collect with a raw TypeError if its id
     # lands in the seed window
-    if payload == "codes":
-        expect_dim = len(bounds[0])
-    else:
-        _m, _dsub = _pq_geometry(codebooks)
-        expect_dim = _m * _dsub
-    n_bad = latest.filter(
-        F.col("_rv").isNull() | (F.size("_rv") != expect_dim)
-    ).count()
-    if n_bad:
-        raise ValueError(
-            f"{op}: {n_bad} row(s) at {path} failed to reconstruct to "
-            f"{expect_dim} dims — corrupt or foreign codes; refusing to "
-            "retrain over a survivor set that would silently lose them"
-        )
+    _refuse_unreconstructed(
+        latest, codec.dim, op, path,
+        "retrain over a survivor set that would silently lose them",
+    )
     new_cents = _train_centroids(
         latest, n_centroids, lloyd_iters, id_col, "_rv",
         seeds=latest.orderBy(id_col).limit(n_centroids),
         refuse_empty=f"{op} ({path})",
     )
-    if payload == "codes":
+    if bounds is not None:  # the codec rule admitted exactly one artifact
         _, new_bounds = build_sq8_ivf_index(
             latest, path, centroids=new_cents, id_col=id_col, vec_col="_rv"
         )
@@ -1725,194 +1858,14 @@ def build_sq8_ivf_index(
             corpus, n_centroids, lloyd_iters, id_col, vec_col,
             refuse_empty="build_sq8_ivf_index",
         )
-    mn, mx = _sq8_bound_arrays(bounds)
-    indexed = ivf_assign_arrow(
-        corpus.select(id_col, vec_col), cent_rows, vec_col=vec_col
-    ).select(id_col, sq8_codes(F.col(vec_col), mn, mx).alias("codes"), "cell")
-    _write_wave0(indexed, path)
+    codec = _index_codec(None, path, "build_sq8_ivf_index", bounds=bounds)
+    _write_index(corpus, path, cent_rows, codec, 0, id_col, vec_col)
     return cent_rows, bounds
 
 
 def _sq8_bound_arrays(bounds: tuple[list[float], list[float]]):
     """The frozen SQ8 bounds artifact as (mn, mx) literal array Columns."""
     return tuple(F.array(*[F.lit(v) for v in b]) for b in bounds)
-
-
-def upsert_sq8_ivf_index(
-    new_vectors: DataFrame,
-    path: str,
-    centroids: list[tuple[int, list[float]]],
-    bounds: tuple[list[float], list[float]],
-    wave: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    check_layout: bool = True,
-) -> None:
-    """Wave append to a persisted SQ8 index under the FROZEN centroid +
-    bounds artifacts: new float vectors are cell-assigned at full
-    precision, encoded under the build-time bounds (values outside them
-    clamp to 0/255 — the scalar-quantization saturation trade; a drifted
-    value range is one more signal the drift trigger's retrain refreshes
-    BOTH artifacts), and land in (cell, wave) dynamic-overwrite
-    partitions with the same replay-idempotency and cross-cell staleness
-    contract as the float upsert. Same guards: wave >= 1, NULL vectors
-    dropped, a codes-less (foreign/float) layout rejected loudly —
-    ``check_layout=False`` skips the per-call listing for callers that
-    verified the layout once for the index's lifetime (the streaming
-    wrapper, exactly as the float upsert)."""
-    if wave < 1:
-        raise ValueError(
-            f"upsert_sq8_ivf_index: wave must be >= 1 (wave 0 is the "
-            f"build), got {wave}"
-        )
-    new_vectors = drop_null_vectors(new_vectors, vec_col)
-    if check_layout:
-        existing = _index_columns(new_vectors.sparkSession, path)
-        if existing is not None and (
-            "codes" not in existing or "wave" not in existing
-        ):
-            raise ValueError(
-                f"upsert_sq8_ivf_index: index at {path} is not an SQ8 wave "
-                "index (expected codes + wave columns); writing SQ8 waves "
-                "into a float or legacy tree would create a mixed layout no "
-                "reader can open"
-            )
-    from .upsert import upsert_partitions  # noqa: PLC0415
-
-    mn, mx = _sq8_bound_arrays(bounds)
-    assigned = ivf_assign_arrow(
-        new_vectors.select(id_col, vec_col), sorted(centroids), vec_col=vec_col
-    ).select(
-        id_col,
-        sq8_codes(F.col(vec_col), mn, mx).alias("codes"),
-        "cell",
-    ).withColumn("wave", F.lit(wave))
-    upsert_partitions(assigned, path, ["cell", "wave"])
-
-
-def _compact_coded_ivf_index(
-    spark,
-    path: str,
-    centroids: list[tuple[int, list[float]]],
-    code_col: str,
-    decode,
-    id_col: str,
-    op: str,
-    expect_dim: int,
-) -> None:
-    """Shared compaction for the quantized (SQ8/PQ) index trees:
-    collapse all waves keep-last per id, REASSIGN each survivor's cell
-    from its RECONSTRUCTED vector under the frozen centroids — the same
-    vector the query path scores, so post-compact probe behavior is
-    self-consistent — and rewrite as a fresh wave 0. The stored codes
-    are carried through UNCHANGED (no decode→re-encode round trip to
-    accumulate quantization error); quiesce protocol exactly as
-    :func:`compact_ivf_index`.
-
-    A survivor whose codes fail to reconstruct to ``expect_dim`` values
-    (corrupt/foreign codes, e.g. a wave replayed under a retrained
-    codebook) ABORTS the compaction loudly before any write — the query
-    path scores such a row as NULL cosine (it never ranks), but
-    compaction rewriting it under a fabricated cell would launder the
-    corruption into a valid-looking wave 0. The check is one extra pass
-    over the keep-last survivors; compaction is an offline op."""
-    latest = (
-        _keep_latest_per_id(_read_index(spark, path, op), id_col, code_col)
-        .select(id_col, code_col)
-        .transform(lineage_cut)
-    )
-    recon = latest.select(
-        id_col, code_col, decode(F.col(code_col)).alias("_rv")
-    )
-    n_bad = recon.filter(
-        F.col("_rv").isNull() | (F.size("_rv") != expect_dim)
-    ).count()
-    if n_bad:
-        raise ValueError(
-            f"{op}: {n_bad} row(s) at {path} failed to reconstruct to "
-            f"{expect_dim} dims — corrupt or foreign codes (codes written "
-            "under a different codebook/bounds artifact?); refusing to "
-            "compact them into a fresh wave 0"
-        )
-    indexed = (
-        ivf_assign_arrow(
-            recon.select(id_col, "_rv"), sorted(centroids), vec_col="_rv"
-        )
-        .select(id_col, "cell")
-        .join(latest, id_col)
-    )
-    _write_wave0(indexed, path)
-
-
-def compact_sq8_ivf_index(
-    spark,
-    path: str,
-    centroids: list[tuple[int, list[float]]],
-    bounds: tuple[list[float], list[float]],
-    id_col: str = "vec_id",
-) -> None:
-    """Compaction for the SQ8 index: keep-last + reconstruct-and-reassign
-    (see :func:`_compact_coded_ivf_index`); codes stored unchanged."""
-    mn, mx = _sq8_bound_arrays(bounds)
-    _compact_coded_ivf_index(
-        spark,
-        path,
-        centroids,
-        "codes",
-        lambda c: F.transform(sq8_decode(c, mn, mx), lambda x: x.cast("float")),
-        id_col,
-        op="compact_sq8_ivf_index",
-        expect_dim=len(bounds[0]),
-    )
-
-
-def compact_pq_ivf_index(
-    spark,
-    path: str,
-    centroids: list[tuple[int, list[float]]],
-    codebooks: list[tuple[int, int, list[float]]],
-    id_col: str = "vec_id",
-) -> None:
-    """Compaction for the PQ index: keep-last + reconstruct-and-reassign
-    via the shared literal-lookup decode (:func:`_pq_decode_expr` — the
-    same reconstruction the query path scores); codes stored
-    unchanged."""
-    m, dsub = _pq_geometry(codebooks)
-    _compact_coded_ivf_index(
-        spark,
-        path,
-        centroids,
-        "pq_codes",
-        _pq_decode_expr(codebooks),
-        id_col,
-        op="compact_pq_ivf_index",
-        expect_dim=m * dsub,
-    )
-
-
-def query_sq8_ivf_index(
-    spark,
-    path: str,
-    centroids: list[tuple[int, list[float]]],
-    bounds: tuple[list[float], list[float]],
-    queries: DataFrame,
-    k: int = 5,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """ANN over the persisted SQ8 index: probe-cell partition pruning and
-    newest-wave-per-id exactly as the float query path, but the scan
-    reads ~1/4 the bytes and scoring is ASYMMETRIC — the float query
-    against the dequantized code (standard SQ practice: keeping the
-    query at full precision costs nothing and beats symmetric
-    reconstruction on recall). Output contract matches query_ivf_index:
-    (query_id, neighbor_id, cos_sim, rank), cos_sim computed over the
-    reconstructed neighbor."""
-    return _query_index(
-        spark, path, centroids, queries, k, n_probe, id_col, vec_col,
-        codec="codes", bounds=bounds, op="query_sq8_ivf_index",
-    )
 
 
 PQ_M = 4
@@ -1938,8 +1891,8 @@ def _pq_encode(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """(id, _vkey, codes): each vector's m one-byte PQ codes under a
-    FROZEN codebook table (j, cell, cv) — the encode half shared by the
-    build and upsert paths of the persisted PQ index. Assignment is
+    FROZEN codebook table (j, cell, cv) — the PQ codec's encoder
+    (:func:`_index_codec`) behind every PQ build and wave. Assignment is
     argmin squared-L2 per (row, subspace) against the broadcast m*k
     codebook (ties: lowest cell), codes ordered by subspace. Rows are
     keyed by (id, vector-as-string), NOT id alone: a batch carrying the
@@ -2050,13 +2003,10 @@ def build_pq_ivf_index(
             corpus, n_centroids, lloyd_iters, id_col, vec_col,
             refuse_empty="build_pq_ivf_index",
         )
-    spark = corpus.sparkSession
-    if codebooks is not None:
-        # rebuild under a FROZEN codebook artifact: its geometry is the
-        # only truth — passed m/dsub that disagree with it would encode
-        # subvectors against wrong-dimension sub-centroids (NULL L2,
-        # effectively random codes) with no error anywhere
-        m, dsub = _pq_geometry(codebooks)
+    # m/dsub only shape NEW codebooks: under a FROZEN artifact the codec
+    # derives its geometry from the artifact (_index_codec) — passed m/dsub
+    # that disagree with it would encode subvectors against wrong-dimension
+    # sub-centroids (NULL L2, effectively random codes) with no error
     if codebooks is None:
         cb_df = pq_codebooks(
             corpus,
@@ -2076,98 +2026,9 @@ def build_pq_ivf_index(
                 "build_pq_ivf_index: corpus has no non-NULL vectors to "
                 "learn codebooks from — nothing to index"
             )
-    cent = _pq_codebook_df(spark, codebooks)
-    # join back on (id, vector-string): duplicate ids in one batch keep
-    # their OWN codes and cells (see _pq_encode), matching the float and
-    # SQ8 paths which carry each duplicate row's payload through
-    assigned = ivf_assign_arrow(
-        corpus.select(id_col, vec_col), cent_rows, vec_col=vec_col
-    ).select(id_col, F.col(vec_col).cast("string").alias("_vkey"), "cell")
-    encoded = _pq_encode(
-        corpus, cent, m=m, dsub=dsub, id_col=id_col, vec_col=vec_col
-    )
-    _write_wave0(assigned.join(encoded, [id_col, "_vkey"]).drop("_vkey"), path)
+    codec = _index_codec(None, path, "build_pq_ivf_index", codebooks=codebooks)
+    _write_index(corpus, path, cent_rows, codec, 0, id_col, vec_col)
     return cent_rows, codebooks
-
-
-def upsert_pq_ivf_index(
-    new_vectors: DataFrame,
-    path: str,
-    centroids: list[tuple[int, list[float]]],
-    codebooks: list[tuple[int, int, list[float]]],
-    wave: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    check_layout: bool = True,
-) -> None:
-    """Wave append to a persisted PQ index under the FROZEN centroid +
-    codebook artifacts — guards, replay idempotency, and the cross-cell
-    staleness contract exactly as the float/SQ8 upserts. The PQ geometry
-    (m, dsub) is DERIVED from the codebook artifact, never passed: an
-    independent parameter that disagreed with the artifact would encode
-    garbage codes into the index with no error anywhere.
-    ``check_layout=False`` skips the per-call listing for callers that
-    verified the layout once for the index's lifetime."""
-    if wave < 1:
-        raise ValueError(
-            f"upsert_pq_ivf_index: wave must be >= 1 (wave 0 is the "
-            f"build), got {wave}"
-        )
-    new_vectors = drop_null_vectors(new_vectors, vec_col)
-    if check_layout:
-        existing = _index_columns(new_vectors.sparkSession, path)
-        if existing is not None and (
-            "pq_codes" not in existing or "wave" not in existing
-        ):
-            raise ValueError(
-                f"upsert_pq_ivf_index: index at {path} is not a PQ wave index "
-                "(expected pq_codes + wave columns); writing PQ waves into a "
-                "float/SQ8/legacy tree would create a mixed layout no reader "
-                "can open"
-            )
-    from .upsert import upsert_partitions  # noqa: PLC0415
-
-    spark = new_vectors.sparkSession
-    m, dsub = _pq_geometry(codebooks)
-    cent = _pq_codebook_df(spark, codebooks)
-    assigned = ivf_assign_arrow(
-        new_vectors.select(id_col, vec_col), sorted(centroids), vec_col=vec_col
-    ).select(id_col, F.col(vec_col).cast("string").alias("_vkey"), "cell")
-    encoded = _pq_encode(
-        new_vectors, cent, m=m, dsub=dsub, id_col=id_col, vec_col=vec_col
-    )
-    landed = (
-        assigned.join(encoded, [id_col, "_vkey"])
-        .drop("_vkey")
-        .withColumn("wave", F.lit(wave))
-    )
-    upsert_partitions(landed, path, ["cell", "wave"])
-
-
-def query_pq_ivf_index(
-    spark,
-    path: str,
-    centroids: list[tuple[int, list[float]]],
-    codebooks: list[tuple[int, int, list[float]]],
-    queries: DataFrame,
-    k: int = 5,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """ANN over the persisted PQ index: probe-cell partition pruning and
-    the shared keep-last rule, neighbors RECONSTRUCTED from their m
-    codes via the shared literal-lookup decode (:func:`_pq_decode_expr`
-    — row-local, no shuffle on the serving hot path; an explode + join +
-    regroup here would pay an exchange of m× the probed rows per query
-    batch), asymmetric scoring (the float query never quantizes), cosine
-    over the reconstruction, per-query top-k. A corrupt/foreign code row
-    reconstructs NULL → NULL cos_sim → never outranks a real row. Output
-    contract matches query_ivf_index."""
-    return _query_index(
-        spark, path, centroids, queries, k, n_probe, id_col, vec_col,
-        codec="pq_codes", codebooks=codebooks, op="query_pq_ivf_index",
-    )
 
 
 def ivf_probe_sweep(
@@ -2321,13 +2182,14 @@ def index_codec_frontier(
 
     n_rows = corpus.count()
     out = []
-    for codec, path, payload in (
-        ("float", fpath, None), ("sq8", spath, "codes"), ("pq", ppath, "pq_codes")
+    for codec, path, artifact in (
+        ("float", fpath, {}),
+        ("sq8", spath, {"bounds": bounds}),
+        ("pq", ppath, {"codebooks": codebooks}),
     ):
-        approx = _query_index(
-            spark, path, cents, queries, k, n_probe, id_col, vec_col,
-            codec=payload, bounds=bounds, codebooks=codebooks,
-            op="index_codec_frontier",
+        approx = query_ivf_index(
+            spark, path, cents, queries, k=k, n_probe=n_probe,
+            id_col=id_col, vec_col=vec_col, **artifact,
         )
         agg = _grade_recall(truth, approx).agg(
             F.round(F.avg("recall"), 6).alias("mean_recall"),
@@ -2363,37 +2225,24 @@ def query_ivf_index(
     n_probe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    bounds: tuple[list[float], list[float]] | None = None,
+    codebooks: list[tuple[int, int, list[float]]] | None = None,
 ) -> DataFrame:
     """ANN over a persisted IVF index: assign each query its n_probe cells,
     scan ONLY those cell partitions (partition pruning via the isin filter
-    — the scan's PartitionFilters, not a post-read filter), score
-    bucket-locally, rank per query. Matches `cosine_topk_ivf` output for
-    the same corpus/seeding."""
-    return _query_index(
-        spark, path, centroids, queries, k, n_probe, id_col, vec_col
-    )
+    — the scan's PartitionFilters, not a post-read filter), keep the
+    newest wave per id within the probed cells, score bucket-locally,
+    rank per query. Matches `cosine_topk_ivf` output for the same
+    corpus/seeding. Output: (query_id, neighbor_id, cos_sim, rank).
 
-
-def _query_index(
-    spark,
-    path: str,
-    centroids: list[tuple[int, list[float]]],
-    queries: DataFrame,
-    k: int,
-    n_probe: int,
-    id_col: str,
-    vec_col: str,
-    codec: str | None = None,
-    bounds: tuple[list[float], list[float]] | None = None,
-    codebooks: list[tuple[int, int, list[float]]] | None = None,
-    op: str = "query_ivf_index",
-) -> DataFrame:
-    """Shared persisted-index query body for the float (``codec`` None),
-    SQ8 (``codes``) and PQ (``pq_codes``) trees: probe each query's
-    ``n_probe`` cells, prune the scan to them (the isin lands in the
-    scan's PartitionFilters), keep the newest wave per id within the
-    probed cells, decode the payload (:func:`_codec_view`), score
-    bucket-locally, rank per query.
+    CODEC from the tree (:func:`_index_codec`): an SQ8 tree takes its
+    frozen ``bounds``, a PQ tree its frozen ``codebooks``. Scoring over a
+    quantized tree is ASYMMETRIC — the float query against the decoded
+    neighbor (keeping the query at full precision costs nothing and
+    beats symmetric reconstruction on recall); the PQ decode is the
+    row-local literal lookup of :func:`_pq_decode_expr`, no shuffle on
+    the serving hot path. A corrupt/foreign code row decodes NULL →
+    NULL cos_sim → never outranks a real row.
 
     The keep-last rule runs over the probed subset only, so its cost is
     cell-bounded (see upsert_ivf_index for the cross-cell staleness
@@ -2401,16 +2250,19 @@ def _query_index(
     window: one copy per id by construction. Quantized trees pin the
     scoring stage's width (:func:`_pin_scoring_parallelism`) — their
     codes are too small for byte-based AQE sizing."""
-    _, decode = _codec_view((codec,), bounds, codebooks, op)
+    op = "query_ivf_index"
+    index = _read_index(spark, path, op)
+    codec = _index_codec(index.columns, path, op, bounds, codebooks)
     probes = _probe_cells(queries, centroids, n_probe, id_col, vec_col)
     probe_cells = sorted({r["cell"] for r in probes.select("cell").distinct().collect()})
-    index = spark.read.parquet(path).filter(F.col("cell").isin(probe_cells))
-    if codec is not None or "wave" in index.columns:
-        index = _keep_latest_per_id(index, id_col, codec or vec_col)
-    if codec is not None:
+    index = index.filter(F.col("cell").isin(probe_cells))
+    if codec.payload is not None or "wave" in index.columns:
+        index = _keep_latest_per_id(index, id_col, codec.key(vec_col))
+    if codec.payload is not None:
         index = _pin_scoring_parallelism(index)
-    cv = F.col(vec_col) if decode is None else decode(F.col(codec))
-    indexed = index.select(F.col(id_col).alias("neighbor_id"), cv.alias("cv"), "cell")
+    indexed = index.select(
+        F.col(id_col).alias("neighbor_id"), codec.view(vec_col).alias("cv"), "cell"
+    )
     return _rank_neighbors(_cosine_pairs(probes, indexed, "cell", dedup=True), k=k)
 
 
@@ -3956,19 +3808,14 @@ def ivf_recall_report(
     (:func:`should_rebuild_centroids`) decides when that cost warrants
     a retrain.
 
-    CODEC-AWARE: a quantized tree routes the approximate side through
-    its own query path (query_sq8/pq_ivf_index with the frozen
-    artifact), so the recall reading INCLUDES the quantization error —
-    the number an operator actually serves at, truth side unchanged
-    (brute force over the live float corpus)."""
+    CODEC-AWARE: the approximate side passes a quantized tree's frozen
+    artifact to :func:`query_ivf_index`, so the recall reading INCLUDES
+    the quantization error — the number an operator actually serves at,
+    truth side unchanged (brute force over the live float corpus)."""
     truth = cosine_topk(corpus, queries, k=k, id_col=id_col, vec_col=vec_col)
-    # one schema-only read (footer listing, no data) detects the codec;
-    # the shared query body validates the artifact with the named error
-    op = "ivf_recall_report"
-    approx = _query_index(
-        spark, path, centroids, queries, k, n_probe, id_col, vec_col,
-        codec=_codec_payload(_read_index(spark, path, op).columns),
-        bounds=bounds, codebooks=codebooks, op=op,
+    approx = query_ivf_index(
+        spark, path, centroids, queries, k=k, n_probe=n_probe, id_col=id_col,
+        vec_col=vec_col, bounds=bounds, codebooks=codebooks,
     )
     return _grade_recall(truth, approx)
 

@@ -1284,25 +1284,19 @@ def run_streaming_ivf_upsert(
     the driver over a 1-row collect (the report is a single row by
     construction).
 
-    CODEC DISPATCH (write side, mirroring run_streaming_ann_query's
-    read side): the index schema read once at stream start decides the
-    wave encoder — a ``codes`` tree lands SQ8 waves under the frozen
-    ``bounds``, a ``pq_codes`` tree lands PQ waves under the frozen
-    ``codebooks``, anything else lands float waves; the drift monitor
-    reports over the same codec view. A quantized tree with its
-    artifact missing — or a float tree WITH one (the caller thinks it
-    is quantized: almost certainly the wrong path) — fails fast before
-    the stream starts. A missing index is created by the first wave in
-    the codec the passed artifacts imply."""
+    CODEC (write side, as run_streaming_ann_query on the read side):
+    one index read at stream start resolves the tree's codec through
+    similarity's one codec rule (``_index_codec``) — an SQ8 tree lands
+    code waves under the frozen ``bounds``, a PQ tree under the frozen
+    ``codebooks``, a float tree float waves; the drift monitor reports
+    over the same codec view. Every tree/artifact mismatch the rule
+    refuses fails before the stream starts. A missing index is created
+    by the first wave in the codec the passed artifacts imply."""
     import json as _json
     from pathlib import Path
     from urllib.parse import urlparse
 
-    from ..operators.similarity import (
-        upsert_ivf_index,
-        upsert_pq_ivf_index,
-        upsert_sq8_ivf_index,
-    )
+    from ..operators.similarity import _open_for_write, _write_index
 
     cent_rows = sorted(centroids)
     spark = vectors.sparkSession
@@ -1323,63 +1317,12 @@ def run_streaming_ivf_upsert(
         )
     ckpt_dir = Path(parsed.path if parsed.scheme else checkpoint)
     base_file = ckpt_dir / "ivf_wave_base.json"
-    # one index read at stream start serves BOTH the codec dispatch and
-    # (when the sidecar is missing) the wave-base pin — never per batch
-    try:
-        idx = spark.read.parquet(index_path)
-    except AnalysisException:
-        idx = None  # no index yet: the first wave creates it
-    if idx is not None:
-        if "codes" in idx.columns:
-            codec = "sq8"
-        elif "pq_codes" in idx.columns:
-            codec = "pq"
-        else:
-            codec = "float"
-            if bounds is not None or codebooks is not None:
-                raise ValueError(
-                    f"run_streaming_ivf_upsert: index at {index_path} is a "
-                    "FLOAT tree but a quantization artifact was passed — "
-                    "wrong index path, or the tree was rebuilt under a "
-                    "different codec; refusing to ingest float waves the "
-                    "caller believes are quantized"
-                )
-    else:
-        if bounds is not None and codebooks is not None:
-            raise ValueError(
-                "run_streaming_ivf_upsert: both bounds (SQ8) and "
-                "codebooks (PQ) passed for a new index — pick one codec"
-            )
-        codec = (
-            "sq8" if bounds is not None
-            else "pq" if codebooks is not None
-            else "float"
-        )
-    if codec == "sq8" and bounds is None:
-        raise ValueError(
-            f"run_streaming_ivf_upsert: {index_path} is an SQ8 index "
-            "(codes column) — pass its frozen quantization bounds"
-        )
-    if codec == "pq" and codebooks is None:
-        raise ValueError(
-            f"run_streaming_ivf_upsert: {index_path} is a PQ index "
-            "(pq_codes column) — pass its frozen codebooks"
-        )
-    # symmetric with the new-index ambiguity guard: a SPURIOUS second
-    # artifact against an existing quantized tree means the operator
-    # mixed up two indexes' artifacts — refuse before the stream starts
-    if codec == "sq8" and codebooks is not None:
-        raise ValueError(
-            f"run_streaming_ivf_upsert: {index_path} is an SQ8 index but "
-            "PQ codebooks were ALSO passed — artifacts from two different "
-            "indexes? pick the one that matches this tree"
-        )
-    if codec == "pq" and bounds is not None:
-        raise ValueError(
-            f"run_streaming_ivf_upsert: {index_path} is a PQ index but "
-            "SQ8 bounds were ALSO passed — artifacts from two different "
-            "indexes? pick the one that matches this tree"
-        )
+    # one index read at stream start serves the codec, the wave-layout
+    # check and (when the sidecar is missing) the wave-base pin — never
+    # per batch
+    idx, codec = _open_for_write(
+        spark, index_path, "run_streaming_ivf_upsert", bounds, codebooks
+    )
     if base_file.exists():
         try:
             base_wave = int(_json.loads(base_file.read_text())["base_wave"])
@@ -1404,14 +1347,6 @@ def run_streaming_ivf_upsert(
         if idx is None:  # no index yet: build namespace is wave 0
             base_wave = 0
         else:
-            if "wave" not in idx.columns:
-                raise ValueError(
-                    f"run_streaming_ivf_upsert: index at {index_path} has "
-                    "no wave partition level (pre-round-11 layout); "
-                    "rebuild it with build_ivf_index before streaming "
-                    "upserts — mixing partition layouts in one path is "
-                    "unreadable"
-                )
             base_wave = int(idx.agg(F.max("wave")).first()[0] or 0)
         base_file.parent.mkdir(parents=True, exist_ok=True)
         # atomic publish: a crash between open and write must not leave a
@@ -1425,36 +1360,13 @@ def run_streaming_ivf_upsert(
         tmp.write_text(_json.dumps({"base_wave": base_wave}))
         _os.replace(tmp, base_file)
 
-    # layout/codec verified once at stream start for the checkpoint's
-    # lifetime — per-batch re-listing would pay a file listing per
-    # micro-batch for a check that cannot change (check_layout=False)
-    if codec == "sq8":
-
-        def land(batch: DataFrame, wave: int) -> None:
-            upsert_sq8_ivf_index(
-                batch.select(id_col, vec_col), index_path, cent_rows,
-                bounds, wave=wave, id_col=id_col, vec_col=vec_col,
-                check_layout=False,
-            )
-    elif codec == "pq":
-
-        def land(batch: DataFrame, wave: int) -> None:
-            upsert_pq_ivf_index(
-                batch.select(id_col, vec_col), index_path, cent_rows,
-                codebooks, wave=wave, id_col=id_col, vec_col=vec_col,
-                check_layout=False,
-            )
-    else:
-
-        def land(batch: DataFrame, wave: int) -> None:
-            upsert_ivf_index(
-                batch.select(id_col, vec_col), index_path, cent_rows,
-                wave=wave, id_col=id_col, vec_col=vec_col,
-                check_layout=False,
-            )
-
     def process(batch: DataFrame, batch_id: int) -> None:
-        land(batch, base_wave + batch_id + 1)
+        # codec and layout were resolved once above for the checkpoint's
+        # lifetime: the wave writer lists the index zero times per batch
+        _write_index(
+            batch, index_path, cent_rows, codec, base_wave + batch_id + 1,
+            id_col, vec_col,
+        )
         if drift_monitor_path and (batch_id + 1) % max(1, report_every) == 0:
             from ..operators.similarity import (  # noqa: PLC0415
                 ivf_drift_report,
@@ -1532,60 +1444,20 @@ def run_streaming_ann_query(
     index serves fine (query_ivf_index treats it as all build rows) —
     only WRITES are barred from the pre-wave layout.
 
-    CODEC DISPATCH: the index schema read at start also decides the
-    query path — a ``codes`` column routes to query_sq8_ivf_index (pass
-    the frozen ``bounds`` artifact), ``pq_codes`` to query_pq_ivf_index
-    (pass the frozen ``codebooks``), anything else to the float path —
-    so the serving job is unchanged when the operator swaps the index
-    codec; a quantized index with its artifact missing fails fast with
-    the artifact named."""
-    from ..operators.similarity import (
-        query_ivf_index,
-        query_pq_ivf_index,
-        query_sq8_ivf_index,
-    )
+    CODEC: the index schema read at start goes through similarity's
+    one codec rule (``_index_codec``), so a quantized index without its
+    frozen artifact (``bounds`` for SQ8, ``codebooks`` for PQ), a float
+    index given one, or the other codec's artifact passed too fails fast
+    with the artifact named; each micro-batch passes the artifact to
+    query_ivf_index, which reads the codec from the tree — so the
+    serving job is unchanged when the operator swaps the index codec."""
+    from ..operators.similarity import _index_codec, _read_index, query_ivf_index
     from ..operators.upsert import upsert_partitions
 
-    try:
-        index_cols = queries.sparkSession.read.parquet(index_path).columns
-    except AnalysisException as exc:
-        raise ValueError(
-            f"run_streaming_ann_query: no readable IVF index at "
-            f"{index_path}; build it (similarity.build_ivf_index) before "
-            "starting the serving stream"
-        ) from exc
-
+    op = "run_streaming_ann_query"
+    tree = _read_index(queries.sparkSession, index_path, op)
+    _index_codec(tree.columns, index_path, op, bounds, codebooks)
     cent_rows = sorted(centroids)
-    if "codes" in index_cols:
-        if bounds is None:
-            raise ValueError(
-                f"run_streaming_ann_query: {index_path} is an SQ8 index "
-                "(codes column) — pass its frozen quantization bounds"
-            )
-
-        def query_fn(spark_b, qdf):
-            return query_sq8_ivf_index(
-                spark_b, index_path, cent_rows, bounds, qdf,
-                k=k, n_probe=n_probe,
-            )
-    elif "pq_codes" in index_cols:
-        if codebooks is None:
-            raise ValueError(
-                f"run_streaming_ann_query: {index_path} is a PQ index "
-                "(pq_codes column) — pass its frozen codebooks"
-            )
-
-        def query_fn(spark_b, qdf):
-            return query_pq_ivf_index(
-                spark_b, index_path, cent_rows, codebooks, qdf,
-                k=k, n_probe=n_probe,
-            )
-    else:
-
-        def query_fn(spark_b, qdf):
-            return query_ivf_index(
-                spark_b, index_path, cent_rows, qdf, k=k, n_probe=n_probe
-            )
 
     def process(batch: DataFrame, batch_id: int) -> None:
         # cache, not localCheckpoint: the probe collect and the scoring
@@ -1593,17 +1465,22 @@ def run_streaming_ann_query(
         # the blocks deterministically per batch on a continuous stream
         batch = batch.persist()
         try:
-            # alias BOTH columns to the query functions' defaults: the
-            # closures call query_*_ivf_index without id/vec overrides,
-            # so a caller's non-default vec_col must be renamed here or
-            # the first micro-batch dies on an unresolved column AFTER
-            # the checkpoint dir is committed
-            res = query_fn(
+            # alias BOTH columns to query_ivf_index's defaults, which it
+            # is called with: a caller's non-default vec_col must be
+            # renamed here or the first micro-batch dies on an unresolved
+            # column AFTER the checkpoint dir is committed
+            res = query_ivf_index(
                 batch.sparkSession,
+                index_path,
+                cent_rows,
                 batch.select(
                     F.col(id_col).alias("vec_id"),
                     F.col(vec_col).alias("embedding"),
                 ),
+                k=k,
+                n_probe=n_probe,
+                bounds=bounds,
+                codebooks=codebooks,
             )
             upsert_partitions(
                 res.withColumn("batch_id", F.lit(batch_id)),

@@ -298,3 +298,17 @@ def test_distributed_lloyd_matches_oracle(spark, duck, sf_dir, name):
         df = q.fn(spark, sf_dir)
         assert_matches_oracle(df, duck, q.oracle)
     assert hits == []
+
+
+@pytest.mark.parametrize("gate", ["driver", "spark"])
+def test_empty_seed_set_gives_an_empty_result(spark, gate):
+    """A corpus with no id below n has no seed vectors: training gives no
+    centroids and both operators an empty result, on the driver finish
+    and on the Spark loop alike (the centroid matrix of zero rows used to
+    crash the cosine kernel with an IndexError)."""
+    rng = np.random.default_rng(11)
+    corpus = _frame(spark, rng.normal(size=(40, 4)), first_id=1000)
+    with _distributed() if gate == "spark" else contextlib.nullcontext():
+        assert sim._train_centroids(corpus, 4, 2, "vec_id", "embedding") == []
+        assert sim.kmeans_clusters(corpus, n_clusters=4).count() == 0
+        assert sim.cosine_topk_ivf(corpus, corpus, n_centroids=4).count() == 0

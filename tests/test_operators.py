@@ -621,3 +621,25 @@ def test_lineage_cuts_go_through_one_chokepoint():
         and node.func.attr in ("localCheckpoint", "checkpoint")
     ]
     assert calls == [], f"lineage cuts bypassing lineage_cut: {calls}"
+
+
+def test_index_codec_is_decided_in_one_place():
+    """The persisted IVF index's codec (float, SQ8, PQ) is decided by
+    similarity._index_codec alone: no package module other than
+    operators/similarity.py names a quantized payload column, so no
+    other module can keep its own codec dispatch."""
+    import ast
+    from pathlib import Path
+
+    import data_pipelines_cu_spark
+
+    root = Path(data_pipelines_cu_spark.__file__).parent
+    owner = root / "operators" / "similarity.py"
+    hits = [
+        f"{path.relative_to(root)}:{node.lineno}"
+        for path in sorted(root.rglob("*.py"))
+        if path != owner
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Constant) and node.value in ("codes", "pq_codes")
+    ]
+    assert hits == [], f"codec dispatch outside similarity._index_codec: {hits}"

@@ -1107,8 +1107,8 @@ def test_sq8_persisted_index_lifecycle(spark, tmp_path):
     queries = em.filter(F.col("vec_id") < 5)
     got = sorted(
         tuple(r)
-        for r in sim.query_sq8_ivf_index(
-            spark, qidx, cents, bounds, queries, k=5, n_probe=2
+        for r in sim.query_ivf_index(
+            spark, qidx, cents, queries, k=5, n_probe=2, bounds=bounds,
         ).collect()
     )
     # in-plan oracle: float queries vs reconstructed corpus, same probes
@@ -1171,20 +1171,20 @@ def test_sq8_persisted_index_lifecycle(spark, tmp_path):
             "embedding"
         ),
     )
-    sim.upsert_sq8_ivf_index(upd, qidx, cents, bounds, wave=1)
+    sim.upsert_ivf_index(upd, qidx, cents, wave=1, bounds=bounds)
     landed = spark.read.parquet(qidx)
     assert landed.filter("vec_id = 0").count() >= 2  # both waves on disk
     # the zeroed vector has no cosine: id 0 drops out of every top-k
-    post = sim.query_sq8_ivf_index(
-        spark, qidx, cents, bounds, queries, k=5, n_probe=2
+    post = sim.query_ivf_index(
+        spark, qidx, cents, queries, k=5, n_probe=2, bounds=bounds,
     )
     assert post.filter("neighbor_id = 0").count() == 0
 
     # guards
     with pytest.raises(ValueError, match="wave must be >= 1"):
-        sim.upsert_sq8_ivf_index(upd, qidx, cents, bounds, wave=0)
+        sim.upsert_ivf_index(upd, qidx, cents, wave=0, bounds=bounds)
     with pytest.raises(ValueError, match="not an SQ8 wave index"):
-        sim.upsert_sq8_ivf_index(upd, fidx, cents, bounds, wave=1)
+        sim.upsert_ivf_index(upd, fidx, cents, wave=1, bounds=bounds)
 
 
 @pytest.mark.tier2
@@ -1222,8 +1222,8 @@ def test_pq_persisted_index_lifecycle(spark, tmp_path):
     queries = em.filter(F.col("vec_id") < 5)
     got = sorted(
         tuple(r)
-        for r in sim.query_pq_ivf_index(
-            spark, pidx, cents, codebooks, queries, k=5, n_probe=2
+        for r in sim.query_ivf_index(
+            spark, pidx, cents, queries, k=5, n_probe=2, codebooks=codebooks,
         ).collect()
     )
     assert len(got) > 0
@@ -1307,18 +1307,18 @@ def test_pq_persisted_index_lifecycle(spark, tmp_path):
     # vector — its codes become id 0's, so its reconstruction ties id 0's
     v0 = [float(x) for x in em.filter("vec_id = 0").first()["embedding"]]
     upd = spark.createDataFrame([(1, v0)], "vec_id long, embedding array<float>")
-    sim.upsert_pq_ivf_index(upd, pidx, cents, codebooks, wave=1)
-    post = sim.query_pq_ivf_index(
-        spark, pidx, cents, codebooks, queries.filter("vec_id = 0"),
-        k=1, n_probe=2,
+    sim.upsert_ivf_index(upd, pidx, cents, wave=1, codebooks=codebooks)
+    post = sim.query_ivf_index(
+        spark, pidx, cents, queries.filter("vec_id = 0"), k=1, n_probe=2,
+        codebooks=codebooks,
     ).first()
     assert post["neighbor_id"] == 1  # identical reconstruction, id ASC tie
 
     # guards
     with pytest.raises(ValueError, match="wave must be >= 1"):
-        sim.upsert_pq_ivf_index(upd, pidx, cents, codebooks, wave=0)
+        sim.upsert_ivf_index(upd, pidx, cents, wave=0, codebooks=codebooks)
     with pytest.raises(ValueError, match="not a PQ wave index"):
-        sim.upsert_pq_ivf_index(upd, fidx, cents, codebooks, wave=1)
+        sim.upsert_ivf_index(upd, fidx, cents, wave=1, codebooks=codebooks)
 
 
 def test_quantized_index_compaction_and_serving_dispatch(spark, tmp_path):
@@ -1348,7 +1348,7 @@ def test_quantized_index_compaction_and_serving_dispatch(spark, tmp_path):
         "vec_id",
         F.transform("embedding", lambda x: (-x).cast("float")).alias("embedding"),
     )
-    sim.upsert_sq8_ivf_index(moved, qidx, cents, bounds, wave=1)
+    sim.upsert_ivf_index(moved, qidx, cents, wave=1, bounds=bounds)
     pre = spark.read.parquet(qidx)
     assert pre.filter("vec_id = 3").count() == 2  # both copies on disk
 
@@ -1356,18 +1356,20 @@ def test_quantized_index_compaction_and_serving_dispatch(spark, tmp_path):
     full_probe = len(cents)
     pre_rows = sorted(
         tuple(r)
-        for r in sim.query_sq8_ivf_index(
-            spark, qidx, cents, bounds, queries, k=5, n_probe=full_probe
+        for r in sim.query_ivf_index(
+            spark, qidx, cents, queries, k=5, n_probe=full_probe,
+            bounds=bounds,
         ).collect()
     )
-    sim.compact_sq8_ivf_index(spark, qidx, cents, bounds)
+    sim.compact_ivf_index(spark, qidx, cents, bounds=bounds)
     post = spark.read.parquet(qidx)
     assert post.filter("vec_id = 3").count() == 1  # stale copy reconciled
     assert post.filter("wave > 0").count() == 0
     post_rows = sorted(
         tuple(r)
-        for r in sim.query_sq8_ivf_index(
-            spark, qidx, cents, bounds, queries, k=5, n_probe=full_probe
+        for r in sim.query_ivf_index(
+            spark, qidx, cents, queries, k=5, n_probe=full_probe,
+            bounds=bounds,
         ).collect()
     )
     # at full probe the keep-last answer is probe-layout-independent:
@@ -1391,8 +1393,8 @@ def test_quantized_index_compaction_and_serving_dispatch(spark, tmp_path):
     )
     want = sorted(
         (r["query_id"], r["rank"], r["neighbor_id"])
-        for r in sim.query_sq8_ivf_index(
-            spark, qidx, cents, bounds, queries, k=5, n_probe=2
+        for r in sim.query_ivf_index(
+            spark, qidx, cents, queries, k=5, n_probe=2, bounds=bounds,
         ).collect()
     )
     assert got == want and len(got) > 0
@@ -1426,13 +1428,14 @@ def test_pq_index_compaction_reconciles_cross_cell(spark, tmp_path):
         "vec_id",
         F.transform("embedding", lambda x: (-x).cast("float")).alias("embedding"),
     )
-    sim.upsert_pq_ivf_index(moved, pidx, cents, codebooks, wave=1)
+    sim.upsert_ivf_index(moved, pidx, cents, wave=1, codebooks=codebooks)
     queries = em.filter(F.col("vec_id") < 5)
     full_probe = len(cents)
     pre_rows = sorted(
         tuple(r)
-        for r in sim.query_pq_ivf_index(
-            spark, pidx, cents, codebooks, queries, k=5, n_probe=full_probe
+        for r in sim.query_ivf_index(
+            spark, pidx, cents, queries, k=5, n_probe=full_probe,
+            codebooks=codebooks,
         ).collect()
     )
     codes_pre = {
@@ -1442,7 +1445,7 @@ def test_pq_index_compaction_reconciles_cross_cell(spark, tmp_path):
         .select("vec_id", "pq_codes")
         .collect()
     }
-    sim.compact_pq_ivf_index(spark, pidx, cents, codebooks)
+    sim.compact_ivf_index(spark, pidx, cents, codebooks=codebooks)
     post = spark.read.parquet(pidx)
     assert post.filter("vec_id = 3").count() == 1
     assert post.filter("wave > 0").count() == 0
@@ -1451,8 +1454,9 @@ def test_pq_index_compaction_reconciles_cross_cell(spark, tmp_path):
     assert list(kept) == codes_pre[3]
     post_rows = sorted(
         tuple(r)
-        for r in sim.query_pq_ivf_index(
-            spark, pidx, cents, codebooks, queries, k=5, n_probe=full_probe
+        for r in sim.query_ivf_index(
+            spark, pidx, cents, queries, k=5, n_probe=full_probe,
+            codebooks=codebooks,
         ).collect()
     )
     assert post_rows == pre_rows
@@ -1483,11 +1487,12 @@ def test_pq_geometry_guards_and_duplicate_batch(spark, tmp_path):
     )
     assert sim._pq_geometry(codebooks) == (8, 8)
     upd = em.filter(F.col("vec_id") == 7)
-    sim.upsert_pq_ivf_index(upd, pidx, cents, codebooks, wave=1)
+    sim.upsert_ivf_index(upd, pidx, cents, wave=1, codebooks=codebooks)
     got = spark.read.parquet(pidx).filter("vec_id = 7 and wave = 1").first()
     assert len(got["pq_codes"]) == 8
-    res = sim.query_pq_ivf_index(
-        spark, pidx, cents, codebooks, em.filter(F.col("vec_id") < 3), k=3
+    res = sim.query_ivf_index(
+        spark, pidx, cents, em.filter(F.col("vec_id") < 3), k=3,
+        codebooks=codebooks,
     )
     assert res.count() > 0
 
@@ -1504,7 +1509,7 @@ def test_pq_geometry_guards_and_duplicate_batch(spark, tmp_path):
         F.transform("embedding", lambda x: (-x).cast("float")).alias("embedding"),
     )
     dup = v7.unionAll(neg7)
-    sim.upsert_pq_ivf_index(dup, pidx, cents, codebooks, wave=2)
+    sim.upsert_ivf_index(dup, pidx, cents, wave=2, codebooks=codebooks)
     landed = spark.read.parquet(pidx).filter("vec_id = 7 and wave = 2")
     assert landed.count() == 2
     cent_df = sim._pq_codebook_df(spark, codebooks)
@@ -1540,22 +1545,23 @@ def test_quantized_compaction_refuses_corrupt_codes(spark, tmp_path):
     corrupt.write.partitionBy("cell", "wave").mode("append").parquet(pidx)
 
     queries = em.filter(F.col("vec_id") < 3)
-    res = sim.query_pq_ivf_index(
-        spark, pidx, cents, codebooks, queries, k=5, n_probe=len(cents)
+    res = sim.query_ivf_index(
+        spark, pidx, cents, queries, k=5, n_probe=len(cents),
+        codebooks=codebooks,
     )
     bad_hits = res.filter(F.col("neighbor_id") == 9001).collect()
     assert all(r["cos_sim"] is None for r in bad_hits)  # never a real score
 
     with pytest.raises(ValueError, match="failed to reconstruct"):
-        sim.compact_pq_ivf_index(spark, pidx, cents, codebooks)
+        sim.compact_ivf_index(spark, pidx, cents, codebooks=codebooks)
     # the corrupt row is still there — nothing was laundered
     assert spark.read.parquet(pidx).filter("vec_id = 9001").count() == 1
 
     # missing path: the shared _read_index contract, not a raw
     # AnalysisException
     with pytest.raises(ValueError, match="no readable IVF index"):
-        sim.compact_pq_ivf_index(
-            spark, str(tmp_path / "nowhere"), cents, codebooks
+        sim.compact_ivf_index(
+            spark, str(tmp_path / "nowhere"), cents, codebooks=codebooks,
         )
 
 
@@ -1642,8 +1648,8 @@ def test_streaming_quantized_ingest_dispatch(spark, tmp_path):
     # parity with the batch write path: same codes for the same rows
     bidx = str(tmp_path / "batch")
     sim.build_sq8_ivf_index(original, bidx, centroids=cents, bounds=bounds)
-    sim.upsert_sq8_ivf_index(wave1, bidx, cents, bounds, wave=1)
-    sim.upsert_sq8_ivf_index(wave2, bidx, cents, bounds, wave=2)
+    sim.upsert_ivf_index(wave1, bidx, cents, wave=1, bounds=bounds)
+    sim.upsert_ivf_index(wave2, bidx, cents, wave=2, bounds=bounds)
     got = sorted(
         (r["vec_id"], r["cell"], r["wave"], tuple(r["codes"]))
         for r in landed.collect()
@@ -1708,8 +1714,8 @@ def test_quantized_drift_degrade_and_recover(spark, tmp_path):
     ).first().asDict()
     assert not sim.should_rebuild_centroids(baseline, baseline)["rebuild"]
 
-    sim.upsert_sq8_ivf_index(wave1, idx, cents, bounds, wave=1)
-    sim.upsert_sq8_ivf_index(wave2, idx, cents, bounds, wave=2)
+    sim.upsert_ivf_index(wave1, idx, cents, wave=1, bounds=bounds)
+    sim.upsert_ivf_index(wave2, idx, cents, wave=2, bounds=bounds)
 
     live = original.unionByName(wave1).unionByName(wave2)
     queries = wave1.filter(F.col("vec_id") < 8)
@@ -1756,7 +1762,7 @@ def test_retrain_quantized_pq_and_codec_guards(spark, tmp_path):
     cents, codebooks = sim.build_pq_ivf_index(
         original, pidx, n_centroids=2, m=4, dsub=2, k=8
     )
-    sim.upsert_pq_ivf_index(wave1, pidx, cents, codebooks, wave=1)
+    sim.upsert_ivf_index(wave1, pidx, cents, wave=1, codebooks=codebooks)
 
     new_cents, new_codebooks = sim.retrain_quantized_ivf(
         spark, pidx, n_centroids=3, codebooks=codebooks
@@ -1769,9 +1775,9 @@ def test_retrain_quantized_pq_and_codec_guards(spark, tmp_path):
     }
     assert post.count() == len(live_ids)
     queries = original.filter(F.col("vec_id") < 2)
-    res = sim.query_pq_ivf_index(
-        spark, pidx, new_cents, new_codebooks, queries, k=3,
-        n_probe=len(new_cents),
+    res = sim.query_ivf_index(
+        spark, pidx, new_cents, queries, k=3, n_probe=len(new_cents),
+        codebooks=new_codebooks,
     )
     assert res.count() > 0 and res.filter("cos_sim is null").count() == 0
 
@@ -1890,7 +1896,7 @@ def test_quantized_retrain_guards(spark, tmp_path):
 def test_streaming_ann_query_serves_pq_index(spark, tmp_path):
     """PQ leg of the serving stream's codec dispatch (the SQ8 leg is
     pinned in test_quantized_index_compaction_and_serving_dispatch):
-    pq_codes routes through query_pq_ivf_index with the frozen
+    pq_codes routes through query_ivf_index with the frozen
     codebooks, parity with the batch query path; missing codebooks
     fail fast with the artifact named."""
     from pyspark.sql import functions as F
@@ -1922,8 +1928,8 @@ def test_streaming_ann_query_serves_pq_index(spark, tmp_path):
     )
     want = sorted(
         (r["query_id"], r["rank"], r["neighbor_id"])
-        for r in sim.query_pq_ivf_index(
-            spark, pidx, cents, codebooks, queries, k=5, n_probe=2
+        for r in sim.query_ivf_index(
+            spark, pidx, cents, queries, k=5, n_probe=2, codebooks=codebooks,
         ).collect()
     )
     assert got == want and len(got) > 0
@@ -1976,8 +1982,8 @@ def test_quantized_builders_degenerate_paths(spark, tmp_path):
     cents, bounds = sim.build_sq8_ivf_index(em, sidx, n_centroids=8)
     _, codebooks = sim.build_pq_ivf_index(em, pidx, centroids=cents)
     n_s, n_p = (spark.read.parquet(p).count() for p in (sidx, pidx))
-    sim.upsert_sq8_ivf_index(all_null, sidx, cents, bounds, wave=1)
-    sim.upsert_pq_ivf_index(all_null, pidx, cents, codebooks, wave=1)
+    sim.upsert_ivf_index(all_null, sidx, cents, wave=1, bounds=bounds)
+    sim.upsert_ivf_index(all_null, pidx, cents, wave=1, codebooks=codebooks)
     assert spark.read.parquet(sidx).count() == n_s
     assert spark.read.parquet(pidx).count() == n_p
 
@@ -1986,3 +1992,48 @@ def test_quantized_builders_degenerate_paths(spark, tmp_path):
     # test_empty_corpus, pinned here at the operator grain
     mixed = em.limit(20).unionByName(all_null)
     assert sim.cosine_topk_pq(mixed, k_neighbors=2, n_queries=2).count() >= 0
+
+
+def test_codec_rule_refuses_tree_artifact_mismatches(spark, tmp_path):
+    """One codec rule for every entry point, and where the old per-path
+    copies disagreed the refusal wins: a float wave into an SQ8 or a PQ
+    tree (once accepted — it landed rows with NULL codes that score NULL
+    and can never be returned), a serving stream given an artifact for a
+    float tree (once ignored), and a float tree's report given one.
+    Every refusal happens before anything is written."""
+    from pyspark.sql import functions as F
+
+    from data_pipelines_cu_spark.operators import similarity as sim
+    from data_pipelines_cu_spark.streaming.jobs import run_streaming_ann_query
+
+    em = (
+        _embeddings(spark)
+        .filter(F.col("embedding").isNotNull())
+        .select("vec_id", "embedding")
+    )
+    fidx, sidx, pidx = (str(tmp_path / c) for c in ("float", "sq8", "pq"))
+    cents = sim.build_ivf_index(em, fidx, n_centroids=4, lloyd_iters=1)
+    _, bounds = sim.build_sq8_ivf_index(em, sidx, centroids=cents)
+    _, codebooks = sim.build_pq_ivf_index(em, pidx, centroids=cents)
+    upd = em.filter(F.col("vec_id") < 5)
+
+    with pytest.raises(ValueError, match="SQ8 index .* quantization bounds"):
+        sim.upsert_ivf_index(upd, sidx, cents, wave=1)
+    with pytest.raises(ValueError, match="PQ index .* frozen codebooks"):
+        sim.upsert_ivf_index(upd, pidx, cents, wave=1)
+    for path in (sidx, pidx):
+        assert spark.read.parquet(path).filter("wave > 0").count() == 0
+
+    rows = [
+        (r["vec_id"], [float(x) for x in r["embedding"]])
+        for r in upd.limit(1).collect()
+    ]
+    qs = _stream_vectors(spark, tmp_path / "q", rows)
+    with pytest.raises(ValueError, match="FLOAT tree but a quantization"):
+        run_streaming_ann_query(
+            qs, fidx, cents, str(tmp_path / "res"), str(tmp_path / "ck"),
+            id_col="vec_id", bounds=bounds,
+        )
+    assert not (tmp_path / "ck").exists()
+    with pytest.raises(ValueError, match="not a PQ wave index"):
+        sim.ivf_drift_report(spark, fidx, cents, codebooks=codebooks)
