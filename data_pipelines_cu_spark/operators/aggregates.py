@@ -649,7 +649,6 @@ def psi_value_drift(
     value_col: str = "value",
     id_col: str = "event_id",
     n_bins: int = 10,
-    plan_width: int | None = None,
 ) -> DataFrame:
     """(bin, n_ref, n_cur, p_ref, p_cur, psi_term, psi_total): the data
     splits at the midpoint date (half-open; first half = reference), bin
@@ -666,11 +665,7 @@ def psi_value_drift(
 
     Both lineage cuts (the tagged corpus table here and the blocked
     rank's ranged table) go through materialize.lineage_cut, so
-    ``spark.graft.reliableCuts`` decides local vs reliable. ``plan_width``
-    passes through to the blocked rank, skipping its driver-side width
-    derivation when the caller knows a bound (post-shuffle lineage →
-    windows.post_shuffle_width); left None, the derivation is memoized
-    per analyzed plan, so repeated windows over one frame compile once."""
+    ``spark.graft.reliableCuts`` decides local vs reliable."""
     from pyspark.sql import Window as W  # noqa: PLC0415
 
     from .windows import blocked_row_number  # noqa: PLC0415
@@ -698,10 +693,7 @@ def psi_value_drift(
     ref = tagged.filter("_is_ref")
     n_ref = F.broadcast(ref.agg(F.count(F.lit(1)).alias("_nr")))
     ranked = (
-        blocked_row_number(
-            ref.select("_v", "_id"), ["_v", "_id"], "_r",
-            plan_width=plan_width,
-        )
+        blocked_row_number(ref.select("_v", "_id"), ["_v", "_id"], "_r")
         .select("_v", "_r")
         .crossJoin(n_ref)
     )
@@ -1127,16 +1119,13 @@ def psi_reference_edges(
     value_col: str = "value",
     id_col: str = "event_id",
     n_bins: int = 10,
-    plan_width: int | None = None,
 ) -> DataFrame:
     """1-row (edges array) of the reference distribution's selection
     deciles — the FROZEN artifact a drift monitor computes once and bins
     every future window against (the streaming PSI job broadcasts it per
     micro-batch). Edge selection ranks through the two-level blocked rank
     (windows.blocked_row_number), so the reference corpus never
-    single-task sorts; ``plan_width`` (skip the rank's driver-side width
-    compile when the lineage is known post-shuffle) passes through to
-    that rank."""
+    single-task sorts."""
     from .windows import blocked_row_number  # noqa: PLC0415
 
     spark = ref.sparkSession
@@ -1146,9 +1135,7 @@ def psi_reference_edges(
         F.col(id_col).alias("_id"),
     )
     ranked = (
-        blocked_row_number(
-            vals, ["_v", "_id"], "_r", plan_width=plan_width
-        )
+        blocked_row_number(vals, ["_v", "_id"], "_r")
         .select("_v", "_r")
         .crossJoin(n_ref)
     )
@@ -1307,26 +1294,9 @@ def gini_concentration(
         )
         .select("_k", F.coalesce("_x", F.lit(0.0)).alias("_x"))
     )
-    from .windows import derived_block_count, post_shuffle_width  # noqa: PLC0415
-
-    # per's root is the entities⟕agg(fact) join. A shuffle join's width
-    # is conf-bounded; but the planner may BROADCAST agg(fact) — its
-    # byte size tracks the number of DISTINCT FACT KEYS, which can be
-    # tiny under a huge zero-filled entity base — and then per's width
-    # is the ENTITY SCAN's split count. Bound with both: the conf width
-    # and the entity projection's own width (a shallow plan compile on
-    # the raw dim, not the join) — correct in either plan shape, still
-    # skipping the compile of the joined plan itself.
-    width = max(
-        post_shuffle_width(entities.sparkSession),
-        derived_block_count(entities.select(entity_key)),
+    ranked = blocked_row_number(per, ["_x", "_k"], rank_col="_r").select(
+        "_x", "_r"
     )
-    ranked = blocked_row_number(
-        per,
-        ["_x", "_k"],
-        rank_col="_r",
-        plan_width=width,
-    ).select("_x", "_r")
     stats = F.broadcast(
         ranked.agg(
             F.count(F.lit(1)).alias("_n"),

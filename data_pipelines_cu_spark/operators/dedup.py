@@ -303,11 +303,15 @@ def near_dup_survivors(
     return df.join(losers, id_col, "left_anti")
 
 
+# Label-propagation rounds dedup_clusters runs before it gives up
+# (pointer doubling converges in O(log diameter) rounds).
+CC_MAX_ROUNDS = 20
+
+
 def dedup_clusters(
     pairs: DataFrame,
     id_col_a: str = "id_a",
     id_col_b: str = "id_b",
-    max_iter: int = 20,
 ) -> DataFrame:
     """Connected components over the near-dup pair graph → (doc_id,
     canonical_id), canonical = min id in the component.
@@ -319,7 +323,9 @@ def dedup_clusters(
     into O(log diameter). On a chain-shaped component of 1000 nodes that is
     ~10 rounds instead of ~1000; each round is two joins + one aggregation,
     the standard large-graph pattern when a true graph engine isn't
-    warranted.
+    warranted. Raises RuntimeError if the labels have not reached their
+    fixpoint after ``CC_MAX_ROUNDS`` rounds — unconverged labels would
+    split components silently.
     """
     edges = (
         # Both directions from ONE scan: the old
@@ -383,7 +389,7 @@ def dedup_clusters(
         ).collect()[0][0]
 
     prev_sum = _label_sum(labels)
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ROUNDS):
         new_labels = (
             adj.join(labels, adj.b == labels.node)
             .groupBy("a")
@@ -418,6 +424,11 @@ def dedup_clusters(
         if new_sum == prev_sum:
             break
         prev_sum = new_sum
+    else:
+        raise RuntimeError(
+            f"dedup_clusters: labels still changing after {CC_MAX_ROUNDS}"
+            " rounds; the components are not converged"
+        )
     return labels.select(
         F.col("node").alias("doc_id"), F.col("label").alias("canonical_id")
     )

@@ -382,23 +382,14 @@ def importance_weighted_sample(
             ).alias("imp_weight"),
         )
     )
-    from .windows import post_shuffle_width, take_ordered  # noqa: PLC0415
+    from .windows import take_ordered  # noqa: PLC0415
 
     keep = df.select(id_col, *keep_cols)
     order = [F.col("imp_weight").desc(), F.col(id_col).asc()]
     # guarded top-n: TakeOrdered below topKSortFallbackThreshold, blocked
-    # rank past it — never the silent full-sort fallback. The input's
-    # root lineage passes the per-doc aggregation exchange (scored is
-    # doc-cardinality, so no planner would broadcast it around), so the
-    # merge width is conf-bounded — pass it and skip take_ordered's
-    # borderline-band plan compile (top_n=300 sits past the compile-free
-    # shortcut).
+    # rank past it — never the silent full-sort fallback
     picked = take_ordered(
-        scored.join(keep, id_col),
-        order,
-        top_n,
-        rank_col=rank_col,
-        plan_width=post_shuffle_width(df.sparkSession),
+        scored.join(keep, id_col), order, top_n, rank_col=rank_col
     )
     return picked.select(
         id_col, *keep_cols, "n_tokens", "imp_weight", rank_col
@@ -1182,9 +1173,9 @@ def pack_sequences(
     greedy fold is O(rows); a shard at 100 TB holds corpus/n_shards
     documents, so ``n_shards`` is the knob that keeps per-task state
     bounded (the same sizing discipline as every blocked operator
-    here). Unlike the blocked-rank family's ``n_blocks`` — an internal
-    parallelism knob the engine derives from input width because ranks
-    are invariant to it — ``n_shards`` is SEMANTIC: the assignment
+    here). Unlike the blocked-rank family's block count — the session's
+    shuffle width, free to follow the conf because ranks are invariant
+    to it — ``n_shards`` is SEMANTIC: the assignment
     (which docs share a window) depends on it, and it must equal the
     training job's serving-shard count, so no automatic derivation
     applies. A 100 TB caller sizes it to the dataloader's reader

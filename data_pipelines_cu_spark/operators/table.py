@@ -230,29 +230,25 @@ def _manifest_path(path: str) -> str:
 
 
 def _read_manifest(path: str, fs=None) -> tuple[dict, str | None]:
-    """(manifest dict, etag) — ({}, None) for an empty/uncommitted table."""
+    """(manifest dict, etag) — ({}, None) for an empty/uncommitted table.
+    A manifest that does not parse raises ValueError: read as empty, the
+    next commit would re-commit ledgered batches and publish a manifest
+    without the batch ledger or the time-travel history."""
     fs = _resolve_fs(fs)
-    got = fs.read_text(_manifest_path(path))
+    mpath = _manifest_path(path)
+    got = fs.read_text(mpath)
     if got is None:
         return {}, None
     text, etag = got
     try:
         return json.loads(text), etag
-    except ValueError:
-        return {}, etag
+    except ValueError as e:
+        raise ValueError(f"corrupt table manifest at {mpath}: {e}") from e
 
 
 def _committed_versions(manifest: dict) -> list[int]:
-    """Every version this manifest has ever published. Pre-history
-    manifests (round-3 format) fall back to the current pointer plus the
-    batch ledger's values — still committed-only, never orphans."""
-    if "history" in manifest:
-        return sorted(int(v) for v in manifest["history"])
-    out = set()
-    if "version" in manifest:
-        out.add(int(manifest["version"]))
-    out.update(int(v) for v in manifest.get("batches", {}).values())
-    return sorted(out)
+    """Every version this manifest has ever published."""
+    return sorted(int(v) for v in manifest.get("history", []))
 
 
 def current_version(path: str, fs=None) -> int | None:

@@ -1283,7 +1283,6 @@ def quality_quantile_calibrate(
     score_col: str = "quality",
     group_col: str = "source",
     id_col: str = "doc_id",
-    plan_width: int | None = None,
 ) -> DataFrame:
     """(id, group, score, src_rank, calibrated): each doc's within-source
     rank r (score, id order), mapped to the global sorted score at
@@ -1294,9 +1293,7 @@ def quality_quantile_calibrate(
     TWO-LEVEL BLOCKED global rank (windows.blocked_row_number: the corpus
     never single-task sorts; ranks are total-order exact over
     (score, id), so the ROW_NUMBER oracle twin is byte-identical) + a
-    rank-keyed join. ``plan_width`` (skip the rank's driver-side width
-    compile when the caller knows a bound) passes through to the blocked
-    rank."""
+    rank-keyed join."""
     from pyspark.sql import Window as W  # noqa: PLC0415
 
     from .windows import blocked_row_number  # noqa: PLC0415
@@ -1324,7 +1321,6 @@ def quality_quantile_calibrate(
         ),
         ["_gscore", "_gid"],
         rank_col="_grank",
-        plan_width=plan_width,
     ).select("_gscore", "_grank")
     return (
         ranked.withColumn("_target", target)

@@ -44,76 +44,39 @@ def topk_per_group(
 # exact corpus-sized ranking: the two-level prefix-sum shape of
 # operators/sampling.py::systematic_weighted_sample generalized from
 # id-blocks to arbitrary sort keys via a range shuffle.
+#
+# The whole family is sized by ONE number, post_shuffle_width: the width
+# every other exchange in the engine already runs at. No plan is probed
+# for its partition count: under AQE, turning a shuffled frame into an
+# RDD to count its partitions runs the shuffle stage — a hidden Spark
+# job per call.
 
 
-# Width memo for derived_block_count, keyed by (session token, analyzed-
-# plan semantic hash): the derivation's ``df.rdd`` conversion compiles the
-# physical plan driver-side (~0.5-1s on deep lineage — the same tax
-# take_ordered's pricing ladder shed), and chained rank consumers (RFM's
-# three ntiles, repeated PSI windows) re-derive over the SAME frame.
-# Semantic-hash keying is safe because a stale width cannot change a
-# result (ranks are block-count invariant); at worst a path re-written
-# with a different file count mid-session keeps the old task sizing
-# until the session ends. The session token is (applicationId, startTime)
-# — NOT id(sparkSession): CPython reuses a garbage-collected session's id,
-# which would let a fresh session silently read a dead session's widths.
-# Bounded: cleared wholesale past 256 entries.
-_WIDTH_CACHE: dict[tuple[tuple[str, int], int], int] = {}
+# Largest partitions × n row count take_ordered lets ONE task heap-merge
+# (see its docstring for the trade this prices).
+MERGE_ROWS_BUDGET = 134_217_728
 
 
-def _session_token(df: DataFrame) -> tuple[str, int]:
-    sc = df.sparkSession.sparkContext
-    return (sc.applicationId, sc.startTime)
-
-
-def derived_block_count(df: DataFrame, floor: int = 32) -> int:
-    """Block count for the blocked-rank family when the caller does not
-    pin one: the compiled input plan's partition count, floored at
-    ``floor`` and at ``defaultParallelism``.
-
-    Each block is ranked by ONE task (``Window.partitionBy(block)``), so
-    a FIXED block count is a parallelism ceiling: at 100× the data,
-    corpus/32 per block is exactly the fat task the blocked rank exists
-    to forbid. Sizing blocks to the input's own partitioning keeps the
-    per-block local sort at roughly one input partition's rows
-    (~``spark.sql.files.maxPartitionBytes`` worth on a parquet scan) at
-    ANY scale. The partition count is read off the compiled plan
-    (driver-side plan compile, no job — same pricing `take_ordered`
-    uses for its merge width), memoized per analyzed-plan semantic hash
-    so repeat derivations over the same frame (chained ntiles, windowed
-    monitors) compile once per session; an unconvertible plan falls
-    back to ``defaultParallelism``. Ranks are invariant to block count
-    under a total order, so the derivation can never change a result.
-    Callers that KNOW a conf-bounded width (post-shuffle lineage)
-    should still pass ``plan_width`` and skip even the first compile."""
-    key = None
-    try:
-        key = (
-            _session_token(df),
-            int(df._jdf.queryExecution().analyzed().semanticHash()),
-        )
-    except Exception:  # noqa: BLE001 (analysis failure — derive uncached)
-        pass
-    if key is not None and key in _WIDTH_CACHE:
-        width = _WIDTH_CACHE[key]
-    else:
-        try:
-            width = max(1, df.rdd.getNumPartitions())
-        except Exception:  # noqa: BLE001 (unconvertible plan — estimate)
-            width = 1
-        if key is not None:
-            if len(_WIDTH_CACHE) > 256:
-                _WIDTH_CACHE.clear()
-            _WIDTH_CACHE[key] = width
-    return max(floor, width, df.sparkSession.sparkContext.defaultParallelism)
+def post_shuffle_width(spark) -> int:
+    """The engine's one shuffle width: ``max(spark.sql.shuffle.partitions,
+    defaultParallelism)``. Every exchange the planner inserts runs at
+    the conf width (AQE only coalesces it down), and the blocked-rank
+    family uses the same number as its block count and as
+    :func:`take_ordered`'s merge width — read from the session conf,
+    never from a compiled plan, so sizing costs no Spark job. At
+    cluster scale raise ``spark.sql.shuffle.partitions`` (session.py)
+    and every rank stage widens with the rest of the engine."""
+    return max(
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+        spark.sparkContext.defaultParallelism,
+        1,
+    )
 
 
 def blocked_row_number(
     df: DataFrame,
     order_by: Sequence,
     rank_col: str = "_r",
-    n_blocks: int | None = None,
-    plan_width: int | None = None,
 ) -> DataFrame:
     """Exact global ROW_NUMBER over ``order_by`` with NO single-task global
     sort. Returns ``df`` plus ``rank_col`` (LongType, 1-based — NOT the
@@ -135,18 +98,10 @@ def blocked_row_number(
     stays byte-identical. The explicit partition count keeps AQE from
     coalescing the range exchange.
 
-    ``n_blocks=None`` (the default) derives the block count from the
-    input's own width via :func:`derived_block_count` — ``max(32, plan
-    partitions, defaultParallelism)`` — so per-block tasks stay at
-    roughly one input partition's rows no matter the corpus size; a
-    fixed block count would be a hidden parallelism ceiling (corpus/32
-    single-task local sorts at 100×). The derivation is a driver-side
-    plan compile; a caller whose input lineage is provably post-shuffle
-    can pass ``plan_width`` (:func:`post_shuffle_width`) to skip it —
-    the shuffle-partition conf IS that plan's width bound. Pass an
-    explicit ``n_blocks`` int only when the caller knows better (tests
-    pinning plan shape, inputs whose plan width wildly overstates the
-    ranked row count).
+    ``n_blocks`` is :func:`post_shuffle_width` — the session's shuffle
+    width, so a rank stage runs as wide as every other exchange and
+    grows with ``spark.sql.shuffle.partitions``. Ranks are invariant to
+    the block count, so the width can never change a result.
 
     The ranged table is checkpointed: its two consumers (the ranking
     window and the block-count aggregate) would otherwise each recompute
@@ -162,12 +117,7 @@ def blocked_row_number(
     input on executor storage until the DataFrame is garbage-collected
     (three chained calls, as in RFM, pin three copies).
     """
-    if n_blocks is None:
-        n_blocks = (
-            max(32, plan_width)
-            if plan_width is not None
-            else derived_block_count(df)
-        )
+    n_blocks = post_shuffle_width(df.sparkSession)
     ranged = df.repartitionByRange(n_blocks, *order_by).withColumn(
         "_brn_blk", F.spark_partition_id()
     )
@@ -175,13 +125,10 @@ def blocked_row_number(
     # The ranking window requires ClusteredDistribution(_brn_blk); the
     # checkpoint records RangePartitioning(order_by), which does NOT
     # satisfy it, so Catalyst inserts a hash exchange — and an IMPLICIT
-    # exchange is spark.sql.shuffle.partitions wide, silently capping
-    # the rank stage at the conf width no matter how many blocks exist
-    # (measured: 256 blocks still ranked by 32 tasks, 8 blocks each —
-    # the exact corpus/conf fat task the helper exists to forbid). The
-    # EXPLICIT count pins the exchange at n_blocks width (and survives
-    # AQE coalescing); hash collisions pack an occasional 2-3 blocks
-    # into one task, bounded and far better than conf-width.
+    # exchange may be coalesced by AQE below the block count, packing
+    # several blocks into one task. The EXPLICIT count pins the exchange
+    # at n_blocks width (and survives AQE coalescing); hash collisions
+    # pack an occasional 2-3 blocks into one task, bounded.
     wide = part.repartition(n_blocks, "_brn_blk")
     w_loc = Window.partitionBy("_brn_blk").orderBy(*order_by)
     w_off = Window.orderBy("_brn_blk").rowsBetween(
@@ -208,38 +155,11 @@ def blocked_row_number(
     )
 
 
-# A plan wider than this is out of design range (≈ a 128 TB scan at
-# 128 MB splits): below it, n × width ≤ budget can sometimes be decided
-# WITHOUT compiling the plan — see take_ordered's pricing ladder.
-PLAN_WIDTH_CAP = 1 << 20
-
-
-def post_shuffle_width(spark) -> int:
-    """Width bound for a plan whose root lineage passes through a
-    shuffle exchange (aggregate, shuffle join, repartition): the
-    runtime partition count is at most ``spark.sql.shuffle.partitions``
-    (AQE only coalesces it down), not the underlying scan's split
-    count. Callers that KNOW their take_ordered input is post-shuffle
-    pass this as ``plan_width`` and skip the driver-side plan compile
-    entirely — measured at 1–2.4s per call on deep plans (iterative
-    PageRank, double self-joins), pure waste when the width is conf-
-    bounded. NOT valid for a scan/broadcast-join-only lineage, where
-    the file split count is the real width."""
-    return max(
-        int(spark.conf.get("spark.sql.shuffle.partitions")),
-        spark.sparkContext.defaultParallelism,
-        1,
-    )
-
-
 def take_ordered(
     df: DataFrame,
     order_by: Sequence,
     n: int,
     rank_col: str | None = None,
-    n_blocks: int | None = None,
-    merge_rows_budget: int = 134_217_728,
-    plan_width: int | None = None,
 ) -> DataFrame:
     """Top-``n`` selection under ``order_by`` that never plans a
     single-task global sort OR an unbounded single-point merge, whatever
@@ -255,46 +175,36 @@ def take_ordered(
     ``partitions × n`` rows at a single point, which is its own scale
     trap for large ``n``: top-10M over 1,000 partitions is a 10-billion-row
     single-point merge the planner does nothing about. This helper is the
-    engine-wide chokepoint for top-n selection and guards BOTH cliffs.
-    The boundary is PARTITION-AWARE: the fast path is taken iff ``n``
-    is below the configured threshold AND ``n × input partitions ≤
-    merge_rows_budget``, where the partition count comes from a pricing
-    ladder (see the inline comment): a caller-supplied ``plan_width``
-    (use :func:`post_shuffle_width` when the input's root lineage
-    passes a shuffle), a compile-free small-n/huge-n shortcut, and only
-    in the genuinely borderline band a driver-side plan compile
-    (floored by defaultParallelism — a wide parquet scan's map side,
-    not the core count, is what feeds the merge).
+    engine-wide chokepoint for top-n selection and guards BOTH cliffs:
+    the fast path is taken iff ``n`` is below the configured threshold
+    AND ``n × post_shuffle_width ≤ MERGE_ROWS_BUDGET``. The width is the
+    session's shuffle width (:func:`post_shuffle_width`), the same number
+    that bounds any post-shuffle input — no plan is compiled or probed.
+    Every caller in the package passes a frame that has already been
+    shuffled (an aggregate or a shuffle join) or asks for n ≤ 128, where
+    n × 2^20 partitions still fits the budget, so the conf width prices
+    every merge it can meet.
     The budget prices a real TRADE, not a free lunch: the fast path's
     worst case is ONE task heap-merging ``partitions × n`` pre-truncated
     rows (O(R log n), ~10M rows/s), while the blocked path shuffles and
     materializes the ENTIRE input — far more total work, but
-    distributed. The default 128Mi-row budget sits near the indifference
-    point (a low-minutes single merge task): top-100 over an
-    800K-partition 100 TB scan merges 80M rows in one ~10s task and
-    correctly stays fast (re-routing it through a 100 TB shuffle would
-    be absurd), while top-10M over 1,000 partitions busts the budget and
-    correctly goes blocked. Past the boundary:
+    distributed. The 128Mi-row budget sits near the indifference point
+    (a low-minutes single merge task). Past the boundary:
     :func:`blocked_row_number` + a rank filter — fully distributed,
     identical row set whenever ``order_by`` is a total order (include a
-    unique tiebreak key, as every caller here does). Lower the budget if
-    single-task minutes are unacceptable; raise it for wide scans with
-    modest n.
+    unique tiebreak key, as every caller here does).
 
     ``rank_col``: optionally annotate the 1-based selection rank —
     LongType on BOTH branches, so the output schema is stable across
     ``n`` (on the fast path it is minted by a row_number window over the
     ALREADY n-bounded result; on the blocked path it IS the blocked
     global rank, which must be long anyway past 2^31 selected rows).
-    ``n_blocks=None`` derives the blocked path's block count from the
-    input width (see :func:`derived_block_count`) — the already-priced
-    merge width is reused, so the plan compiles once.
 
     Two contract notes. (1) BOUNDED-PLAN CARVE-OUT: when the child's
     statically-known ``maxRows`` is ≤ ``n`` (e.g. ``spark.range``, local
     relations — never a parquet scan), Catalyst's EliminateLimits drops
     the fast path's Limit and plans a plain global Sort of the whole
-    input; that input is ≤ n ≤ budget/partitions rows by the very check
+    input; that input is ≤ n ≤ budget/width rows by the very check
     that chose the fast path, so the single-task sort is bounded and
     harmless — but the plan will NOT show TakeOrderedAndProject. (2)
     ORDERING: the fast path happens to return physically ordered output;
@@ -308,40 +218,7 @@ def take_ordered(
     thr = int(
         spark.conf.get("spark.sql.execution.topKSortFallbackThreshold")
     )
-    # the merge width is the INPUT's partition count (each map partition
-    # contributes a top-n prefix): a wide parquet scan exceeds
-    # defaultParallelism by orders of magnitude. Reading the width off
-    # the compiled plan is exact but NOT free — a driver-side plan
-    # compile, measured at 1–2.4s per call on deep plans — so price
-    # through a ladder that compiles only when the answer depends on it:
-    #   1. caller-supplied ``plan_width`` (post_shuffle_width for
-    #      post-shuffle lineages) — trusted, no compile;
-    #   2. n × PLAN_WIDTH_CAP ≤ budget — safe at ANY in-design width
-    #      (≤ 2^20 partitions ≈ 128 TB of 128 MB splits; a wider scan
-    #      degrades to a proportionally longer single merge task, never
-    #      an unbounded plan) — no compile;
-    #   3. n × defaultParallelism > budget — busts the budget at the
-    #      FLOOR width, no plan can rescue it — no compile;
-    #   4. otherwise the decision is genuinely borderline: compile the
-    #      plan and read its real width (fall back to the floor if the
-    #      RDD conversion fails).
-    floor_width = max(spark.sparkContext.defaultParallelism, 1)
-    est_partitions = None
-    if plan_width is not None:
-        est_partitions = max(plan_width, floor_width)
-        fast = n * est_partitions <= merge_rows_budget
-    elif n * PLAN_WIDTH_CAP <= merge_rows_budget:
-        fast = True
-    elif n * floor_width > merge_rows_budget:
-        fast = False
-    else:
-        try:
-            est_partitions = max(1, df.rdd.getNumPartitions())
-        except Exception:  # noqa: BLE001 (unconvertible plan — estimate)
-            est_partitions = 1
-        est_partitions = max(est_partitions, floor_width)
-        fast = n * est_partitions <= merge_rows_budget
-    if n < thr and fast:
+    if n < thr and n * post_shuffle_width(spark) <= MERGE_ROWS_BUDGET:
         out = df.orderBy(*order_by).limit(n)
         if rank_col is not None:
             out = out.withColumn(
@@ -349,14 +226,7 @@ def take_ordered(
                 F.row_number().over(Window.orderBy(*order_by)).cast("long"),
             )
         return out
-    # reuse the merge pricing's width when it was read (est_partitions is
-    # max(width, defaultParallelism) = derived_block_count); when the
-    # ladder skipped the compile, let blocked_row_number derive it —
-    # the blocked path executes the whole subtree anyway, so one plan
-    # compile is amortized there
-    if n_blocks is None and est_partitions is not None:
-        n_blocks = max(32, est_partitions)
-    ranked = blocked_row_number(df, order_by, "_tko_rn", n_blocks).filter(
+    ranked = blocked_row_number(df, order_by, "_tko_rn").filter(
         F.col("_tko_rn") <= n
     )
     if rank_col is not None:
@@ -369,8 +239,6 @@ def blocked_ntile(
     order_by: Sequence,
     n_tiles: int,
     out_col: str = "tile",
-    n_blocks: int | None = None,
-    plan_width: int | None = None,
 ) -> DataFrame:
     """Exact SQL NTILE(n) over ``order_by`` without the single-task global
     sort: NTILE is pure integer arithmetic on the global row number — with
@@ -381,7 +249,7 @@ def blocked_ntile(
     deterministic, same as the window form). The q = 0 branch (fewer rows
     than tiles: tile = rank) stays inside the IF's untaken arm, so ANSI
     mode never sees the div-by-zero."""
-    ranked = blocked_row_number(df, order_by, "_bnt_rn", n_blocks, plan_width)
+    ranked = blocked_row_number(df, order_by, "_bnt_rn")
     tot = F.broadcast(ranked.agg(F.count(F.lit(1)).alias("_bnt_n")))
     tile = F.expr(
         f"CAST(IF(_bnt_rn <= (_bnt_n % {n_tiles})"

@@ -5755,14 +5755,8 @@ def customer_rfm_segments_q(spark, sf_dir):
         ("n_orders", "f_tier"),
         ("total_spend", "m_tier"),
     ):
-        # the tier table's root lineage passes the per-customer
-        # aggregation exchange — width is conf-bounded, no plan compile
         tiers = win.blocked_ntile(
-            tiers,
-            [F.col(metric).desc(), F.col("o_custkey")],
-            4,
-            col,
-            plan_width=win.post_shuffle_width(spark),
+            tiers, [F.col(metric).desc(), F.col("o_custkey")], 4, col
         )
     return tiers.select(
         "o_custkey",

@@ -26,6 +26,20 @@ def test_dedup_clusters_deep_chain_converges(spark):
     assert set(out.values()) == {0}
 
 
+def test_dedup_clusters_raises_when_not_converged(spark, monkeypatch):
+    """Labels that have not reached their fixpoint are wrong components
+    (one round on an 8-node chain leaves it split), so running out of
+    rounds raises instead of returning them."""
+    import pytest
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(7)], ["id_a", "id_b"]
+    )
+    monkeypatch.setattr(dd, "CC_MAX_ROUNDS", 1)
+    with pytest.raises(RuntimeError, match="not converged"):
+        dd.dedup_clusters(pairs)
+
+
 def test_near_dup_survivors_greedy(spark):
     docs = spark.createDataFrame([(i, f"d{i}") for i in range(5)], ["doc_id", "x"])
     pairs = spark.createDataFrame([(0, 3), (1, 4)], ["id_a", "id_b"])
@@ -49,7 +63,7 @@ def test_arrow_ann_matches_column_algebra(spark, tables):
 
 def test_dedup_clusters_long_chain_needs_pointer_doubling(spark):
     # path graph of 60 nodes: plain one-hop min-label propagation needs 59
-    # rounds (> max_iter=20); the pointer-doubling step collapses it in
+    # rounds (> CC_MAX_ROUNDS=20); the pointer-doubling step collapses it in
     # O(log n) rounds. Regression guard for the doubling.
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(59)], ["id_a", "id_b"]

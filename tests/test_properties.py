@@ -604,7 +604,11 @@ def test_progressive_jpeg_equals_baseline_any_shape(h, w, amp):
 def test_blocked_rank_and_ntile_match_windows(spark, rows, n_blocks, n_tiles):
     """blocked_row_number / blocked_ntile equal the single-window forms on
     ARBITRARY inputs — ties, NULLs, empty, any block count (the property
-    the five round-7 rank rewrites rely on for byte-identical oracles)."""
+    the five round-7 rank rewrites rely on for byte-identical oracles).
+    The block count is the session's shuffle width, patched per example
+    (hypothesis rejects function-scoped fixtures such as monkeypatch)."""
+    from unittest import mock
+
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
@@ -615,29 +619,30 @@ def test_blocked_rank_and_ntile_match_windows(spark, rows, n_blocks, n_tiles):
             "k", F.row_number().over(W.orderBy("v", "k")).alias("r")
         ).collect()
     }
-    got = {
-        (r.k, r.r)
-        for r in windows.blocked_row_number(
-            df, ["v", "k"], rank_col="r", n_blocks=n_blocks
-        )
-        .select("k", "r")
-        .collect()
-    }
-    assert got == exp
     exp_t = {
         (r.k, r.t)
         for r in df.select(
             "k", F.ntile(n_tiles).over(W.orderBy("v", "k")).alias("t")
         ).collect()
     }
-    got_t = {
-        (r.k, r.t)
-        for r in windows.blocked_ntile(
-            df, ["v", "k"], n_tiles, out_col="t", n_blocks=n_blocks
-        )
-        .select("k", "t")
-        .collect()
-    }
+    with mock.patch.object(
+        windows, "post_shuffle_width", lambda session: n_blocks
+    ):
+        got = {
+            (r.k, r.r)
+            for r in windows.blocked_row_number(df, ["v", "k"], rank_col="r")
+            .select("k", "r")
+            .collect()
+        }
+        got_t = {
+            (r.k, r.t)
+            for r in windows.blocked_ntile(
+                df, ["v", "k"], n_tiles, out_col="t"
+            )
+            .select("k", "t")
+            .collect()
+        }
+    assert got == exp
     assert got_t == exp_t
 
 

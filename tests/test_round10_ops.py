@@ -64,7 +64,7 @@ def test_pack_sql_twins_raise_on_null_tokens():
     assert len(clean) == 3
 
 
-# --- blocked-rank width derivation: compile-tax closure ------------------------
+# --- blocked-rank width: no plan compile, no hidden job ----------------------
 
 
 def _classic_df_class():
@@ -80,25 +80,28 @@ def _classic_df_class():
 
 
 def _counting_rdd_property(cls):
-    """Wrap cls.rdd in a counter so tests can assert how many
-    driver-side plan compiles a code path pays."""
-    original = cls.rdd
+    """Wrap cls.rdd in a counter so tests can assert how many plan
+    compiles a code path pays. The classic ``rdd`` is a
+    functools.cached_property (no ``fget``), so the getter delegates
+    through the descriptor protocol — the wrapped access really
+    converts."""
+    original = cls.__dict__["rdd"]
     counter = {"n": 0}
 
     def getter(self):
         counter["n"] += 1
-        return original.fget(self)
+        return original.__get__(self, type(self))
 
     return property(getter), original, counter
 
 
 def test_blocked_rank_with_hint_never_converts_to_rdd(spark):
-    """A consumer that passes plan_width (or n_blocks) must not pay the
-    driver-side df.rdd plan compile — the ~1s stall take_ordered shed in
-    round 9 must stay gone for every hinted call path."""
+    """No rank-family call pays a df.rdd plan compile: the
+    block count and the merge width are the session's shuffle width,
+    read from the conf."""
     from data_pipelines_cu_spark.operators.windows import (
+        blocked_ntile,
         blocked_row_number,
-        post_shuffle_width,
         take_ordered,
     )
 
@@ -107,38 +110,86 @@ def test_blocked_rank_with_hint_never_converts_to_rdd(spark):
     prop, original, counter = _counting_rdd_property(_DF)
     _DF.rdd = prop
     try:
-        blocked_row_number(
-            df, ["v", "id"], "_r", plan_width=post_shuffle_width(spark)
-        ).count()
-        blocked_row_number(df, ["v", "id"], "_r", n_blocks=8).count()
-        take_ordered(df, ["v", "id"], 5, plan_width=8).count()
+        blocked_row_number(df, ["v", "id"], "_r").count()
+        blocked_ntile(df, ["v", "id"], 4).count()
+        take_ordered(df, ["v", "id"], 5).count()
     finally:
         _DF.rdd = original
     assert counter["n"] == 0, f"{counter['n']} hidden plan compiles"
 
 
-def test_derived_block_count_memoizes_per_plan(spark):
-    """Hint-less derivation compiles ONCE per analyzed plan per session:
-    the second rank over the same frame (chained ntiles, windowed
-    monitors) must hit the semantic-hash memo, not df.rdd again."""
+def test_rank_family_plan_build_runs_no_spark_job(spark, monkeypatch):
+    """Building a rank or top-n plan over an already-shuffled frame (a
+    groupBy result) runs no Spark job and never touches df.rdd — under
+    AQE, df.rdd on such a frame runs its shuffle stage. Jobs are counted
+    over the whole application, not one job group, so no job escapes
+    the count; the blocked rank's own eager lineage cut is the only work
+    allowed, and its jobs are subtracted. Covers take_ordered n=300 on
+    both branches."""
+    from pyspark.sql import functions as F
+
     from data_pipelines_cu_spark.operators import windows as win
 
+    sc = spark.sparkContext
+
+    def app_jobs():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return sc._jsc.sc().statusStore().jobsList(None).size()
+
+    cut_jobs = [0]
+    real_cut = win.lineage_cut
+
+    def counted_cut(df, *args, **kwargs):
+        before = app_jobs()
+        try:
+            return real_cut(df, *args, **kwargs)
+        finally:
+            cut_jobs[0] += app_jobs() - before
+
+    monkeypatch.setattr(win, "lineage_cut", counted_cut)
+
+    def shuffled():
+        # a fresh frame per build: a frame's AQE stages run at most once
+        return (
+            spark.range(0, 20_000)
+            .groupBy((F.col("id") % 997).alias("g"))
+            .agg(F.count(F.lit(1)).alias("c"), F.sum("id").alias("s"))
+        )
+
+    order = [F.col("s").desc(), F.col("g")]
+
+    def blocked_top():
+        monkeypatch.setattr(win, "MERGE_ROWS_BUDGET", 0)
+        return win.take_ordered(shuffled(), order, 300, rank_col="rk")
+
     _DF = _classic_df_class()
-    df = spark.range(0, 512).selectExpr("id", "id % 5 AS v")
-    win._WIDTH_CACHE.clear()
     prop, original, counter = _counting_rdd_property(_DF)
+    plans = {}
     _DF.rdd = prop
     try:
-        first = win.derived_block_count(df)
-        second = win.derived_block_count(df)
-        # a semantically identical rebuild of the plan also hits the memo
-        third = win.derived_block_count(
-            spark.range(0, 512).selectExpr("id", "id % 5 AS v")
-        )
+        for name, build_plan in [
+            ("blocked_row_number",
+             lambda: win.blocked_row_number(shuffled(), order)),
+            ("blocked_ntile", lambda: win.blocked_ntile(shuffled(), order, 4)),
+            ("take_ordered fast",
+             lambda: win.take_ordered(shuffled(), order, 300, rank_col="rk")),
+            ("take_ordered blocked", blocked_top),
+        ]:
+            cut_jobs[0] = 0
+            before = app_jobs()
+            plans[name] = build_plan()
+            assert app_jobs() - before - cut_jobs[0] == 0, name
     finally:
         _DF.rdd = original
-    assert first == second == third
-    assert counter["n"] == 1, f"expected 1 compile, saw {counter['n']}"
+    assert counter["n"] == 0, f"{counter['n']} df.rdd accesses"
+
+    def executed(name):
+        return plans[name]._jdf.queryExecution().executedPlan().toString()
+
+    assert "TakeOrderedAndProject" in executed("take_ordered fast")
+    assert "TakeOrderedAndProject" not in executed("take_ordered blocked")
+    assert plans["take_ordered fast"].count() == 300
+    assert plans["take_ordered blocked"].count() == 300
 
 
 # --- degenerate probes for the round-9 surfaces --------------------------------
@@ -604,14 +655,15 @@ def test_streaming_pack_manifest_recovers_from_checkpoint(spark, tmp_path):
 # --- take_ordered ordering contract ---------------------------------------------
 
 
-def test_take_ordered_rank_col_reorders_to_orderby_limit(spark):
+def test_take_ordered_rank_col_reorders_to_orderby_limit(spark, monkeypatch):
     """Consumer-side closure of the r8 ordering note: take_ordered's
     blocked path returns the selection UNORDERED — the contract is the
     row set plus rank_col — so a caller that sorts by rank_col must get
     byte-identical output to the old orderBy().limit() path, on BOTH
-    branches of the pricing ladder."""
+    branches."""
     from pyspark.sql import functions as F
 
+    from data_pipelines_cu_spark.operators import windows as win
     from data_pipelines_cu_spark.operators.windows import take_ordered
 
     df = spark.range(0, 5000).selectExpr(
@@ -629,9 +681,9 @@ def test_take_ordered_rank_col_reorders_to_orderby_limit(spark):
     ]
     assert got_fast == expected
     # blocked path (1-row budget forces it), same consumer recipe
-    blocked = take_ordered(
-        df, order, 40, rank_col="rk", merge_rows_budget=1, n_blocks=8
-    )
+    monkeypatch.setattr(win, "MERGE_ROWS_BUDGET", 1)
+    monkeypatch.setattr(win, "post_shuffle_width", lambda session: 8)
+    blocked = take_ordered(df, order, 40, rank_col="rk")
     got_blocked = [
         (r.id, r.v) for r in blocked.orderBy("rk").collect()
     ]

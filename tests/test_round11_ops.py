@@ -2,8 +2,7 @@
 order, corrupt/missing degrade), the TV-drift single-scan fix, degenerate
 probes for the streaming manifest monitor (zero-landed-batches read,
 all-empty-batch stream, double-land replay idempotency, single-action
-foreachBatch), the width-cache session token, and the pack_stateful
-token_col error naming."""
+foreachBatch), and the pack_stateful token_col error naming."""
 
 from __future__ import annotations
 
@@ -931,28 +930,6 @@ def test_streaming_tv_drift_matches_batch(spark, tmp_path):
     empty = tv_drift_from_batches(spark, str(tmp_path / "never"))
     assert empty.count() == 0
     assert empty.columns == ["source", "n_tokens", "tv_vs_corpus"]
-
-
-# --- width-cache session token (ADVICE r10) ----------------------------------
-
-
-def test_width_cache_keys_on_application_id_not_object_id(spark):
-    """id(sparkSession) can be REUSED by CPython after the session is
-    garbage-collected, letting a fresh session silently read a dead
-    session's cached plan widths; the cache must key on the stable
-    (applicationId, startTime) token instead."""
-    from data_pipelines_cu_spark.operators import windows as W
-
-    df = spark.range(0, 1000)
-    W._WIDTH_CACHE.clear()
-    W.derived_block_count(df)
-    assert len(W._WIDTH_CACHE) == 1
-    (session_token, _semhash), = W._WIDTH_CACHE.keys()
-    sc = spark.sparkContext
-    assert session_token == (sc.applicationId, sc.startTime)
-    # memo hit: same frame derives from the cache, no new entry
-    W.derived_block_count(spark.range(0, 1000))
-    assert len(W._WIDTH_CACHE) == 1
 
 
 # --- pack_stateful error naming (ADVICE r10) ---------------------------------

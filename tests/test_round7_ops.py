@@ -46,13 +46,16 @@ def test_blocked_row_number_all_equal_values(spark):
     assert _ranks(got) == [(i, i + 1) for i in range(500)]
 
 
-def test_blocked_row_number_single_block_and_empty(spark):
-    """n_blocks=1 degenerates to the plain global rank; empty input stays
+def test_blocked_row_number_single_block_and_empty(spark, monkeypatch):
+    """One block degenerates to the plain global rank; empty input stays
     empty (no ANSI error from the prefix-window coalesce)."""
+    from data_pipelines_cu_spark.operators import windows
+
     df = spark.createDataFrame(
         [(3, 9.0), (1, 9.0), (2, 0.5)], "k long, v double"
     )
-    got = blocked_row_number(df, ["v", "k"], rank_col="r", n_blocks=1)
+    monkeypatch.setattr(windows, "post_shuffle_width", lambda session: 1)
+    got = blocked_row_number(df, ["v", "k"], rank_col="r")
     assert _ranks(got.select("k", "r")) == [(1, 2), (2, 1), (3, 3)]
     empty = df.filter(F.lit(False))
     assert blocked_row_number(empty, ["v", "k"]).count() == 0

@@ -1,8 +1,7 @@
-"""Round-9 regression tests: input-width-derived block counts for the
-blocked-rank family (the fixed n_blocks=32 parallelism ceiling is gone),
-take_ordered's compile-free pricing ladder + boundary probes (AT the
-threshold, AT the merge budget, n >= row count on the blocked path, the
-EliminateLimits bounded-plan carve-out), spark.graft.reliableCuts
+"""Round-9 regression tests: the blocked-rank family's block count (the
+session's shuffle width), take_ordered's probe-free width + boundary
+probes (AT the threshold, AT the merge budget, n >= row count on the
+blocked path, the EliminateLimits bounded-plan carve-out), spark.graft.reliableCuts
 reaching the blocked-rank consumers, the now-LAZY interval-join lane
 gate (no job at plan-build time), AVI stream ids past 99 (hex spelling)
 and past 0xFF (explicit reject), and frame sampling with every_n above
@@ -21,11 +20,10 @@ from pyspark.sql import functions as F
 from data_pipelines_cu_spark.operators import aggregates as ag
 from data_pipelines_cu_spark.operators import joins as jn
 from data_pipelines_cu_spark.operators import text as tx
+from data_pipelines_cu_spark.operators import windows as win
 from data_pipelines_cu_spark.operators.materialize import RELIABLE_CUTS_CONF
 from data_pipelines_cu_spark.operators.windows import (
     blocked_row_number,
-    derived_block_count,
-    post_shuffle_width,
     take_ordered,
 )
 from tests import media_encoders as enc
@@ -39,76 +37,62 @@ def _ids(df, col="id"):
     return sorted(r[col] for r in df.collect())
 
 
-# --- derived block count ------------------------------------------------------
-
-
-def test_derived_block_count_scales_with_input(spark):
-    """n_blocks follows the input plan's width (floored at 32 and at
-    defaultParallelism): a wider input gets more blocks, so per-block
-    local-sort tasks stay input-partition-sized at any scale instead of
-    corpus/32."""
-    dp = spark.sparkContext.defaultParallelism
-    narrow = spark.range(1000, numPartitions=2)
-    wide = spark.range(1000).repartition(64)
-    assert derived_block_count(narrow) == max(32, dp)
-    assert derived_block_count(wide) == max(32, 64, dp)
+# --- block count ---------------------------------------------------------------
 
 
 def test_blocked_rank_uses_derived_width_and_stays_exact(spark, monkeypatch):
-    """Default (n_blocks=None) routes through derived_block_count (the
-    input's own width — 64 here, not the old fixed 32; the lineage cut
-    hides the exchange from the final plan, so the wiring is observed
-    directly) — and ranks are invariant to the block count under a
-    total order, so the window-function oracle stays byte-identical."""
-    import data_pipelines_cu_spark.operators.windows as win
-
+    """The block count is the session's shuffle width
+    (post_shuffle_width, read once per rank): the rank exchange runs at
+    that width — 64 here — and ranks are invariant to the block count
+    under a total order, so the window-function oracle stays
+    byte-identical."""
     df = (
         spark.range(2000)
         .select("id", (F.col("id") % 131).alias("v"))
         .repartition(64)
     )
-    derived = []
-    real = win.derived_block_count
+    widths = []
 
-    def recording(frame, floor=32):
-        derived.append(real(frame, floor))
-        return derived[-1]
+    def recording(session):
+        widths.append(64)
+        return 64
 
-    monkeypatch.setattr(win, "derived_block_count", recording)
+    monkeypatch.setattr(win, "post_shuffle_width", recording)
     got = blocked_row_number(df, ["v", "id"], "r")
-    assert derived == [max(32, 64, spark.sparkContext.defaultParallelism)]
+    assert widths == [64]
+    assert got.rdd.getNumPartitions() == 64
     exp = df.withColumn("e", F.row_number().over(W.orderBy("v", "id")))
     assert (
         got.join(exp.select("id", "e"), "id").filter("r <> e").count() == 0
     )
 
 
-# --- take_ordered pricing ladder ---------------------------------------------
+# --- take_ordered width ------------------------------------------------------
 
 
 def test_take_ordered_skips_plan_compile_outside_borderline_band(
     spark, monkeypatch
 ):
-    """The driver-side plan compile (measured 1-2.4s on deep plans) runs
-    ONLY in the genuinely borderline band: small n and plan_width-hinted
-    calls never touch df.rdd."""
+    """take_ordered never converts its input to an RDD to price the
+    merge (a plan compile, and under AQE a hidden job): the
+    width is the session's shuffle width on every n and both
+    branches."""
     df = spark.range(4000).select("id", (F.col("id") % 7).alias("v"))
     cls = type(df)  # the concrete (classic) DataFrame, not the base
     compiles = []
-    orig = cls.rdd
+    orig = cls.__dict__["rdd"]  # a functools.cached_property
 
     def counting(self):
         compiles.append(1)
-        return orig.fget(self)
+        return orig.__get__(self, cls)
 
     monkeypatch.setattr(cls, "rdd", property(counting))
     order = [F.col("v").desc(), F.col("id")]
-    take_ordered(df, order, 50)  # n*2^20 <= budget — compile-free
+    take_ordered(df, order, 50)
+    take_ordered(df, order, 300)
+    monkeypatch.setattr(win, "MERGE_ROWS_BUDGET", 0)
+    take_ordered(df, order, 300)  # blocked branch
     assert not compiles
-    take_ordered(df, order, 300, plan_width=post_shuffle_width(spark))
-    assert not compiles  # hinted — compile-free
-    take_ordered(df, order, 300)  # borderline band — must price the plan
-    assert compiles
 
 
 def test_take_ordered_at_threshold_boundary(spark):
@@ -135,35 +119,37 @@ def test_take_ordered_at_threshold_boundary(spark):
         spark.conf.set(key, old)
 
 
-def test_take_ordered_at_merge_budget_boundary(spark):
-    """n × partitions == budget takes the fast path (<=); one less
-    budget goes blocked — and the blocked path over 64+ derived blocks
-    with only 400 rows (many EMPTY blocks) still ranks exactly.
-    Expectations derive from defaultParallelism so an inherited
-    SPARK_GRAFT_CPUS doesn't skew the priced width."""
+def test_take_ordered_at_merge_budget_boundary(spark, monkeypatch):
+    """n × width == budget takes the fast path (<=); one less budget
+    goes blocked — and the blocked path over 64 blocks with only 400
+    rows (many EMPTY blocks) still ranks exactly."""
     df = (
         spark.createDataFrame([(i, i % 13) for i in range(400)], "id long, v long")
         .repartition(64)
     )
-    width = max(64, spark.sparkContext.defaultParallelism)
+    width = 64
+    monkeypatch.setattr(win, "post_shuffle_width", lambda session: width)
     order = [F.col("v").desc(), F.col("id")]
     exp = _ids(df.orderBy(*order).limit(10))
-    fast = take_ordered(df, order, 10, merge_rows_budget=10 * width)
+    monkeypatch.setattr(win, "MERGE_ROWS_BUDGET", 10 * width)
+    fast = take_ordered(df, order, 10)
     assert "TakeOrderedAndProject" in _plan(fast)
     assert _ids(fast) == exp
-    blocked = take_ordered(df, order, 10, merge_rows_budget=10 * width - 1)
+    monkeypatch.setattr(win, "MERGE_ROWS_BUDGET", 10 * width - 1)
+    blocked = take_ordered(df, order, 10)
     assert "TakeOrderedAndProject" not in _plan(blocked)
     assert _ids(blocked) == exp
 
 
-def test_take_ordered_n_past_row_count_on_blocked_path(spark):
+def test_take_ordered_n_past_row_count_on_blocked_path(spark, monkeypatch):
     """n >= the row count on the blocked path returns the WHOLE input
     with exact ranks 1..N (the rank filter keeps everything)."""
     df = spark.createDataFrame(
         [(i, (i * 7) % 50) for i in range(50)], "id long, v long"
     )
     order = [F.col("v").desc(), F.col("id")]
-    got = take_ordered(df, order, 100, rank_col="rk", merge_rows_budget=1)
+    monkeypatch.setattr(win, "MERGE_ROWS_BUDGET", 1)
+    got = take_ordered(df, order, 100, rank_col="rk")
     rows = {r.id: r.rk for r in got.collect()}
     assert len(rows) == 50
     exp = {

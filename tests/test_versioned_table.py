@@ -98,6 +98,22 @@ def test_commit_batch_exactly_once_and_replay_noop(spark, tmp_path):
     assert vt.current_version(path) == 3
 
 
+def test_corrupt_manifest_raises_instead_of_reading_empty(spark, tmp_path):
+    """A manifest that does not parse must not read as an empty table:
+    the next commit would re-commit a ledgered batch and publish a
+    manifest without the batch ledger or the time-travel history."""
+    path = str(tmp_path / "t")
+    vt.commit_batch(_df(spark, ["b0"]), path, batch_id=0)
+    manifest = os.path.join(path, "_manifest.json")
+    with open(manifest, "w") as f:
+        f.write('{"version": 1, "hist')
+    with pytest.raises(ValueError, match="_manifest.json"):
+        vt.commit_batch(_df(spark, ["b0-replayed"]), path, batch_id=0)
+    with pytest.raises(ValueError, match="_manifest.json"):
+        vt.read_table(spark, path)
+    assert vt.table_versions(path) == [1]  # no second version landed
+
+
 def test_streaming_into_versioned_table_end_to_end(spark, tmp_path):
     """Two micro-batches stream into the table as two committed versions;
     the latest snapshot holds the last batch and time travel reaches the
